@@ -33,6 +33,14 @@ Iceberg commit design re-expressed over plain parquet + JSON:
   ``vacuum_snapshot`` drops expired manifests and unreferenced data
   files (including orphans from crashed writes).
 
+Every retried commit runs through one loop, ``_commit_loop``: txn
+fence (an already-applied ``(app_id, version)`` returns at once) →
+read the base version → ``build(base, manifest)`` stages files and
+returns the new manifest (always via ``_manifest``) → CAS ``_commit``
+against the base → on ``SnapshotConflict`` recompute from the new base,
+up to ``retries`` times. Staged files of a lost attempt are orphans
+that vacuum reclaims.
+
 Scale notes (the 100 TB story): a manifest holds one small dict per
 data file — O(file count), not O(rows) — and commit cost is O(1)
 regardless of table size, vs the swap protocol's O(touched
@@ -229,6 +237,56 @@ def _commit(root: str, manifest: dict, expected_parent: int | None) -> int:
     return version
 
 
+def _manifest(
+    base: dict, op: str, files: list[dict], txn: tuple[str, int] | None = None,
+    **fields,
+) -> dict:
+    """The one manifest shape: ``key``, ``stat_cols`` and ``schema``
+    inherit from ``base`` unless ``fields`` override them, ``rows`` is
+    summed from ``files``, and ``txn`` becomes this commit's ``txns``
+    entry (``_commit`` overlays it on the parent's watermarks)."""
+    m = {
+        "op": op,
+        "key": base.get("key") or [],
+        "stat_cols": base.get("stat_cols", []),
+        "schema": base.get("schema"),
+        **fields,
+        "files": files,
+        "rows": sum(f["rows"] for f in files),
+    }
+    if txn is not None:
+        m["txns"] = {txn[0]: txn[1]}
+    return m
+
+
+def _carry_forward(base: dict, op: str, txn: tuple[str, int] | None = None, **fields) -> dict:
+    """A commit that changes no rows: every file carries by reference
+    and only the watermark (and ``op``) moves. Records an empty change
+    set on CDF tables, so a feed across it skips the commit."""
+    if base.get("cdf_enabled", True):
+        fields.setdefault("cdf", {"mode": "files", "files": []})
+    return _manifest(base, op, base["files"], txn=txn, **fields)
+
+
+def _commit_loop(root: str, build, txn: tuple[str, int] | None = None, retries: int = 2) -> int:
+    """The commit protocol, once: txn fence → base version → ``build(base,
+    base_manifest)`` (``{}`` when the table does not exist) → CAS
+    ``_commit`` against the base → on ``SnapshotConflict`` recompute
+    from the new base, raising after ``retries`` retries. ``build`` may
+    raise to abort; a lost attempt's staged files are vacuum orphans."""
+    for attempt in range(retries + 1):
+        if _txn_already_applied(root, txn):
+            return current_version(root)
+        base = current_version(root)
+        manifest = build(base, _load_manifest(root, base) if base else {})
+        try:
+            return _commit(root, manifest, base)
+        except SnapshotConflict:
+            if attempt == retries:
+                raise
+    raise AssertionError("unreachable")
+
+
 # ---------------------------------------------------------------------------
 # data-file staging + footer stats
 # ---------------------------------------------------------------------------
@@ -367,10 +425,14 @@ def _stage_files(
     stat_cols: Sequence[str],
     sort_by: Sequence[str] = (),
     target_files: int | None = None,
+    prefix: str = "",
 ) -> list[dict]:
-    """Write ``df`` as new immutable files under ``data/`` and return
-    their manifest entries. Files are INVISIBLE until a manifest
-    references them — a crash here leaves only orphans for vacuum.
+    """Write ``df`` as new immutable files ``data/<prefix><token>-*``
+    and return their manifest entries. Files are INVISIBLE until a
+    manifest references them — a crash here leaves only orphans for
+    vacuum. Change files stage here too (``prefix="cdf-"``, no stat
+    columns), referenced from the manifest's ``cdf`` block, which table
+    readers never scan.
 
     ``sort_by`` range-partitions + sorts so file key-ranges come out
     disjoint — what makes stat pruning effective (a key-sorted table
@@ -385,7 +447,7 @@ def _stage_files(
             # boundaries it won't use — an extra evaluation of the
             # merge per stage write. A plain 1-partition shuffle +
             # in-partition sort writes the identical sorted file with
-            # one evaluation (r17; point merges hit this constantly).
+            # one evaluation (point merges hit this constantly).
             df = df.repartition(1).sortWithinPartitions(*sort_by)
         elif target_files:
             df = df.repartitionByRange(
@@ -406,7 +468,7 @@ def _stage_files(
             # bare repartitionByRange falls back to
             # spark.sql.shuffle.partitions and silently reproduces the
             # degenerate bootstrap granularity, so assert the session
-            # conf here like the UTC guard (ADVICE r15, low)
+            # conf here like the UTC guard
             sess = df.sparkSession
             aqe_on = all(
                 sess.conf.get(c, "true").lower() == "true"
@@ -432,12 +494,11 @@ def _stage_files(
     # (verified: the option is ignored, files stay INT96), so this must
     # be a session-conf bracket — refcounted so two concurrent stage
     # writers in one session can't interleave set/restore and silently
-    # stage INT96 (ADVICE r13, low): the conf stays MICROS while ANY
-    # stage write is in flight; the last one out restores.
+    # stage INT96: the conf stays MICROS while ANY stage write is in
+    # flight; the last one out restores.
     with _micros_timestamps(df.sparkSession):
         df.write.mode("overwrite").parquet(stage)
-    data_dir = os.path.join(root, "data")
-    os.makedirs(data_dir, exist_ok=True)
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
     entries = []
     try:
         parts = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
@@ -446,38 +507,9 @@ def _stage_files(
             rows, stats = _footer_stats(src, stat_cols)
             if rows == 0:
                 continue  # Spark writes empty parts for empty partitions
-            rel = os.path.join("data", f"{token}-{i:05d}.parquet")
+            rel = os.path.join("data", f"{prefix}{token}-{i:05d}.parquet")
             os.rename(src, os.path.join(root, rel))
             entries.append({"path": rel, "rows": rows, "stats": stats})
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return entries
-
-
-def _stage_cdf(changes: DataFrame, root: str) -> list[dict]:
-    """Stage a commit's change rows (data columns + ``_change_type``)
-    as immutable ``data/cdf-*`` files and return manifest entries.
-    Change files are referenced from the manifest's ``cdf`` block, so
-    vacuum retains them exactly as long as their version; readers of
-    the TABLE never see them (only ``files`` entries are scanned)."""
-    token = secrets.token_hex(8)
-    stage = os.path.join(root, f".stage-{token}")
-    changes.write.mode("overwrite").parquet(stage)
-    data_dir = os.path.join(root, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    entries = []
-    try:
-        import pyarrow.parquet as pq
-
-        parts = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        for i, part in enumerate(parts):
-            src = os.path.join(stage, part)
-            rows = pq.ParquetFile(src).metadata.num_rows
-            if rows == 0:
-                continue
-            rel = os.path.join("data", f"cdf-{token}-{i:05d}.parquet")
-            os.rename(src, os.path.join(root, rel))
-            entries.append({"path": rel, "rows": rows})
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     return entries
@@ -567,50 +599,46 @@ def write_snapshot(
     Off, merges skip the sidecar and the feed falls back to the
     endpoint-diff (O(changed files) read at CDF time). The property
     INHERITS across commits — an overwrite with ``cdf`` unset keeps
-    the parent manifest's setting (ADVICE r15, low: a plain overwrite
-    on a ``cdf=False`` table must not silently re-enable the ~1.7x
-    merge sidecar tax); pass an explicit True/False to flip it. A
+    the parent manifest's setting (a plain overwrite on a
+    ``cdf=False`` table must not silently re-enable the ~1.7x merge
+    sidecar tax); pass an explicit True/False to flip it. A
     create with ``cdf`` unset defaults on."""
     if _txn_already_applied(root, txn):
         return current_version(root)
-    prior = current_version(root)
+    base = current_version(root)
+    manifest = _write_manifest(
+        df, root, base, _load_manifest(root, base) if base else {}, key,
+        sort_by, stat_cols, cdf, target_files, txn,
+    )
+    return _commit(root, manifest, expected_version)
+
+
+def _write_manifest(
+    df: DataFrame, root: str, base: int, base_m: dict, key, sort_by,
+    stat_cols, cdf: bool | None, target_files: int | None, txn,
+) -> dict:
+    """Stage ``df`` as the table's whole contents and build the
+    create/overwrite manifest (``write_snapshot`` and a merge into an
+    absent table)."""
     if cdf is None:
-        cdf = True if prior == 0 else bool(
-            _load_manifest(root, prior).get("cdf_enabled", True)
-        )
+        cdf = base_m.get("cdf_enabled", True)
     keys = [key] if isinstance(key, str) else list(key)
-    sort_by = list(sort_by) or keys
     entries = _stage_files(
         df, root, list(dict.fromkeys(keys + list(stat_cols))),
-        sort_by=sort_by, target_files=target_files,
+        sort_by=list(sort_by) or keys, target_files=target_files,
     )
-    manifest = {
-        "op": "create" if prior == 0 else "overwrite",
-        "key": keys,
-        "stat_cols": list(stat_cols),
-        "schema": df.schema.json(),
-        "files": entries,
-        "rows": sum(e["rows"] for e in entries),
-    }
-    manifest["cdf_enabled"] = bool(cdf)
-    # a create/overwrite rewrites every live file with current names —
-    # the rename/drop name history resets (retired names become usable)
-    manifest["renames"] = {}
-    manifest["dropped"] = []
-    if manifest["op"] == "create":
-        # every row is an insert
-        manifest["cdf"] = {"mode": "add_only"}
-    else:
-        # an overwrite's logical delta vs the prior contents is unknown
-        # without reading them — record that fact explicitly (pinned
-        # behavior, VERDICT r14 task #7): a change feed spanning this
-        # commit always takes the endpoint diff, whose cost is reading
-        # the two ENDPOINT versions' changed files (never the
-        # intermediate states), and snapshot_changes documents it
-        manifest["cdf"] = {"mode": "full_rewrite"}
-    if txn is not None:
-        manifest["txns"] = {txn[0]: txn[1]}
-    return _commit(root, manifest, expected_version)
+    return _manifest(
+        base_m, "create" if base == 0 else "overwrite", entries, txn=txn,
+        key=keys, stat_cols=list(stat_cols), schema=df.schema.json(),
+        cdf_enabled=bool(cdf),
+        # a create/overwrite rewrites every live file with current
+        # names — the rename/drop name history resets
+        renames={}, dropped=[],
+        # a create is all inserts; an overwrite's logical delta vs the
+        # prior contents is unknown without reading them, so a change
+        # feed spanning it always takes the endpoint diff
+        cdf={"mode": "add_only" if base == 0 else "full_rewrite"},
+    )
 
 
 def read_snapshot(
@@ -722,7 +750,7 @@ _PLAIN_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double", "stri
 
 
 def _refine_touched(
-    source: DataFrame, keys: Sequence[str], touched: list[dict]
+    source: DataFrame, keys: Sequence[str], touched: list[dict], schema: StructType
 ) -> tuple[list[dict], list[dict]]:
     """Exact file pruning: the coarse bounds check touches every file a
     [batch_min, batch_max] envelope overlaps, so ONE straggler key
@@ -733,9 +761,24 @@ def _refine_touched(
     broadcast join (file count is manifest-sized), result O(files).
     Only plain-typed key columns (int/float/string — JSON stats
     round-trip losslessly and compare natively) participate; a file
-    with no refinable stats keeps its coarse verdict."""
-    schema_types = {f.name: f.dataType.simpleString() for f in source.schema.fields}
-    refinable = [k for k in keys if schema_types.get(k) in _PLAIN_TYPES]
+    with no refinable stats keeps its coarse verdict.
+
+    The range columns take the TABLE's key type (``schema``, the base
+    manifest's): file stats hold table values, which a narrower batch
+    type cannot represent (a bigint table merged with an int batch).
+    A key whose batch and table types are not in one widening family
+    is left to the coarse verdict — ``_align_evolve`` rejects it."""
+    src_types = {f.name: f.dataType for f in source.schema.fields}
+    tbl_types = {f.name: f.dataType for f in schema.fields}
+
+    def _same_family(k):
+        a = src_types[k].simpleString() if k in src_types else None
+        b = tbl_types[k].simpleString() if k in tbl_types else None
+        return a in _PLAIN_TYPES and b in _PLAIN_TYPES and (
+            a == b or any(a in c and b in c for c in (_INT_WIDEN, _FLOAT_WIDEN))
+        )
+
+    refinable = [k for k in keys if _same_family(k)]
     if not refinable or len(touched) <= 1:
         return touched, []
     spark = source.sparkSession
@@ -752,14 +795,13 @@ def _refine_touched(
             )
             row += [st["min"] if plain else None, st["max"] if plain else None]
         rows.append(tuple(row))
-    from pyspark.sql.types import LongType, StructField
+    from pyspark.sql.types import LongType
 
-    src_types = {f.name: f.dataType for f in source.schema.fields}
     fields = [StructField("_file_idx", LongType(), False)]
     for k in refinable:
         fields += [
-            StructField(f"_lo_{k}", src_types[k], True),
-            StructField(f"_hi_{k}", src_types[k], True),
+            StructField(f"_lo_{k}", tbl_types[k], True),
+            StructField(f"_hi_{k}", tbl_types[k], True),
         ]
     ranges = spark.createDataFrame(rows, StructType(fields))
     cond = None
@@ -846,9 +888,9 @@ def _merge_commit(
     cdf: bool = True,
     key_local: bool = False,
 ) -> int:
-    """Shared copy-on-write merge loop: prune → rewrite touched files →
-    commit carried+new with CAS; on SnapshotConflict recompute against
-    the new current (optimistic concurrency, bounded retries).
+    """Shared copy-on-write merge: prune → rewrite touched files →
+    commit carried+new through ``_commit_loop`` (a conflict recomputes
+    against the new current, bounded retries).
     ``txn=(app_id, version)`` makes the merge idempotent across
     redelivery: a version at or below the app's committed watermark is
     skipped entirely (the exactly-once contract a foreachBatch sink
@@ -872,80 +914,35 @@ def _merge_commit(
     # (bounds, exact prune, rewrite) and a non-deterministic source
     # recomputed between the prune and the rewrite could change keys
     # after the prune decided which files can be carried — the same
-    # reason Delta materializes MERGE sources. O(batch) local write.
-    # LAZY checkpoint (r16): the very next thing the merge does is the
-    # _batch_bounds collect, whose first action materializes the
-    # checkpoint — same once-only guarantee, one fewer Spark job per
-    # merge than an eager checkpoint followed by the bounds action.
+    # reason Delta materializes MERGE sources. Lazy: the _batch_bounds
+    # collect is the first action and materializes it, one Spark job
+    # fewer than an eager checkpoint.
     if materialize:
         source = source.localCheckpoint(eager=False)
-    for attempt in range(retries + 1):
-        if _txn_already_applied(root, txn):
-            return current_version(root)
-        base = current_version(root)
+
+    def build(base: int, manifest: dict) -> dict:
         if base == 0:
             if op == "delete":
                 raise SnapshotVersionError(f"no snapshot committed at {root}")
-            try:
-                # CAS-guarded create: if another writer creates the
-                # table first, retry as a real merge instead of
-                # overwriting the winner's rows
-                return write_snapshot(
-                    spark, source, root, key=keys, txn=txn,
-                    expected_version=0, cdf=cdf,
-                )
-            except SnapshotConflict:
-                if attempt == retries:
-                    raise
-                continue
-        manifest = _load_manifest(root, base)
+            # CAS-guarded create: if another writer creates the table
+            # first, the retry runs as a real merge on the winner's rows
+            return _write_manifest(source, root, 0, manifest, keys, (), (), cdf, None, txn)
         schema = _schema_of(manifest)
         _guard_retired_names(source, manifest)
         renames = manifest.get("renames")
         bounds, batch_rows = _batch_bounds(source, keys)
-        # empty-batch fast path (r16): a replayed/caught-up delta merge
-        # has nothing to add or rewrite — staging an empty parquet dir
-        # and re-reading it is two wasted jobs per idempotent re-run.
-        # Only when the batch cannot evolve the schema: same column
-        # name->type mapping, compared up to NULLABILITY and COLUMN
-        # ORDER (r17 — strict StructType equality never fired after the
-        # table's first real merge: a merge commit stores the combined
-        # frame's schema, which is all-nullable from the parquet-read
-        # union and key-first from the upsert combine, while a fresh
-        # pipeline batch carries non-null fields in pipeline order.
-        # Zero rows can neither add/retype columns nor violate
-        # nullability, and the general path keeps the TARGET's column
-        # order for an empty batch anyway, so carrying the manifest
-        # unchanged is identical). The general path handles real
-        # evolution.
-        def _col_set(schema):
-            return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
-
-        if (
-            batch_rows == 0
-            and op != "delete"
-            and _col_set(source.schema) == _col_set(_schema_of(manifest))
-        ):
-            noop = {
-                "op": op,
-                "key": keys,
-                "stat_cols": manifest.get("stat_cols", []),
-                "schema": manifest["schema"],
-                "files": manifest["files"],
-                "rows": manifest["rows"],
-            }
-            if manifest.get("cdf_enabled", True):
-                noop["cdf"] = {"mode": "files", "files": []}
-            if txn is not None:
-                noop["txns"] = {txn[0]: txn[1]}
-            try:
-                return _commit(root, noop, base)
-            except SnapshotConflict:
-                if attempt == retries:
-                    raise
-                continue
+        # an empty batch that cannot evolve the schema changes nothing:
+        # carry the manifest forward instead of staging and re-reading
+        # an empty parquet dir. Columns compare as name->type sets, not
+        # StructTypes: a merged manifest's schema is all-nullable and
+        # key-first while a fresh pipeline batch is neither, and zero
+        # rows can neither add/retype columns nor violate nullability.
+        if batch_rows == 0 and op != "delete" and _col_types(source.schema) == _col_types(schema):
+            return _carry_forward(manifest, op, txn, key=keys)
         touched, carried = _split_by_overlap(manifest["files"], keys, bounds)
-        touched, freed = _refine_touched(source, keys, touched)
+        touched, freed = _refine_touched(source, keys, touched, schema)
+        if not touched and op == "delete":
+            return _carry_forward(manifest, op, txn, key=keys)
         carried = carried + freed
         # size the rewrite to the table's established file granularity
         # (self-tuning: a point merge emits ~len(touched) files, a bulk
@@ -958,68 +955,40 @@ def _merge_commit(
             n_out = max(1, round(est_rows / avg_rows))
         else:
             n_out = None
-        if touched:
-            target = _read_files(
-                spark, root, schema, [f["path"] for f in touched], renames
-            )
-            if op == "delete":
-                # doomed may be keys-only; never let align graft its
-                # columns (or column order) onto the table schema
-                src = source
-                merged = combine(target, src, keys)
-            else:
-                target, src = _align_evolve(target, source)
-                merged = combine(target, src, keys)
+        target = _read_files(spark, root, schema, [f["path"] for f in touched], renames)
+        if op == "delete":
+            # doomed may be keys-only; never let align graft its
+            # columns (or column order) onto the table schema
+            src = source
         else:
-            # nothing can collide: new rows only (for delete: no-op)
-            if op == "delete":
-                noop = {
-                    "op": op,
-                    "key": keys,
-                    "stat_cols": manifest.get("stat_cols", []),
-                    "schema": manifest["schema"],
-                    "files": carried,
-                    "rows": sum(e["rows"] for e in carried),
-                    "cdf": {"mode": "files", "files": []},  # nothing matched
-                }
-                if txn is not None:
-                    noop["txns"] = {txn[0]: txn[1]}
-                return _commit(root, noop, base)
-            target, src = _align_evolve(_read_files(spark, root, schema, []), source)
-            merged = combine(target, src, keys)
+            target, src = _align_evolve(target, source)
+        merged = combine(target, src, keys)
         out_schema = merged.schema
-        sort_by = keys if manifest.get("key") == keys else []
-        stat_cols = manifest.get("stat_cols", [])
         entries = _stage_files(
-            merged, root, list(dict.fromkeys(keys + stat_cols)),
-            sort_by=sort_by, target_files=n_out,
+            merged, root, list(dict.fromkeys(keys + manifest.get("stat_cols", []))),
+            sort_by=keys if manifest.get("key") == keys else [], target_files=n_out,
         )
         # write-time CDF (Delta's change-data files): the merge already
         # read every touched file, so diffing old vs staged-new here is
         # O(touched) — and it makes a LATER snapshot_changes read
-        # O(changed rows) instead of re-scanning the rewritten files
-        # (the spread-merge worst case). Pure appends skip the sidecar
-        # entirely: the added data files ARE the feed (mode=add_only).
-        # Tables created with cdf=False skip the sidecar and their
-        # feeds use the endpoint-diff fallback.
-        # distinct name from the bool ``cdf`` parameter: rebinding it
-        # here would make a retry that falls back to the base==0 create
-        # path pass bool(dict)=True as the dial (ADVICE r14, low)
+        # O(changed rows) instead of re-scanning the rewritten files.
+        # Pure appends skip the sidecar: the added data files ARE the
+        # feed. Tables created with cdf=False skip it and their feeds
+        # use the endpoint-diff fallback. (Never rebind ``cdf`` here: a
+        # retry's create path reads it as the table property.)
+        cdf_block = {}
         if not touched:
-            cdf_info = {"mode": "add_only"}
+            cdf_block["cdf"] = {"mode": "add_only"}
         elif manifest.get("cdf_enabled", True):
             if key_local:
-                # r16 (guide §2.3 "shuffle fewer bytes"): the combine is
-                # KEY-LOCAL — rows whose key tuple is absent from the
-                # batch pass through unchanged, so they cancel in the
-                # old-vs-new multiset diff and never needed to enter it.
-                # Diff only the batch-key slice: old side = touched rows
-                # matching a batch key (semi join, broadcast-sized),
-                # new side = the combine replayed over that slice. This
-                # is O(batch + matched rows) instead of re-reading the
-                # staged files AND the touched files for a full-width
-                # diff of the whole rewrite (~2 extra table scans + a
-                # full-table group-by per merge). NULL batch keys: joins
+                # the combine is KEY-LOCAL: rows whose key tuple is
+                # absent from the batch pass through unchanged and
+                # cancel in the old-vs-new diff, so diff only the
+                # batch-key slice — old side = touched rows matching a
+                # batch key (broadcast semi join), new side = the
+                # combine replayed over that slice. O(batch + matched
+                # rows) instead of re-reading the staged AND touched
+                # files for a full-width diff. NULL batch keys: joins
                 # never match NULLs, so a NULL-keyed target row is
                 # untouched by a key-local combine (cancels, both
                 # formulations) while NULL-keyed source rows enter the
@@ -1029,52 +998,36 @@ def _merge_commit(
                 old_local = target.join(F.broadcast(src_keys), on=keys, how="left_semi")
                 out_cols = [f.name for f in out_schema.fields]
                 if op == "delete":
-                    # every matched row is a delete: N_local is empty,
-                    # no union/group-by/window needed at all
+                    # every matched row is a delete: no diff needed
                     changes = old_local.select(*out_cols).withColumn(
                         "_change_type", F.lit("delete")
                     )
                 else:
-                    if op == "upsert":
-                        # combine(old_local, src) = src exactly (every
-                        # old_local key is a batch key, so the anti-join
-                        # side is empty) — skip replaying it
-                        new_local = src
-                    else:
-                        new_local = combine(old_local, src, keys)
+                    # upsert: combine(old_local, src) = src exactly
+                    # (every old_local key is a batch key) — skip it
+                    new_local = src if op == "upsert" else combine(old_local, src, keys)
                     changes = _diff_changes(
                         old_local.select(*out_cols), new_local.select(*out_cols), keys
                     )
             else:
-                new_df = _read_files(
-                    spark, root, out_schema, [e["path"] for e in entries]
-                )
+                new_df = _read_files(spark, root, out_schema, [e["path"] for e in entries])
                 old_df = _read_files(
                     spark, root, out_schema, [f["path"] for f in touched], renames
                 )
                 changes = _diff_changes(old_df, new_df, keys)
-            cdf_info = {"mode": "files", "files": _stage_cdf(changes, root)}
-        else:
-            cdf_info = None
-        new_manifest = {
-            "op": op,
-            "key": keys,
-            "stat_cols": stat_cols,
-            "schema": out_schema.json(),
-            "files": carried + entries,
-            "rows": sum(e["rows"] for e in carried) + sum(e["rows"] for e in entries),
-        }
-        if cdf_info is not None:
-            new_manifest["cdf"] = cdf_info
-        if txn is not None:
-            new_manifest["txns"] = {txn[0]: txn[1]}
-        try:
-            return _commit(root, new_manifest, base)
-        except SnapshotConflict:
-            # staged files are orphans (vacuum reclaims); recompute
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+            cdf_block["cdf"] = {
+                "mode": "files", "files": _stage_files(changes, root, (), prefix="cdf-"),
+            }
+        return _manifest(
+            manifest, op, carried + entries, txn=txn, key=keys,
+            schema=out_schema.json(), **cdf_block,
+        )
+
+    return _commit_loop(root, build, txn, retries)
+
+
+def _col_types(schema: StructType) -> list[tuple[str, str]]:
+    return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
 
 
 def upsert_snapshot(
@@ -1165,21 +1118,17 @@ def delete_where_range(
     synthesizes the delete pre-images FROM those references at feed
     time — every row of a dropped file, plus the in-range rows of the
     rewritten ones — cost O(dropped + boundary files), read exactly
-    when a consumer asks (VERDICT r15 task #5). The referenced files
+    when a consumer asks. The referenced files
     belong to the superseded version, so they live exactly as long as
     it does; once vacuum takes it, the chain falls back to the
     endpoint diff like any other vacuumed intermediate."""
-    for attempt in range(retries + 1):
-        if _txn_already_applied(root, txn):
-            return current_version(root)
-        base = current_version(root)
+    lo_s, hi_s = _stat_value(lo), _stat_value(hi)
+    stats_usable = lo_s is not None and hi_s is not None
+
+    def build(base: int, manifest: dict) -> dict:
         if base == 0:
             raise SnapshotVersionError(f"no snapshot committed at {root}")
-        manifest = _load_manifest(root, base)
-        schema = _schema_of(manifest)
         dropped, straddling, carried = [], [], []
-        lo_s, hi_s = _stat_value(lo), _stat_value(hi)
-        stats_usable = lo_s is not None and hi_s is not None
         for f in manifest["files"]:
             st = f["stats"].get(col)
             if not stats_usable or st is None or st["has_nulls"]:
@@ -1192,47 +1141,27 @@ def delete_where_range(
                 except TypeError:
                     inside = False
                 (dropped if inside else straddling).append(f)
+        entries = []
         if straddling:
             keep = _read_files(
-                spark, root, schema, [f["path"] for f in straddling],
+                spark, root, _schema_of(manifest), [f["path"] for f in straddling],
                 manifest.get("renames"),
             ).filter(~F.col(col).between(lo, hi) | F.col(col).isNull())
-            stat_cols = manifest.get("stat_cols", [])
             keys = manifest.get("key") or []
             entries = _stage_files(
-                keep, root, list(dict.fromkeys(keys + stat_cols)),
+                keep, root, list(dict.fromkeys(keys + manifest.get("stat_cols", []))),
                 sort_by=keys, target_files=max(1, len(straddling)),
             )
-        else:
-            entries = []
-        new_manifest = {
-            "op": "delete_range",
-            "key": manifest.get("key") or [],
-            "stat_cols": manifest.get("stat_cols", []),
-            "schema": manifest["schema"],
-            "files": carried + entries,
-            "rows": sum(e["rows"] for e in carried)
-            + sum(e["rows"] for e in entries),
-        }
-        if stats_usable:
-            # lazy CDF: record WHAT was deleted (bounds + superseded
-            # file refs), not the rows — the feed reads them on demand
-            new_manifest["cdf"] = {
-                "mode": "delete_range",
-                "col": col,
-                "lo": lo_s,
-                "hi": hi_s,
-                "dropped": [f["path"] for f in dropped],
-                "rewritten": [f["path"] for f in straddling],
-            }
-        if txn is not None:
-            new_manifest["txns"] = {txn[0]: txn[1]}
-        try:
-            return _commit(root, new_manifest, base)
-        except SnapshotConflict:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+        # lazy CDF: record WHAT was deleted (bounds + superseded file
+        # refs), not the rows — the feed reads them on demand
+        lazy = {"cdf": {
+            "mode": "delete_range", "col": col, "lo": lo_s, "hi": hi_s,
+            "dropped": [f["path"] for f in dropped],
+            "rewritten": [f["path"] for f in straddling],
+        }} if stats_usable else {}
+        return _manifest(manifest, "delete_range", carried + entries, txn=txn, **lazy)
+
+    return _commit_loop(root, build, txn, retries)
 
 
 def rename_snapshot_column(root: str, old: str, new: str) -> int:
@@ -1268,18 +1197,16 @@ def rename_snapshot_column(root: str, old: str, new: str) -> int:
         for f in schema.fields
     ]
     renames[new] = [old] + renames.pop(old, [])
-    manifest = {
-        "op": "rename_column",
-        "key": [new if k == old else k for k in (m.get("key") or [])],
-        "stat_cols": [new if c == old else c for c in m.get("stat_cols", [])],
-        "schema": StructType(fields).json(),
-        "files": m["files"],
-        "rows": m["rows"],
-        "renames": renames,
+    manifest = _manifest(
+        m, "rename_column", m["files"],
+        key=[new if k == old else k for k in (m.get("key") or [])],
+        stat_cols=[new if c == old else c for c in m.get("stat_cols", [])],
+        schema=StructType(fields).json(),
+        renames=renames,
         # metadata-only: no logical row changes under the new schema's
         # projection — a CDF chain crossing this commit skips it
-        "cdf": {"mode": "files", "files": []},
-    }
+        cdf={"mode": "files", "files": []},
+    )
     return _commit(root, manifest, base)
 
 
@@ -1302,18 +1229,14 @@ def drop_snapshot_column(root: str, col: str) -> int:
         raise ValueError(f"cannot drop key column {col!r}")
     renames = {k: list(v) for k, v in m.get("renames", {}).items()}
     dropped = list(m.get("dropped", [])) + [col] + renames.pop(col, [])
-    manifest = {
-        "op": "drop_column",
-        "key": m.get("key") or [],
-        "stat_cols": [c for c in m.get("stat_cols", []) if c != col],
-        "schema": StructType([f for f in schema.fields if f.name != col]).json(),
-        "files": m["files"],
-        "rows": m["rows"],
-        "renames": renames,
-        "dropped": dropped,
-        # metadata-only (see rename_column)
-        "cdf": {"mode": "files", "files": []},
-    }
+    manifest = _manifest(
+        m, "drop_column", m["files"],
+        stat_cols=[c for c in m.get("stat_cols", []) if c != col],
+        schema=StructType([f for f in schema.fields if f.name != col]).json(),
+        renames=renames,
+        dropped=dropped,
+        cdf={"mode": "files", "files": []},  # metadata-only (see rename)
+    )
     return _commit(root, manifest, base)
 
 
@@ -1334,27 +1257,21 @@ def rollback_snapshot(root: str, to_version: int) -> int:
     instead of dropping the whole chain to the endpoint diff."""
     base = current_version(root)
     manifest = _load_manifest(root, to_version)
-    new_manifest = {
-        "op": "rollback",
-        "key": manifest.get("key", []),
-        "stat_cols": manifest.get("stat_cols", []),
-        "schema": manifest["schema"],
-        "files": manifest["files"],
-        "rows": manifest["rows"],
-        "renames": manifest.get("renames", {}),
-        "dropped": manifest.get("dropped", []),
-    }
-    if "cdf_enabled" in manifest:
-        new_manifest["cdf_enabled"] = manifest["cdf_enabled"]
+    props = {"cdf_enabled": manifest["cdf_enabled"]} if "cdf_enabled" in manifest else {}
     if base > 0:
-        pre = _load_manifest(root, base)
-        pre_paths = {f["path"] for f in pre["files"]}
+        pre_paths = {f["path"] for f in _load_manifest(root, base)["files"]}
         to_paths = {f["path"] for f in manifest["files"]}
-        new_manifest["cdf"] = {
+        props["cdf"] = {
             "mode": "file_diff",
             "removed": sorted(pre_paths - to_paths),
             "added": sorted(to_paths - pre_paths),
         }
+    new_manifest = _manifest(
+        manifest, "rollback", manifest["files"],
+        renames=manifest.get("renames", {}),
+        dropped=manifest.get("dropped", []),
+        **props,
+    )
     return _commit(root, new_manifest, None)
 
 
@@ -1379,59 +1296,41 @@ def compact_snapshot(
     files on either dimension, the multi-column data-skipping the
     single-key sort cannot give). ``extra_stat_cols`` is additive and
     persists in the manifest for subsequent merges."""
-    for attempt in range(retries + 1):
-        base = current_version(root)
+    def build(base: int, manifest: dict) -> dict:
         if base == 0:
             raise SnapshotVersionError(f"no snapshot committed at {root}")
-        manifest = _load_manifest(root, base)
-        schema = _schema_of(manifest)
         keys = manifest.get("key") or []
         df = _read_files(
-            spark, root, schema, [f["path"] for f in manifest["files"]],
+            spark, root, _schema_of(manifest), [f["path"] for f in manifest["files"]],
             manifest.get("renames"),
         )
         n_files = max(1, -(-manifest["rows"] // max(1, target_rows_per_file)))
         stat_cols = list(
             dict.fromkeys(manifest.get("stat_cols", []) + list(extra_stat_cols))
         )
+        sort_by = keys
         if order_by is not None:
+            # the caller's layout is already partitioned and sorted here
             df = df.repartitionByRange(n_files, *order_by).sortWithinPartitions(
                 *order_by
             )
-            entries = _stage_files(
-                df, root, list(dict.fromkeys(keys + stat_cols)),
-            )
-        else:
-            entries = _stage_files(
-                df, root, list(dict.fromkeys(keys + stat_cols)),
-                sort_by=keys, target_files=n_files,
-            )
-        try:
-            return _commit(
-                root,
-                {
-                    "op": "compact",
-                    "key": keys,
-                    "stat_cols": stat_cols,
-                    "schema": manifest["schema"],
-                    "files": entries,
-                    "rows": sum(e["rows"] for e in entries),
-                    # physical-only rewrite: a CDF consumer can skip
-                    # this commit without reading a byte (the diff
-                    # fallback would read every rewritten file twice
-                    # just to cancel all of them)
-                    "cdf": {"mode": "files", "files": []},
-                    # every file now carries current column names: the
-                    # rename/drop history resets and retired names free up
-                    "renames": {},
-                    "dropped": [],
-                },
-                base,
-            )
-        except SnapshotConflict:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+            sort_by, n_files = (), None
+        entries = _stage_files(
+            df, root, list(dict.fromkeys(keys + stat_cols)),
+            sort_by=sort_by, target_files=n_files,
+        )
+        return _manifest(
+            manifest, "compact", entries, stat_cols=stat_cols,
+            # physical-only rewrite: a CDF consumer can skip this
+            # commit without reading a byte (the diff fallback would
+            # read every rewritten file twice just to cancel all of them)
+            cdf={"mode": "files", "files": []},
+            # every file now carries current column names: the
+            # rename/drop history resets and retired names free up
+            renames={}, dropped=[],
+        )
+
+    return _commit_loop(root, build, retries=retries)
 
 
 def vacuum_snapshot(
@@ -1859,6 +1758,22 @@ def fold_snapshot_state(
     )
 
 
+def _consumer_position(
+    src_root: str, dst_root: str, consumer_id: str, src_version: int | None = None
+) -> tuple[int, int | None] | None:
+    """Where a change-feed consumer stands: ``(src_v, last)`` — the
+    source version to catch up to (default: current) and the last
+    applied one (None before the bootstrap), read from the consumer's
+    txn watermark on ``dst_root``. None when already caught up."""
+    src_v = current_version(src_root) if src_version is None else src_version
+    if src_v == 0:
+        raise SnapshotVersionError(f"no snapshot committed at {src_root}")
+    last = txn_version(dst_root, consumer_id)
+    if last is not None and last >= src_v:
+        return None
+    return src_v, last
+
+
 def mirror_snapshot(
     spark: SparkSession,
     src_root: str,
@@ -1886,12 +1801,11 @@ def mirror_snapshot(
     mirror — the standard CDC retention contract). ``src_version``
     pins the replication target to a specific source version instead
     of the moving tip (``mirror_db``'s consistent multi-table copy)."""
-    src_v = current_version(src_root) if src_version is None else src_version
-    if src_v == 0:
-        raise SnapshotVersionError(f"no snapshot committed at {src_root}")
-    last = txn_version(dst_root, mirror_id)
-    if last is not None and last >= src_v:
+    pos = _consumer_position(src_root, dst_root, mirror_id, src_version)
+    if pos is None:
         return current_version(dst_root)
+    src_v, last = pos
+    txn = (mirror_id, src_v)
     src_manifest = _load_manifest(src_root, src_v)
     keys = src_manifest.get("key") or []
     if last is None or not keys:
@@ -1899,26 +1813,12 @@ def mirror_snapshot(
         # applied by key: refresh the full pinned snapshot (still
         # atomic + fenced; incremental economy needs a merge key)
         full = read_snapshot(spark, src_root, version=src_v)
-        return write_snapshot(
-            spark, full, dst_root, key=keys, txn=(mirror_id, src_v)
-        )
+        return write_snapshot(spark, full, dst_root, key=keys, txn=txn)
     cdf = snapshot_changes(spark, src_root, last, src_v).localCheckpoint()
     if not cdf.take(1):  # physical-only churn: just advance the watermark
-        for attempt in range(retries + 1):
-            base = current_version(dst_root)
-            m = _load_manifest(dst_root, base)
-            noop = {k: m[k] for k in ("op", "key", "schema", "files", "rows")}
-            noop.update(
-                op="mirror", txns={mirror_id: src_v},
-                stat_cols=m.get("stat_cols", []),
-            )
-            try:
-                return _commit(dst_root, noop, base)
-            except SnapshotConflict:
-                if attempt == retries:
-                    raise
-                if _txn_already_applied(dst_root, (mirror_id, src_v)):
-                    return current_version(dst_root)
+        return _commit_loop(
+            dst_root, lambda _base, m: _carry_forward(m, "mirror", txn), txn, retries
+        )
     all_keys = cdf.select(*keys).dropDuplicates(keys)
     apply_rows = cdf.filter(
         F.col("_change_type").isin("insert", "update_postimage")
@@ -1930,7 +1830,7 @@ def mirror_snapshot(
 
     return _merge_commit(
         spark, cdf.drop("_change_type"), dst_root, keys, "mirror", combine,
-        retries, txn=(mirror_id, src_v), materialize=False,  # cdf already is
+        retries, txn=txn, materialize=False,  # cdf already is
     )
 
 
@@ -2096,12 +1996,10 @@ def refresh_agg_view(
             )
         if kind in ("sum", "count", "min", "max") and col == "*":
             raise ValueError(f"spec {out!r}: {kind} needs a column, not '*'")
-    src_v = current_version(src_root)
-    if src_v == 0:
-        raise SnapshotVersionError(f"no snapshot committed at {src_root}")
-    last = txn_version(dst_root, view_id)
-    if last is not None and last >= src_v:
+    pos = _consumer_position(src_root, dst_root, view_id)
+    if pos is None:
         return current_version(dst_root)
+    src_v, last = pos
     sum_outs = [out for out, (kind, _) in specs.items() if kind == "sum"]
     ext_outs = {
         out: (kind, col)
@@ -2166,11 +2064,11 @@ def refresh_agg_view(
     delta = feed.groupBy(*key_list).agg(*contribs)
 
     # frames persisted inside combine, released AFTER the commit:
-    # combine runs inside _merge_commit's CAS retry loop, and eager
-    # localCheckpoints there accumulated truncated-lineage blocks for
-    # the session's lifetime, one set per conflict retry (ADVICE r15,
-    # low). persist() keeps lineage, so unpersisting in the finally —
-    # after the staged files are committed — is always safe.
+    # combine runs inside the CAS retry loop, where eager
+    # localCheckpoints would accumulate truncated-lineage blocks for
+    # the session's lifetime, one set per conflict retry. persist()
+    # keeps lineage, so unpersisting in the finally — after the staged
+    # files are committed — is always safe.
     _held: list[DataFrame] = []
 
     def combine(target, src, kk):
@@ -2283,9 +2181,10 @@ def refresh_derived_snapshot(
     At scale: refresh reads O(changed rows) from the feed and rewrites
     O(touched view files) — never the fact table, never the whole
     view."""
-    src_v = current_version(src_root)
-    if src_v == 0:
-        raise SnapshotVersionError(f"no snapshot committed at {src_root}")
+    pos = _consumer_position(src_root, dst_root, view_id)
+    if pos is None:
+        return current_version(dst_root)
+    src_v, last = pos
     keys = _load_manifest(src_root, src_v).get("key") or []
     if not keys:
         raise ValueError(
@@ -2293,9 +2192,6 @@ def refresh_derived_snapshot(
             "deletes/updates are applied by key); keyless sources can "
             "only full-refresh via write_snapshot(transform(read))"
         )
-    last = txn_version(dst_root, view_id)
-    if last is not None and last >= src_v:
-        return current_version(dst_root)
     if last is None:
         view = transform(read_snapshot(spark, src_root, version=src_v))
         missing = [k for k in keys if k not in view.columns]
@@ -2400,22 +2296,17 @@ def db_commit(
     tables would silently roll back each other's pins (lost update).
     With ``expected_version=None`` the conflict is absorbed by
     re-reading and retrying; with it set, the conflict raises."""
-    for attempt in range(5):
-        base = current_version(db_root)
+    def build(base: int, manifest: dict) -> dict:
         if expected_version is not None and base != expected_version:
             raise SnapshotConflict(
                 f"db at {db_root} moved to v{base} (writer based on v{expected_version})"
             )
-        pinned = dict(_load_manifest(db_root, base)["tables"]) if base else {}
+        pinned = dict(manifest.get("tables", {}))
         pinned.update({t: int(v) for t, v in table_versions.items()})
-        manifest = {"op": "db_commit", "tables": pinned, "files": [], "rows": 0,
-                    "schema": "", "key": []}
-        try:
-            return _commit(db_root, manifest, base)
-        except SnapshotConflict:
-            if expected_version is not None or attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+        return {"op": "db_commit", "tables": pinned, "files": [], "rows": 0,
+                "schema": "", "key": []}
+
+    return _commit_loop(db_root, build, retries=4 if expected_version is None else 0)
 
 
 def db_read(

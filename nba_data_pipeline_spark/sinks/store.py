@@ -99,17 +99,10 @@ def upsert_store(
     rejects it loudly rather than silently dropping the guarantee.
     ``cdf`` sets the snapshot write-time change-file property when THIS
     call creates the table (existing tables keep theirs)."""
-    resolved = _resolve(path, fmt, default)
-    if resolved == "snapshot":
-        keys = [key] if isinstance(key, str) else list(key)
-        snap.upsert_snapshot(spark, source, path, keys, txn=txn, cdf=cdf)
-        return
-    if txn is not None:
-        raise ValueError(
-            "txn fencing requires format='snapshot'; the swap backend "
-            "has no transaction watermark"
-        )
-    writer.upsert_table(spark, source, path, key, partition_by)
+    _dispatch(
+        snap.upsert_snapshot, writer.upsert_table,
+        spark, source, path, key, partition_by, fmt, default, txn, cdf,
+    )
 
 
 def migrate_to_snapshot(
@@ -167,14 +160,25 @@ def insert_ignore_store(
     cdf: bool = True,
 ) -> None:
     """ON CONFLICT DO NOTHING through whichever backend owns ``path``."""
-    resolved = _resolve(path, fmt, default)
-    if resolved == "snapshot":
+    _dispatch(
+        snap.insert_ignore_snapshot, writer.insert_ignore_table,
+        spark, source, path, key, partition_by, fmt, default, txn, cdf,
+    )
+
+
+def _dispatch(
+    snapshot_op, swap_op, spark, source, path, key, partition_by, fmt, default, txn, cdf,
+) -> None:
+    """Resolve the backend of ``path`` and run the write there. The
+    swap backend has no transaction watermark, so it rejects ``txn``
+    loudly rather than silently dropping the guarantee."""
+    if _resolve(path, fmt, default) == "snapshot":
         keys = [key] if isinstance(key, str) else list(key)
-        snap.insert_ignore_snapshot(spark, source, path, keys, txn=txn, cdf=cdf)
+        snapshot_op(spark, source, path, keys, txn=txn, cdf=cdf)
         return
     if txn is not None:
         raise ValueError(
             "txn fencing requires format='snapshot'; the swap backend "
             "has no transaction watermark"
         )
-    writer.insert_ignore_table(spark, source, path, key, partition_by)
+    swap_op(spark, source, path, key, partition_by)

@@ -4,6 +4,9 @@
 pipeline over it and check the reference's own domain invariants
 (FIXTURES.md §3)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from nba_data_pipeline_spark.core.schemas import ROTATION_RAW
@@ -12,6 +15,14 @@ from nba_data_pipeline_spark.operators.lineups import starters_from_rotations
 from nba_data_pipeline_spark.plans.nba_pipelines import rotations
 
 GOLDEN = "/root/reference/game_rotation.csv"
+
+# The golden CSV lives in the reference checkout, which is not always
+# present; conftest's hand-verified synthetic game keeps the pipeline
+# coverage when it is absent.
+pytestmark = pytest.mark.skipif(
+    not os.path.exists(GOLDEN),
+    reason=f"reference golden artifact {GOLDEN} is absent",
+)
 
 
 def _load(spark):

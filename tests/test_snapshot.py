@@ -2229,3 +2229,70 @@ def test_empty_batch_schema_drift_still_blocks_real_evolution(spark, tmp_path, m
     )
     snap.upsert_snapshot(spark, empty_extra, root, key="id")
     assert "w" in snap.read_snapshot(spark, root).columns
+
+
+# ---------------------------------------------------------------------------
+# exact-prune key typing and fenced replays
+# ---------------------------------------------------------------------------
+
+def _two_file_table(spark, root, rows, ddl):
+    S.write_snapshot(spark, spark.createDataFrame(rows, ddl), root, key="k", target_files=2)
+    assert len(S._load_manifest(root, 1)["files"]) == 2
+
+
+def test_int_batch_into_bigint_table_refines_with_table_key_type(spark, tmp_path):
+    """The exact file prune types its range table with the TABLE's key
+    type: a bigint file range beyond the int domain cannot be held in
+    the batch's int type (it raised VALUE_OUT_OF_BOUNDS), and the merge
+    must widen the batch instead."""
+    root = str(tmp_path / "t")
+    big = [(1, 0), (2, 0), (2_000_000_000, 0), (6_000_000_000, 0)]
+    _two_file_table(spark, root, big, "k bigint, v int")
+    batch = spark.createDataFrame([(1, 9), (2_147_483_647, 9)], "k int, v int")
+    S.upsert_snapshot(spark, batch, root, "k")
+    got = S.read_snapshot(spark, root)
+    assert dict(got.dtypes)["k"] == "bigint"
+    assert _rows(got) == [
+        (1, 9), (2, 0), (2_000_000_000, 0), (2_147_483_647, 9), (6_000_000_000, 0)
+    ]
+
+
+def test_non_widening_key_type_conflict_still_raises(spark, tmp_path):
+    """A key typed outside the table's widening family skips the exact
+    prune and reaches the schema alignment, which rejects it."""
+    root = str(tmp_path / "t")
+    _two_file_table(spark, root, [("a", 0), ("b", 0), ("y", 0), ("z", 0)], "k string, v int")
+    batch = spark.createDataFrame([(1, 9), (2, 9)], "k int, v int")
+    with pytest.raises(ValueError, match="upsert schema conflict"):
+        S.upsert_snapshot(spark, batch, root, "k")
+    assert S.current_version(root) == 1
+
+
+def test_fenced_replays_run_no_spark_jobs(spark, tmp_path):
+    """An already-applied txn is fenced before anything is
+    materialized: replays of every fenced entry point launch 0 jobs."""
+    import uuid
+
+    root, dst = str(tmp_path / "t"), str(tmp_path / "m")
+    S.write_snapshot(spark, _table(spark, 100), root, key="k")
+    batch = spark.createDataFrame([(1, -1)], "k long, v long")
+    doomed = spark.createDataFrame([(2,)], "k long")
+    S.upsert_snapshot(spark, batch, root, "k", txn=("app", 1))
+    S.delete_snapshot(spark, doomed, root, "k", txn=("app", 2))
+    S.delete_where_range(spark, root, "k", 50, 59, txn=("app", 3))
+    S.mirror_snapshot(spark, root, dst)
+    v_src, v_dst = S.current_version(root), S.current_version(dst)
+
+    sc = spark.sparkContext
+    group = f"fenced-replay-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fenced replays")
+    try:
+        assert S.upsert_snapshot(spark, batch, root, "k", txn=("app", 1)) == v_src
+        assert S.delete_snapshot(spark, doomed, root, "k", txn=("app", 2)) == v_src
+        assert S.delete_where_range(spark, root, "k", 50, 59, txn=("app", 3)) == v_src
+        assert S.mirror_snapshot(spark, root, dst) == v_dst
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert S.current_version(root) == v_src and S.current_version(dst) == v_dst
