@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nba_data_pipeline_spark import harness  # noqa: E402
+from nba_data_pipeline_spark.core.session import RUNTIME_CONF  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -48,22 +49,10 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
     audits: subset co-partitioning (the 1-shuffle declarative lineup
     plan re-gains ~18 Exchanges without it), broadcast threshold,
     AQE + skew-join, runtime bloom-filter join pruning, and Arrow for
-    the pandas exchanges. Static confs (driver memory, master) can't
+    the pandas exchanges — ``core.session.RUNTIME_CONF``, the same
+    tuple get_session applies. Static confs (memory, master) can't
     be set post-start and are intentionally absent."""
-    for key, val in (
-        # parquet/testdata read parity
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.session.timeZone", "UTC"),
-        # plan-shape parity with core.session.get_session
-        ("spark.sql.requireAllClusterKeysForCoPartition", "false"),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.optimizer.runtime.bloomFilter.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
+    for key, val in RUNTIME_CONF:
         try:
             spark.conf.set(key, val)
         except Exception:

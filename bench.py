@@ -185,6 +185,7 @@ def main() -> None:
     floor_errors: dict[str, str] = {}
     floor_runs = 0
     canary_series: list[dict] = []
+    CANARY_EVERY = int(os.environ.get("SPARK_GRAFT_CANARY_EVERY", "10"))
     if os.environ.get("SPARK_GRAFT_FLOORS", "1") != "0":
         from nba_data_pipeline_spark.core.session import get_session
 
@@ -207,7 +208,6 @@ def main() -> None:
         # driver-parsed stdout line and the per-query floor numbers are
         # computed exactly as before.
         CANARY = HEADLINE[0]
-        CANARY_EVERY = int(os.environ.get("SPARK_GRAFT_CANARY_EVERY", "10"))
 
         def _canary_floor(after_n: int) -> None:
             cspark = get_session("bench-canary")
@@ -238,8 +238,6 @@ def main() -> None:
                 cspark.stop()
 
         for idx, name in enumerate(HEADLINE):
-            if idx and idx % CANARY_EVERY == 0:
-                _canary_floor(idx)
             if time.time() - t_floor0 > budget:
                 floor_errors["__budget__"] = (
                     f"floor budget {budget}s exhausted after "
@@ -247,6 +245,8 @@ def main() -> None:
                 )
                 print(f"# floors: {floor_errors['__budget__']}", file=sys.stderr)
                 break
+            if idx and idx % CANARY_EVERY == 0:
+                _canary_floor(idx)
             fspark = get_session("bench-floor")
             try:
                 fn = qs[name]
@@ -320,7 +320,7 @@ def main() -> None:
         "idle_load1_threshold": IDLE_LOAD1,
         "canary": {
             "query": HEADLINE[0],
-            "every": int(os.environ.get("SPARK_GRAFT_CANARY_EVERY", "10")),
+            "every": CANARY_EVERY,
             "series": canary_series if floors else [],
         },
         "sf": sf,

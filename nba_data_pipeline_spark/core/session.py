@@ -35,8 +35,43 @@ def _shuffle_partitions() -> str:
 
 # single source of truth for "small enough to force-broadcast": the
 # session's autoBroadcastJoinThreshold AND the explicit-hint size gates
-# (e.g. operators/similarity._maybe_broadcast) both read this
+# (e.g. core.data.maybe_broadcast) both read this
 AUTO_BROADCAST_BYTES = 64 * 1024 * 1024
+
+# Every runtime-settable conf the engine depends on: how testdata parquet
+# is read and the plan shapes the operators are tuned for. get_session
+# applies it at build time, and __spark_entry__ re-applies it to a
+# session built elsewhere. Static confs (master, memory) and the
+# core-count-derived shuffle width live in get_session only.
+RUNTIME_CONF: tuple[tuple[str, str], ...] = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(AUTO_BROADCAST_BYTES)),
+    # testdata writes events.ts as TIMESTAMP(NANOS), which Spark's
+    # parquet reader rejects; read it as long and convert in the
+    # loader (core.data.load_table)
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # newer testdata stores events.ts as timestamp[us] NTZ; read it
+    # as session-zone TIMESTAMP (UTC session => same instant) so
+    # unix_micros/window() accept it (core.data.normalize_ts is the
+    # belt-and-suspenders cast for sessions built elsewhere)
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    # runtime bloom filters prune the probe side of large joins
+    # before the shuffle (explicit: the 100 TB join-pruning lever)
+    ("spark.sql.optimizer.runtime.bloomFilter.enabled", "true"),
+    # accept subset co-partitioning for joins: two sides already
+    # hash-partitioned on a PREFIX of the join keys (e.g. GAME_ID
+    # for every join in the declarative lineup plan) join without
+    # re-shuffling on the full key tuple. Spark's conservative
+    # default (true) exists for skew on low-cardinality subsets;
+    # our subset keys are high-cardinality entity ids (GAME_ID,
+    # doc_id buckets), and AQE skew-join splitting stays on as the
+    # backstop
+    ("spark.sql.requireAllClusterKeysForCoPartition", "false"),
+)
 
 
 def get_session(app_name: str = "nba_data_pipeline_spark", **extra_conf: str) -> SparkSession:
@@ -50,37 +85,10 @@ def get_session(app_name: str = "nba_data_pipeline_spark", **extra_conf: str) ->
         SparkSession.builder.master(f"local[{_cpus()}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", _shuffle_partitions())
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(AUTO_BROADCAST_BYTES))
-        # testdata writes events.ts as TIMESTAMP(NANOS), which Spark's
-        # parquet reader rejects; read it as long and convert in the
-        # loader (core.data.load_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # newer testdata stores events.ts as timestamp[us] NTZ; read it
-        # as session-zone TIMESTAMP (UTC session => same instant) so
-        # unix_micros/window() accept it (core.data.normalize_ts is the
-        # belt-and-suspenders cast for driver-supplied sessions)
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # runtime bloom filters prune the probe side of large joins
-        # before the shuffle (explicit: the 100 TB join-pruning lever)
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # accept subset co-partitioning for joins: two sides already
-        # hash-partitioned on a PREFIX of the join keys (e.g. GAME_ID
-        # for every join in the declarative lineup plan) join without
-        # re-shuffling on the full key tuple. Spark's conservative
-        # default (true) exists for skew on low-cardinality subsets;
-        # our subset keys are high-cardinality entity ids (GAME_ID,
-        # doc_id buckets), and AQE skew-join splitting stays on as the
-        # backstop
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in extra_conf.items():
+    for k, v in (*RUNTIME_CONF, *extra_conf.items()):
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

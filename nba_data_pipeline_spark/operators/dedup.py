@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..core.data import lazy_checkpoint, spread_by_key
-from .text import exploded_shingles, normalized_text, tokens, word_shingles
+from .text import exploded_shingles, normalized_text, tokens
 
 # 2^31-1: universal-hash field small enough that a*h stays < 2^62,
 # i.e. no 64-bit overflow under ANSI arithmetic.
@@ -377,26 +377,6 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(
-    text: Column | str, num_perm: int = 32, shingle_n: int = 3, seed: int = 42
-) -> Column:
-    """Single-expression MinHash signature (array<long>). NOTE: each of
-    the num_perm sub-expressions re-derives the shingle array — fine
-    for ad-hoc use on small frames; the scalable path used by
-    ``minhash_lsh_pairs`` is ``minhash_signatures`` (explode + agg)."""
-    sh = word_shingles(text, shingle_n)
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_PRIME)))
-    sigs = [
-        F.array_min(
-            F.transform(
-                base, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_PRIME))
-            )
-        )
-        for a, b in _perm_params(num_perm, seed)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -628,17 +608,17 @@ def minhash_lsh_pairs(
     sim = F.round(F.when(union == 0, 0.0).otherwise(inter.cast("double") / union), 6)
     # size-gated broadcast of the shingle-set re-joins (r16, guide
     # §3.1) — same rationale as simhash_near_pairs' fingerprint joins
-    from .similarity import _maybe_broadcast
+    from ..core.data import maybe_broadcast
 
     verified = (
         cand.join(
-            _maybe_broadcast(
+            maybe_broadcast(
                 sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), None
             ),
             "id_a",
         )
         .join(
-            _maybe_broadcast(
+            maybe_broadcast(
                 sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), None
             ),
             "id_b",
@@ -1060,17 +1040,17 @@ def simhash_near_pairs(
     # §3.1): (doc_id, sh) is 16 bytes/doc — small enough to broadcast
     # for any corpus the bench sees, falling back to the planner's
     # choice past the cap (the gate reads the checkpoint's estimate)
-    from .similarity import _maybe_broadcast
+    from ..core.data import maybe_broadcast
 
     cand = (
         cand.join(
-            _maybe_broadcast(
+            maybe_broadcast(
                 fp.select(F.col("doc_id").alias("id_a"), F.col("_fp").alias("sh_a")), None
             ),
             "id_a",
         )
         .join(
-            _maybe_broadcast(
+            maybe_broadcast(
                 fp.select(F.col("doc_id").alias("id_b"), F.col("_fp").alias("sh_b")), None
             ),
             "id_b",

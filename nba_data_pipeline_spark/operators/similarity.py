@@ -24,8 +24,7 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-# size-gated broadcast hint — implementation moved to core.data (r17)
-# so the TPC-H reshapes share it; re-exported under the historical name
+# the old name of core.data.maybe_broadcast, kept for its importers
 _maybe_broadcast = maybe_broadcast
 
 
@@ -206,7 +205,7 @@ def batch_topk(
     the corpus never shuffles and the query table is the build side.
 
     ``broadcast_queries=None`` (default) size-gates the broadcast hint
-    on Catalyst's estimate (see ``_maybe_broadcast``) so a corpus-sized
+    on Catalyst's estimate (see ``maybe_broadcast``) so a corpus-sized
     query batch is never forced onto every executor; ``True``/``False``
     force the choice."""
     qn = queries.select(
@@ -215,7 +214,7 @@ def batch_topk(
     cn = corpus.select(
         F.col(corpus_id_col).alias("corpus_id"), F.col(vec_col).alias("_cv")
     )
-    scored = cn.crossJoin(_maybe_broadcast(qn, broadcast_queries)).withColumn(
+    scored = cn.crossJoin(maybe_broadcast(qn, broadcast_queries)).withColumn(
         "cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv")), round_digits)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("corpus_id"))
@@ -253,7 +252,7 @@ def lsh_batch_topk(
     The probe frame is queries × (1 + n + C(n,2)) rows (79 per query
     at n_planes=12, multiprobe_bits=2). ``broadcast_queries=None``
     (default) size-gates the broadcast hint on Catalyst's estimate
-    (``_maybe_broadcast``); for a corpus-sized batch the probe join is
+    (``maybe_broadcast``); for a corpus-sized batch the probe join is
     an equi-join on ``_bucket``, so the planner falls back to a
     shuffle hash join."""
     if multiprobe_bits < 0 or multiprobe_bits > 2:
@@ -282,7 +281,7 @@ def lsh_batch_topk(
     scored = cb.join(
         # gate on the pre-explode query frame x probe count: the probe
         # frame is post-Generate and Catalyst won't scale its estimate
-        _maybe_broadcast(probes, broadcast_queries, estimate_from=qb, fanout=len(masks)),
+        maybe_broadcast(probes, broadcast_queries, estimate_from=qb, fanout=len(masks)),
         "_bucket",
     ).withColumn(
         "cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv")), 6)
@@ -315,7 +314,7 @@ def ivf_batch_topk(
 
     The probe frame is queries × n_probe rows. ``broadcast_queries=
     None`` (default) size-gates the broadcast hint on Catalyst's
-    estimate (``_maybe_broadcast``); for a corpus-sized query batch
+    estimate (``maybe_broadcast``); for a corpus-sized query batch
     the probe join is an equi-join on ``_list``, so the planner falls
     back to a shuffle hash join."""
     centers_df = None
@@ -344,7 +343,7 @@ def ivf_batch_topk(
     ).join(
         # ranked is queries x n_probe post-explode rows; estimate from
         # the un-exploded query frame scaled by the probe fan-out
-        _maybe_broadcast(ranked, broadcast_queries, estimate_from=qn, fanout=n_probe),
+        maybe_broadcast(ranked, broadcast_queries, estimate_from=qn, fanout=n_probe),
         "_list",
     )
     scored = cand.withColumn("cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv")), 6))
@@ -432,7 +431,7 @@ def cosine_pairs(
         ),
         "id_a",
     )
-    b = _maybe_broadcast(
+    b = maybe_broadcast(
         base.select(
             *block_cols, F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
         ),

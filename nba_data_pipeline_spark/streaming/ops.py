@@ -6,6 +6,20 @@ two stream-side operators an ingest pipeline at scale needs beyond
 windowed aggregation: exact dedup of re-delivered events with state the
 engine can reclaim, and enriching a stream against a slowly-changing
 dimension without shuffling the stream.
+
+State plumbing: every persisted state table the ingest maintainers
+write goes through one state writer in two steps. ``_resolve_state``
+does the argument checks, picks the backend (sticky on disk; on a
+fresh root snapshot, or the hive-bucketed swap layout for unfenced
+bucketed state) and guards the layout (manifest key and recorded
+bucket modulus) with filesystem probes only, so a caller resolves all
+of its tables before its first Spark job or write. ``_write_state``
+adds the ``bucket`` column, MERGEs through ``sinks.store.upsert_store``
+(looked up at call time) and writes the modulus sidecar. The two pair
+ingest steps (``near_dedup_batch``, ``image_dedup_batch``) share one
+body, ``_pair_step``, and every Structured Streaming wrapper starts
+through ``streaming.sink._start_batches``, the one foreachBatch runner
+with the fenced-query setup check.
 """
 
 from __future__ import annotations
@@ -13,10 +27,13 @@ from __future__ import annotations
 import os
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .sink import _start_batches
 
 
 def stream_dedup(stream: DataFrame, ts_col: str, watermark: str, key_cols: Sequence[str]) -> DataFrame:
@@ -70,21 +87,64 @@ def run_stream_dedup(
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def _check_state_args(
+class _StateTable(NamedTuple):
+    """One resolved state table (the resolve step's output)."""
+
+    path: str
+    fmt: str  # "snapshot" or "swap"
+    key: list  # merge key without the bucket column
+    buckets: int | None
+    recorded: int | None  # modulus in the _layout_meta.json sidecar
+    txn: tuple[str, int] | None
+
+
+def _bucket(cols: Sequence[str], n: int):
+    """The hash-bucket column of every bucketed state table. It is a
+    pure function of the key, so replays land in the same buckets."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n))
+
+
+def _layout_buckets(path: str) -> int | None:
+    """Hash modulus recorded in a table's ``_layout_meta.json``
+    sidecar; None for flat or legacy tables. Snapshot state keeps the
+    same sidecar as the swap layout: the manifest key records the
+    bucket COLUMN, not the modulus."""
+    import json
+
+    from ..sinks.writer import LAYOUT_META
+
+    try:
+        with open(os.path.join(path, LAYOUT_META)) as fh:
+            return json.load(fh).get("buckets")
+    except (OSError, ValueError):
+        return None
+
+
+def _resolve_state(
+    path: str,
+    key: str | Sequence[str],
     state_buckets: int | None,
     state_format: str | None,
     txn: tuple[str, int] | None,
-) -> None:
-    """Shared argument contract of the persisted-state maintainers.
-    ``state_buckets`` bounds the per-batch merge's write volume to the
-    touched buckets on EITHER backend: the swap backend lays buckets
-    out as hive dirs, the snapshot backend carries ``bucket`` as the
-    leading merge-key column (key-sorted files + zone maps + the exact
-    refine pass prune the rewrite to the files holding touched
-    buckets). Only the snapshot backend has a transaction watermark,
-    so ``txn`` with an EXPLICIT swap request must fail loud rather
-    than silently drop the replay guarantee (VERDICT r15 task #2 — a
-    100 TB corpus's biggest state tables need buckets AND the fence)."""
+) -> _StateTable:
+    """Resolve step of the state writer: argument checks, backend and
+    layout guards for one state table. Filesystem probes only, no
+    Spark job, so a caller resolves every table it writes before its
+    first job or write.
+
+    The backend is sticky on disk. On a fresh root flat state goes to
+    snapshot; bucketed state goes to snapshot when fenced or asked for
+    (``bucket`` leads the merge key, and zone maps plus the refine
+    pass prune the rewrite to files holding touched buckets), else to
+    the hive-bucketed swap layout. Only the snapshot backend has a
+    transaction watermark, so ``txn`` against swap state fails loud
+    rather than silently dropping the replay guarantee. A snapshot
+    table's manifest key and recorded modulus must match the call:
+    either mismatch would NULL-mismatch or re-hash old rows and
+    silently duplicate keys on the next merge."""
+    from ..sinks import snapshot as _snap
+    from ..sinks.store import _resolve
+
     if txn is not None and state_format == "swap":
         raise ValueError(
             "txn fencing requires the snapshot backend; the swap "
@@ -92,32 +152,19 @@ def _check_state_args(
             "state_format='swap' (bucketed state rides the snapshot "
             "format with bucket as the leading merge-key column)"
         )
-
-
-def _bucketed_state_fmt(
-    state_format: str | None, txn: tuple[str, int] | None
-) -> str:
-    """Backend for a BUCKETED state table on a fresh root: snapshot
-    when the caller wants the txn fence or asked for it explicitly,
-    else the historical hive-bucketed swap layout (sticky formats on
-    existing roots are resolved by the store facade as usual)."""
-    if txn is not None or state_format == "snapshot":
-        return "snapshot"
-    return state_format or "swap"
-
-
-def _snapshot_state_key(
-    path: str, base_key: Sequence[str], state_buckets: int | None
-) -> list[str]:
-    """Merge key for a snapshot-format state table: ``bucket`` leads
-    when bucketed. GUARD: an existing table's manifest key must match —
-    merging a bucketed batch into a flat snapshot table (or vice versa)
-    would add the bucket column via schema evolution and NULL-mismatch
-    every old row, silently duplicating keys. Same failure class the
-    swap backend's ``check_partition_layout`` sidecar prevents."""
-    from ..sinks import snapshot as _snap
-
-    want = (["bucket"] + list(base_key)) if state_buckets else list(base_key)
+    keys = [key] if isinstance(key, str) else list(key)
+    fmt = _resolve(
+        path, state_format, "swap" if state_buckets and txn is None else "snapshot"
+    )
+    if fmt == "swap":
+        if txn is not None:  # only an on-disk swap table gets here
+            raise ValueError(
+                f"state table at {path} is on-disk swap format, which has "
+                "no transaction watermark; migrate_to_snapshot it (or point "
+                "the fenced pipeline at a fresh root) to arm the txn fence"
+            )
+        return _StateTable(path, fmt, keys, state_buckets, None, txn)
+    want = (["bucket"] + keys) if state_buckets else keys
     v = _snap.current_version(path)
     if v > 0:
         have = _snap._load_manifest(path, v).get("key", [])
@@ -128,108 +175,88 @@ def _snapshot_state_key(
                 "snapshot state cannot mix under one root (rebuild "
                 "into a fresh root to change the layout)"
             )
-    return want
+    recorded = _layout_buckets(path) if state_buckets else None
+    if recorded is not None and recorded != state_buckets:
+        raise ValueError(
+            f"bucket-count mismatch for snapshot state table "
+            f"{path!r}: created with state_buckets={recorded}, "
+            f"called with {state_buckets}; the modulus is part of "
+            "the layout (rebuild into a fresh root to change it)"
+        )
+    return _StateTable(path, fmt, keys, state_buckets, recorded, txn)
 
 
-def _snapshot_bucket_mod(path: str) -> int | None:
-    """Recorded hash modulus of a bucketed snapshot state table (the
-    same ``_layout_meta.json`` sidecar the swap layout uses — readers
-    ignore underscore files, and the manifest key records the COLUMN
-    but not the modulus). None for legacy/flat tables."""
-    import json
+def _write_state(spark: SparkSession, t: _StateTable, df: DataFrame) -> None:
+    """Write step of the state writer: MERGE ``df`` into the resolved
+    table. Bucketed rows get the ``bucket`` column; swap tables keep
+    the hive ``bucket=`` dirs; snapshot tables merge on the
+    (bucket-led) key with ``cdf=False`` (state is derived, rebuildable
+    and has no change-feed consumers, so the write-time change files
+    would be pure merge tax), and a bucketed one gets its modulus
+    sidecar after the first commit. ``store.upsert_store`` is looked
+    up at call time so wrappers installed on it see every write."""
+    from ..sinks import store
+    from ..sinks.writer import upsert_table, write_layout_meta
 
-    from ..sinks.writer import LAYOUT_META
+    if t.buckets:
+        df = df.withColumn("bucket", _bucket(t.key, t.buckets))
+        if t.fmt == "swap":
+            upsert_table(
+                spark, df, t.path, key=t.key,
+                partition_by=["bucket"], buckets=t.buckets,
+            )
+            return
+    store.upsert_store(
+        spark, df, t.path, key=(["bucket"] if t.buckets else []) + t.key,
+        fmt=t.fmt, txn=t.txn, cdf=False,
+    )
+    if t.buckets and t.recorded is None:
+        write_layout_meta(t.path, [], t.buckets)
 
-    meta = os.path.join(path, LAYOUT_META)
-    if not os.path.exists(meta):
-        return None
-    try:
-        with open(meta) as fh:
-            return json.load(fh).get("buckets")
-    except (OSError, ValueError):
-        return None
 
-
-def _upsert_bucketed_state(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    base_key: str | Sequence[str],
-    bucket_cols: Sequence[str],
-    state_buckets: int,
+def _pair_step(
+    keys: DataFrame,
+    key_path: str,
+    pairs_path: str,
+    pair_fn,
+    score_col: str,
+    return_pairs: bool,
+    state_buckets: int | None,
     state_format: str | None,
     txn: tuple[str, int] | None,
-) -> None:
-    """One bucketed state MERGE through whichever backend owns the
-    root (sticky), with the fresh-root default from
-    ``_bucketed_state_fmt``. The bucket column is always
-    ``pmod(xxhash64(bucket_cols), n)`` — deterministic, so replays land
-    in the same buckets. Snapshot tables merge on ``(bucket, *key)``
-    with key-sorted files (the zone-map/refine prune bounds the rewrite
-    to files holding touched buckets — the manifest-format equivalent
-    of the swap layout's per-dir rewrites, plus the txn fence); swap
-    tables keep the hive ``bucket=`` dirs and reject ``txn`` loudly."""
-    from ..sinks.store import detect_format, upsert_store
-    from ..sinks.writer import upsert_table
+) -> DataFrame | None:
+    """Shared body of the pair-ingest steps: ``keys`` is the batch's
+    (doc_id, fingerprint) frame, ``pair_fn(batch, corpus)`` pairs it
+    against the stored corpus. Pairs are canonicalised to
+    (id_a, id_b) = (least, greatest) so a replay upserts the same rows
+    whichever side drove the pair. The write order is pairs then keys:
+    a crash between the two commits replays with the pairs fenced (or
+    re-merged) and the keys applied, and the replayed pair generation
+    still sees the pre-batch corpus."""
+    from ..sinks import store
 
-    keys = [base_key] if isinstance(base_key, str) else list(base_key)
-    df = df.withColumn(
-        "bucket", F.pmod(F.xxhash64(*bucket_cols), F.lit(state_buckets))
+    pair_t = _resolve_state(
+        pairs_path, ("id_a", "id_b"), state_buckets, state_format, txn
     )
-    fmt = detect_format(path) or _bucketed_state_fmt(state_format, txn)
-    if fmt == "snapshot":
-        key = _snapshot_state_key(path, keys, state_buckets)
-        # the modulus is part of the layout: keys hashed with a
-        # different n land in different (bucket, key) tuples and the
-        # merge silently duplicates them — pin it like the swap
-        # backend's check_partition_layout does
-        recorded = _snapshot_bucket_mod(path)
-        if recorded is not None and recorded != state_buckets:
-            raise ValueError(
-                f"bucket-count mismatch for snapshot state table "
-                f"{path!r}: created with state_buckets={recorded}, "
-                f"called with {state_buckets}; the modulus is part of "
-                "the layout (rebuild into a fresh root to change it)"
-            )
-        upsert_store(
-            spark, df, path, key=key, fmt="snapshot", txn=txn, cdf=False
-        )
-        from ..sinks.writer import write_layout_meta
-
-        if recorded is None:
-            write_layout_meta(path, [], state_buckets)
-        return
-    if txn is not None:
-        raise ValueError(
-            f"state table at {path} is on-disk swap format, which has "
-            "no transaction watermark; migrate_to_snapshot it (or point "
-            "the fenced pipeline at a fresh root) to arm the txn fence"
-        )
-    upsert_table(
-        spark, df, path, key=keys,
-        partition_by=["bucket"], buckets=state_buckets,
+    key_t = _resolve_state(key_path, "doc_id", state_buckets, state_format, txn)
+    spark = keys.sparkSession
+    keys = keys.localCheckpoint()  # eager: feeds the pair join AND the merge
+    if store.store_exists(key_path):
+        corpus = store.read_store(spark, key_path).drop("bucket")
+    else:  # first batch: empty corpus, new-vs-new pairs still form
+        corpus = spark.createDataFrame([], keys.schema)
+    pairs = pair_fn(keys, corpus).select(
+        F.least("id_new", "id_other").alias("id_a"),
+        F.greatest("id_new", "id_other").alias("id_b"),
+        score_col,
     )
-
-
-def _require_fenceable(app_id: str | None, **paths: str | None) -> None:
-    """Setup-time guard for fenced streaming pipelines (ADVICE r15,
-    medium): an ``app_id``-armed query whose state root is an on-disk
-    SWAP table would start, process nothing, and terminate at the FIRST
-    micro-batch with a backend error that obscures the real problem.
-    Fail at query setup instead, naming the offending table. Cheap:
-    one filesystem format probe per path, no Spark job."""
-    if app_id is None:
-        return
-    from ..sinks.store import detect_format
-
-    for name, path in paths.items():
-        if path is not None and detect_format(path) == "swap":
-            raise ValueError(
-                f"app_id={app_id!r} arms the snapshot txn fence, but "
-                f"the {name} table at {path} is an on-disk swap table "
-                "with no transaction watermark; migrate_to_snapshot it "
-                "or point the fenced pipeline at a fresh root"
-            )
+    if return_pairs:
+        # materialize once so component maintenance does not re-run
+        # pair generation; the merge below reuses the checkpoint
+        pairs = pairs.localCheckpoint()
+    _write_state(spark, pair_t, pairs)
+    _write_state(spark, key_t, keys)
+    return pairs if return_pairs else None
 
 
 def near_dedup_batch(
@@ -280,9 +307,9 @@ def near_dedup_batch(
     (whole rewrite wins below ~10M state rows on fixed costs, buckets
     win past the tens of millions and stay O(batch x history/n)). Pick
     n so history/n rows fit one task comfortably (e.g. 4096 buckets for
-    1B signatures). Bucketed state COMPOSES with ``txn`` (VERDICT r15
-    task #2): with a fence (or ``state_format='snapshot'``) the buckets
-    ride the snapshot format as the leading merge-key column — same
+    1B signatures). Bucketed state COMPOSES with ``txn``: with a fence
+    (or ``state_format='snapshot'``) the buckets ride the snapshot
+    format as the leading merge-key column — same
     O(touched buckets) write volume via zone-map/refine pruning, plus
     the per-epoch replay fence; without either, the historical
     hive-bucketed swap layout. The layout is sticky — and ENFORCED: the writer's
@@ -320,61 +347,20 @@ def near_dedup_batch(
     one root.
     """
     from ..operators.dedup import incremental_minhash_pairs, minhash_signatures
-    from ..sinks.store import read_store, store_exists, upsert_store
 
-    _check_state_args(state_buckets, state_format, txn)
-    spark = batch_df.sparkSession
-    sigs = minhash_signatures(
-        batch_df, id_col, text_col, num_perm=num_perm, shingle_n=shingle_n,
-        hash=hash,
-    ).localCheckpoint()  # eager: feeds the pair join AND the table merge
-    if store_exists(signature_path):
-        corpus = read_store(spark, signature_path).drop("bucket")
-    else:  # first batch: empty corpus, new-vs-new pairs still form
-        corpus = spark.createDataFrame([], sigs.schema)
-    pairs = incremental_minhash_pairs(
-        sigs, corpus, num_perm=num_perm, bands=bands, threshold=threshold
-    ).select(
-        F.least("id_new", "id_other").alias("id_a"),
-        F.greatest("id_new", "id_other").alias("id_b"),
-        "est_jaccard",
-    )
-    out_pairs = None
-    if return_pairs:
-        # materialize once so the caller (component maintenance) does
-        # not re-run pair generation; the merges below reuse the same
-        # checkpointed frame
-        pairs = pairs.localCheckpoint()
-        out_pairs = pairs
-    if state_buckets:
-        # write order pairs-then-signatures, same crash-replay argument
-        # as the flat path; with txn the snapshot backend fences each
-        # table independently
-        _upsert_bucketed_state(
-            spark, pairs, pairs_path, ("id_a", "id_b"), ("id_a", "id_b"),
-            state_buckets, state_format, txn,
-        )
-        _upsert_bucketed_state(
-            spark, sigs, signature_path, "doc_id", ("doc_id",),
-            state_buckets, state_format, txn,
-        )
-        return out_pairs
-    # flat-vs-bucketed layout guard for existing snapshot state (the
-    # swap backend's check_partition_layout does the same for hive dirs)
-    _snapshot_state_key(pairs_path, ["id_a", "id_b"], None)
-    _snapshot_state_key(signature_path, ["doc_id"], None)
-    upsert_store(
-        spark, pairs, pairs_path, key=("id_a", "id_b"),
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
-    )
     # minhash_signatures aliases the id column to doc_id, so the
-    # signature-table merge key is the literal "doc_id" regardless of
-    # the caller's id_col
-    upsert_store(
-        spark, sigs, signature_path, key="doc_id",
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
+    # signature-table merge key is the literal "doc_id" whatever id_col is
+    return _pair_step(
+        minhash_signatures(
+            batch_df, id_col, text_col, num_perm=num_perm,
+            shingle_n=shingle_n, hash=hash,
+        ),
+        signature_path, pairs_path,
+        lambda sigs, corpus: incremental_minhash_pairs(
+            sigs, corpus, num_perm=num_perm, bands=bands, threshold=threshold
+        ),
+        "est_jaccard", return_pairs, state_buckets, state_format, txn,
     )
-    return out_pairs
 
 
 def image_dedup_batch(
@@ -413,58 +399,17 @@ def image_dedup_batch(
     state rebuild."""
     from ..operators.dedup import incremental_simhash_pairs
     from ..operators.multimodal import image_dhash
-    from ..sinks.store import read_store, store_exists, upsert_store
 
-    _check_state_args(state_buckets, state_format, txn)
-    spark = batch_df.sparkSession
-    hashes = (
+    return _pair_step(
         image_dhash(batch_df, id_col, payload_col, decode=decode)
         .filter(F.col("dhash").isNotNull())
-        .select("doc_id", F.col("dhash").alias("sh"))
-        .localCheckpoint()  # eager: feeds the pair join AND the merge
+        .select("doc_id", F.col("dhash").alias("sh")),
+        hash_path, pairs_path,
+        lambda hashes, corpus: incremental_simhash_pairs(
+            hashes, corpus, max_hamming=max_hamming, band_bits=band_bits
+        ),
+        "hamming", return_pairs, state_buckets, state_format, txn,
     )
-    if store_exists(hash_path):
-        corpus = read_store(spark, hash_path).drop("bucket")
-    else:
-        corpus = spark.createDataFrame([], hashes.schema)
-    pairs = incremental_simhash_pairs(
-        hashes, corpus, max_hamming=max_hamming, band_bits=band_bits
-    ).select(
-        F.least("id_new", "id_other").alias("id_a"),
-        F.greatest("id_new", "id_other").alias("id_b"),
-        "hamming",
-    )
-    out_pairs = None
-    if return_pairs:
-        # same contract as near_dedup_batch: hand the checkpointed
-        # batch pairs to component maintenance (update_component_state)
-        # without re-running the banded join
-        pairs = pairs.localCheckpoint()
-        out_pairs = pairs
-    if state_buckets:
-        # same bucketed merge-state trade as near_dedup_batch (see its
-        # docstring for the crossover): O(touched buckets) writes,
-        # snapshot-backed (with the txn fence) when fenced or requested
-        _upsert_bucketed_state(
-            spark, pairs, pairs_path, ("id_a", "id_b"), ("id_a", "id_b"),
-            state_buckets, state_format, txn,
-        )
-        _upsert_bucketed_state(
-            spark, hashes, hash_path, "doc_id", ("doc_id",),
-            state_buckets, state_format, txn,
-        )
-        return out_pairs
-    _snapshot_state_key(pairs_path, ["id_a", "id_b"], None)
-    _snapshot_state_key(hash_path, ["doc_id"], None)
-    upsert_store(
-        spark, pairs, pairs_path, key=("id_a", "id_b"),
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
-    )
-    upsert_store(
-        spark, hashes, hash_path, key="doc_id",
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
-    )
-    return out_pairs
 
 
 def stream_near_dedup(
@@ -496,35 +441,23 @@ def stream_near_dedup(
     redelivered epoch (foreachBatch is at-least-once) is a visible
     no-op on both tables instead of merely converging. Composes with
     ``state_buckets`` (bucketed state rides the snapshot format with
-    ``bucket`` leading the merge key — see ``_upsert_bucketed_state``).
+    ``bucket`` leading the merge key — see ``_resolve_state``).
     Requires a durable ``checkpoint_dir`` — same contract and failure
     mode as ``stream_upsert_snapshot`` (a fresh checkpoint restarts
     epochs at 0 and the stale watermark would silently fence real
     data) — and snapshot-format (or fresh) state roots, validated at
     setup so a misconfigured query fails here, not at the first
     micro-batch."""
-    if app_id is not None and not checkpoint_dir:
-        raise ValueError(
-            "app_id (txn fencing) requires a durable checkpoint_dir: "
-            "without one every run restarts epoch_id at 0 and the "
-            "prior watermark silently drops each new batch as a replay"
-        )
-    _require_fenceable(app_id, signatures=signature_path, pairs=pairs_path)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        near_dedup_batch(
+    return _start_batches(
+        stream_df,
+        lambda batch_df, epoch, txn: near_dedup_batch(
             batch_df, signature_path, pairs_path, id_col, text_col,
             num_perm, bands, threshold, shingle_n,
-            state_buckets=state_buckets,
-            txn=(app_id, int(epoch_id)) if app_id is not None else None,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+            state_buckets=state_buckets, txn=txn,
+        ),
+        query_name, checkpoint_dir, available_now,
+        app_id=app_id, signatures=signature_path, pairs=pairs_path,
+    )
 
 
 def quality_score_batch(
@@ -550,20 +483,10 @@ def quality_score_batch(
     defaults to a SNAPSHOT table (sticky on existing swap tables);
     ``txn`` fences redelivered batches into visible no-ops."""
     from ..operators.text import trigram_lm_scores
-    from ..sinks.store import upsert_store
 
-    _check_state_args(state_buckets, state_format, txn)
-    scored = trigram_lm_scores(batch_df, lm, id_col, text_col)
-    if state_buckets:
-        _upsert_bucketed_state(
-            batch_df.sparkSession, scored, scores_path, id_col, (id_col,),
-            state_buckets, state_format, txn,
-        )
-        return
-    _snapshot_state_key(scores_path, [id_col], None)
-    upsert_store(
-        batch_df.sparkSession, scored, scores_path, key=id_col,
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
+    t = _resolve_state(scores_path, id_col, state_buckets, state_format, txn)
+    _write_state(
+        batch_df.sparkSession, t, trigram_lm_scores(batch_df, lm, id_col, text_col)
     )
 
 
@@ -586,26 +509,14 @@ def stream_quality_scores(
     ``app_id`` arms the snapshot txn fence per epoch (same
     durable-checkpoint + fenceable-state-root contract as
     ``stream_near_dedup``, both validated at setup)."""
-    if app_id is not None and not checkpoint_dir:
-        raise ValueError(
-            "app_id (txn fencing) requires a durable checkpoint_dir: "
-            "without one every run restarts epoch_id at 0 and the "
-            "prior watermark silently drops each new batch as a replay"
-        )
-    _require_fenceable(app_id, scores=scores_path)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        quality_score_batch(
-            batch_df, lm, scores_path, id_col, text_col,
-            txn=(app_id, int(epoch_id)) if app_id is not None else None,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(
+        stream_df,
+        lambda batch_df, epoch, txn: quality_score_batch(
+            batch_df, lm, scores_path, id_col, text_col, txn=txn
+        ),
+        query_name, checkpoint_dir, available_now,
+        app_id=app_id, scores=scores_path,
+    )
 
 
 _SEEN_BUCKETS = 256  # partition count of the content-hash state table
@@ -863,12 +774,12 @@ def bm25_ingest_batch(
     tf = (
         postings.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(state_buckets)))
+        .withColumn("bucket", _bucket(["term"], state_buckets))
         .localCheckpoint()  # feeds the tf merge AND the dfreq fold
     )
     doclen = batch.select(
         "doc_id", token_count("_text").cast("long").alias("dl")
-    ).withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(state_buckets)))
+    ).withColumn("bucket", _bucket(["doc_id"], state_buckets))
     upsert_table(
         spark, tf, tf_p, key=("doc_id", "term"),
         partition_by=["bucket"], buckets=state_buckets,
@@ -911,7 +822,7 @@ def bm25_query_index(
     buckets = [
         r.b
         for r in qterms.select(
-            F.pmod(F.xxhash64("term"), F.lit(state_buckets)).alias("b")
+            _bucket(["term"], state_buckets).alias("b")
         ).distinct().collect()
     ]
     tf = (
@@ -1144,10 +1055,15 @@ def embedding_ingest_batch(
     keep their list-/bucket-partitioned swap layouts — their partition
     pruning IS the query speedup, and their replays are idempotent by
     deterministic assignment."""
-    from ..sinks.store import upsert_store
     from ..sinks.writer import table_exists
 
-    _check_state_args(state_buckets, state_format, txn)
+    # guard the flat/bucketed state tables before the index writes
+    if pairs_path is not None:
+        pairs_t = _resolve_state(
+            pairs_path, ("id_a", "id_b"), state_buckets, state_format, txn
+        )
+    if components_path is not None:
+        _resolve_state(components_path, "doc_id", state_buckets, state_format, txn)
     spark = batch_df.sparkSession
     ivf_path = os.path.join(index_root, "ivf")
     pairs = None
@@ -1169,17 +1085,7 @@ def embedding_ingest_batch(
             state_buckets=state_buckets or 64,
         )
     if pairs_path is not None:
-        if state_buckets:
-            _upsert_bucketed_state(
-                spark, pairs, pairs_path, ("id_a", "id_b"), ("id_a", "id_b"),
-                state_buckets, state_format, txn,
-            )
-        else:
-            _snapshot_state_key(pairs_path, ["id_a", "id_b"], None)
-            upsert_store(
-                spark, pairs, pairs_path, key=("id_a", "id_b"),
-                fmt=state_format, default="snapshot", txn=txn, cdf=False,
-            )
+        _write_state(spark, pairs_t, pairs)
     if components_path is not None:
         update_component_state(
             pairs, components_path, state_buckets=state_buckets,
@@ -1243,9 +1149,7 @@ def pq_ingest_batch(
         encoded = encoded.join(
             batch_df.select(F.col(id_col), F.col(vec_col)), id_col
         )
-    encoded = encoded.withColumn(
-        "bucket", F.pmod(F.xxhash64(id_col), F.lit(state_buckets))
-    )
+    encoded = encoded.withColumn("bucket", _bucket([id_col], state_buckets))
     upsert_table(
         spark, encoded, codes_p, key=id_col,
         partition_by=["bucket"], buckets=state_buckets,
@@ -1550,7 +1454,7 @@ def rebuild_component_labels(
         # the rebuild is a full OVERWRITE, so it may legitimately
         # re-lay the table out: pass state_buckets to (re)bucket the
         # labels, omit it for flat — later incremental merges must
-        # then match (the maintainer's _snapshot_state_key guard)
+        # then match (the state writer's _resolve_state guard)
         skey = (["bucket", "doc_id"] if state_buckets else ["doc_id"])
         if not store_exists(pairs_path):
             if os.path.exists(labels_path):
@@ -1559,9 +1463,7 @@ def rebuild_component_labels(
         pairs = read_store(spark, pairs_path).drop("bucket")
         labels = connected_components(pairs, id_a=id_a, id_b=id_b)
         if state_buckets:
-            labels = labels.withColumn(
-                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(state_buckets))
-            )
+            labels = labels.withColumn("bucket", _bucket(["doc_id"], state_buckets))
         # cdf=False like every state table: derived, rebuildable, no
         # change-feed consumers — skip the write-time sidecar tax
         _snap.write_snapshot(spark, labels, labels_path, key=skey, cdf=False)
@@ -1588,9 +1490,7 @@ def rebuild_component_labels(
     pairs = read_table(spark, pairs_path, merge_schema=True)
     labels = connected_components(pairs, id_a=id_a, id_b=id_b)
     if state_buckets:
-        labels = labels.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(state_buckets))
-        )
+        labels = labels.withColumn("bucket", _bucket(["doc_id"], state_buckets))
     if table_exists(labels_path):
         if pby:
             swapped = _rewrite_partitions(
@@ -1670,128 +1570,62 @@ def update_component_state(
     there, and ``txn=(app_id, version)`` turns a redelivered batch
     into a visible no-op before ``incremental_components`` would even
     compute an empty delta."""
-    import os
     import shutil
 
     from ..operators.dedup import connected_components, incremental_components
-    from ..sinks.store import detect_format, read_store, upsert_store
-    from ..sinks.writer import read_table, table_exists, upsert_table, write_table
-    from ..sinks.writer import check_partition_layout, write_layout_meta
+    from ..sinks import store
+    from ..sinks.writer import check_partition_layout, table_exists
 
-    _check_state_args(state_buckets, state_format, txn)
+    t = _resolve_state(labels_path, "doc_id", state_buckets, state_format, txn)
     spark = new_pairs.sparkSession
-    fmt = detect_format(labels_path) or state_format or (
-        _bucketed_state_fmt(state_format, txn) if state_buckets else "snapshot"
-    )
-    if fmt == "snapshot":
-        # bucketed snapshot labels merge on (bucket, doc_id): the
-        # bucket is a pure function of doc_id, so key equality is
-        # unchanged and the zone-map/refine prune bounds the rewrite
-        # to files holding touched buckets (VERDICT r15 task #2)
-        skey = _snapshot_state_key(labels_path, ["doc_id"], state_buckets)
-        if state_buckets:
-            recorded = _snapshot_bucket_mod(labels_path)
-            if recorded is not None and recorded != state_buckets:
-                raise ValueError(
-                    f"bucket-count mismatch for snapshot labels table "
-                    f"{labels_path!r}: created with "
-                    f"state_buckets={recorded}, called with "
-                    f"{state_buckets} (rebuild_component_labels "
-                    "re-lays the table out)"
-                )
-
-        def _bsnap(df: DataFrame) -> DataFrame:
-            if not state_buckets:
-                return df
-            return df.withColumn(
-                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(state_buckets))
-            )
-
+    journal = os.path.join(labels_path, "_changes_journal")
+    if t.fmt == "snapshot":
         if txn is not None:
             from ..sinks.snapshot import txn_version
 
             applied = txn_version(labels_path, txn[0])
             if applied is not None and applied >= txn[1]:
                 return  # fenced replay: skip the label read + delta
-        if detect_format(labels_path) is None:
-            labels = connected_components(new_pairs)
-            upsert_store(
-                spark, _bsnap(labels), labels_path, key=skey,
-                fmt="snapshot", txn=txn, cdf=False,
+    else:
+        check_partition_layout(
+            labels_path, ["bucket"] if state_buckets else [], state_buckets
+        )
+        # recovery: a surviving journal means the previous merge crashed
+        # mid-swap — re-apply its full change set (idempotent), THEN read
+        if os.path.exists(journal + ".tmp"):  # crashed mid-journal-write
+            shutil.rmtree(journal + ".tmp")
+        if table_exists(journal):
+            _write_state(
+                spark, t, spark.read.parquet(journal).select("doc_id", "component_id")
             )
-            if state_buckets:
-                write_layout_meta(labels_path, [], state_buckets)
-            return
-        labels = read_store(spark, labels_path).drop("bucket")
-        changed = incremental_components(labels, new_pairs, changed_only=True)
-        # one atomic manifest commit — no journal needed; an empty
-        # delta still commits when fenced so the watermark advances
-        # (a later replay then skips the label read + delta compute)
-        upsert_store(
-            spark, _bsnap(changed.select("doc_id", "component_id")),
-            labels_path, key=skey, fmt="snapshot", txn=txn, cdf=False,
-        )
-        if state_buckets and _snapshot_bucket_mod(labels_path) is None:
-            write_layout_meta(labels_path, [], state_buckets)  # legacy heal
+            shutil.rmtree(journal)
+        elif os.path.exists(journal):  # empty leftover dir
+            shutil.rmtree(journal)
+    if not store.store_exists(labels_path):
+        _write_state(spark, t, connected_components(new_pairs))
         return
-    if txn is not None:
-        raise ValueError(
-            f"labels table at {labels_path} is on-disk swap format, "
-            "which has no transaction watermark; migrate_to_snapshot "
-            "it (or use a fresh root) to arm the txn fence"
-        )
-    pby = ["bucket"] if state_buckets else []
-    check_partition_layout(labels_path, pby, state_buckets)
-
-    def _bucketed(df: DataFrame) -> DataFrame:
-        if not state_buckets:
-            return df
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(state_buckets))
-        )
-
-    journal = os.path.join(labels_path, "_changes_journal")
-
-    def _merge_delta(delta: DataFrame) -> None:
-        upsert_table(
-            spark, _bucketed(delta), labels_path, key="doc_id",
-            partition_by=pby, buckets=state_buckets,
-        )
-
-    # recovery: a surviving journal means the previous merge crashed
-    # mid-swap — re-apply its full change set (idempotent), THEN read
-    if os.path.exists(journal + ".tmp"):  # crashed mid-journal-write
-        shutil.rmtree(journal + ".tmp")
-    if table_exists(journal):
-        _merge_delta(spark.read.parquet(journal).select("doc_id", "component_id"))
-        shutil.rmtree(journal)
-    elif os.path.exists(journal):  # empty leftover dir
-        shutil.rmtree(journal)
-
-    if not table_exists(labels_path):
-        labels = connected_components(new_pairs)
-        write_table(_bucketed(labels), labels_path, partition_by=pby)
-        write_layout_meta(labels_path, pby, state_buckets)
-        return
-    labels = read_table(spark, labels_path).drop("bucket")
-    changed = incremental_components(labels, new_pairs, changed_only=True)
-    if not state_buckets:
-        # unpartitioned: the whole-table swap is already atomic (one
-        # staged rename pair + heal), so no journal is needed — and it
-        # would not survive the swap anyway (it lives inside the dir)
-        _merge_delta(changed)
+    labels = store.read_store(spark, labels_path).drop("bucket")
+    changed = incremental_components(labels, new_pairs, changed_only=True).select(
+        "doc_id", "component_id"
+    )
+    if t.fmt == "snapshot" or not state_buckets:
+        # one atomic commit (a manifest link, or the unpartitioned
+        # swap's staged whole-table rename, which a journal inside the
+        # dir would not survive anyway), so no journal. An empty fenced
+        # delta still commits so the watermark advances.
+        _write_state(spark, t, changed)
         return
     # journal the delta atomically (write-then-rename), apply, clear.
     # The journal write IS the materialization of `changed`; the merge
     # re-reads it, so the incremental computation runs exactly once.
-    changed.select("doc_id", "component_id").write.mode("overwrite").parquet(
-        journal + ".tmp"
-    )
+    changed.write.mode("overwrite").parquet(journal + ".tmp")
     if not table_exists(journal + ".tmp"):  # empty delta (e.g. replay)
         shutil.rmtree(journal + ".tmp", ignore_errors=True)
         return
     os.rename(journal + ".tmp", journal)
-    _merge_delta(spark.read.parquet(journal).select("doc_id", "component_id"))
+    _write_state(
+        spark, t, spark.read.parquet(journal).select("doc_id", "component_id")
+    )
     shutil.rmtree(journal)
 
 
@@ -2063,36 +1897,24 @@ def stream_corpus_ingest(
     ``stream_upsert_snapshot``, and fenceable (snapshot or fresh)
     state roots — both validated HERE at setup, so a misconfigured
     long-running query fails before it starts instead of dying at the
-    first micro-batch with a backend error (ADVICE r15, medium)."""
-    if app_id is not None and not checkpoint_dir:
-        raise ValueError(
-            "app_id (txn fencing) requires a durable checkpoint_dir: "
-            "without one every run restarts epoch_id at 0 and the "
-            "prior watermark silently drops each new batch as a replay"
-        )
-    _require_fenceable(
-        app_id, corpus=corpus_path, signatures=signature_path,
-        pairs=pairs_path, scores=scores_path, components=components_path,
-    )
+    first micro-batch with a backend error."""
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, epoch: int, txn) -> None:
         corpus_ingest_batch(
             batch_df, lm, corpus_path, signature_path, pairs_path, scores_path,
             id_col, text_col, gate_kwargs=gate_kwargs, pii_types=pii_types,
             bloom_path=bloom_path, hashes_path=hashes_path,
             stats_path=stats_path, stats_key=stats_key,
-            stats_buckets=stats_buckets, batch_id=int(epoch_id),
-            components_path=components_path,
-            txn=(app_id, int(epoch_id)) if app_id is not None else None,
+            stats_buckets=stats_buckets, batch_id=epoch,
+            components_path=components_path, txn=txn,
             **near_dedup_kwargs,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(
+        stream_df, process, query_name, checkpoint_dir, available_now,
+        app_id=app_id, corpus=corpus_path, signatures=signature_path,
+        pairs=pairs_path, scores=scores_path, components=components_path,
+    )
 
 
 def interval_join_streams(
@@ -2152,16 +1974,12 @@ def classifier_score_batch(
     including the snapshot default + ``txn`` fence.
     """
     from ..operators.quality_model import quality_model_scores
-    from ..sinks.store import upsert_store
 
+    t = _resolve_state(scores_path, id_col, None, state_format, txn)
     scored = quality_model_scores(
         batch_df, weights, intercept, id_col, text_col, n_features
     ).select(id_col, "quality_logit", "quality_prob")
-    _snapshot_state_key(scores_path, [id_col], None)
-    upsert_store(
-        batch_df.sparkSession, scored, scores_path, key=id_col,
-        fmt=state_format, default="snapshot", txn=txn, cdf=False,
-    )
+    _write_state(batch_df.sparkSession, t, scored)
 
 
 def stream_classifier_scores(
@@ -2181,18 +1999,14 @@ def stream_classifier_scores(
     never refits in-stream (version it with the corpus snapshot);
     per-batch cost is one explode + broadcast weight join over the
     batch only."""
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        classifier_score_batch(
-            batch_df, weights, intercept, scores_path, id_col, text_col, n_features
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(
+        stream_df,
+        lambda batch_df, epoch, txn: classifier_score_batch(
+            batch_df, weights, intercept, scores_path, id_col, text_col,
+            n_features,
+        ),
+        query_name, checkpoint_dir, available_now,
+    )
 
 
 def stream_cdc_apply(
@@ -2227,7 +2041,7 @@ def stream_cdc_apply(
     if fmt not in ("swap", "snapshot"):
         raise ValueError(f"unknown cdc state format {fmt!r}")
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, epoch: int, txn) -> None:
         if fmt == "snapshot":
             cdc_apply_snapshot(
                 batch_df.sparkSession, batch_df, path, keys, seq_col,
@@ -2239,12 +2053,9 @@ def stream_cdc_apply(
                 op_col=op_col, n_buckets=n_buckets,
             )
 
-    writer = stream_df.writeStream.foreachBatch(process).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(
+        stream_df, process, query_name, checkpoint_dir, available_now
+    )
 
 
 def takedown_batch(
@@ -2319,6 +2130,8 @@ def takedown_batch(
     keeps the pre-takedown version until vacuum); swap tables keep the
     partition-scoped rewrite below.
     """
+    import shutil
+
     from ..sinks import snapshot as _snap
     from ..sinks.store import is_snapshot_table
     from ..sinks.writer import (
@@ -2329,9 +2142,6 @@ def takedown_batch(
         read_table,
         table_exists,
     )
-
-    import os as _os
-    import shutil as _shutil
 
     spark = ids_df.sparkSession
     ids = ids_df.select(id_col).distinct().localCheckpoint()
@@ -2341,143 +2151,27 @@ def takedown_batch(
         p = uri.split("://", 1)[-1] if "://" in uri else uri
         return p[5:] if p.startswith("file:") else p
 
-    if is_snapshot_table(corpus_path):
-        corpus = _snap.read_snapshot(spark, corpus_path)
-        doomed = corpus.join(ids, id_col, "left_semi").localCheckpoint()
-        removed["corpus"] = doomed.count()
-        if removed["corpus"]:
-            _snap.delete_snapshot(spark, ids, corpus_path, id_col)
-        survivors = _snap.read_snapshot(spark, corpus_path)
-        return _takedown_rest(
-            spark, ids, doomed, survivors, removed,
-            signature_path, pairs_path, scores_path, stats_path,
-            hashes_path, id_col, text_col, stats_key,
-            extra_id_tables, extra_pair_tables,
-        )
-    # heal BEFORE any layout inference or read: a partition leaf stuck
-    # mid-swap reads as absent (its rows would survive the takedown
-    # invisibly), and an orphaned .swap-old dir must never be mistaken
-    # for layout (hive_partition_cols skips dot-dirs, heal removes them)
-    heal_partition_swaps(corpus_path)
-
-    corpus_pcols = list(corpus_partition_by) or hive_partition_cols(corpus_path)
-    corpus = read_table(spark, corpus_path, merge_schema=True)
-    # doomed is O(removed rows) — the only frame this step materializes.
-    # _file rides along so stale-dir cleanup below can name the exact
-    # partition dirs doomed rows live in without re-encoding hive
-    # values (input_file_name is the on-disk truth, whatever the
-    # partition column types or escaping).
-    doomed = (
-        corpus.withColumn("_file", F.input_file_name())
-        .join(ids, id_col, "left_semi")
-        .localCheckpoint()
-    )
-    removed["corpus"] = doomed.count()
-    if corpus_pcols:
-        # partition-scoped removal: only the dirs that actually hold
-        # doomed rows are read for the anti-join and rewritten — at
-        # corpus scale a takedown touches O(affected partitions), not
-        # O(corpus) write volume (the whole-table _rewrite would copy
-        # 100 TB to delete a handful of documents)
-        affected = doomed.select(*corpus_pcols).distinct()
-        keep_aff = (
-            corpus.join(F.broadcast(affected), corpus_pcols, "left_semi")
-            .join(ids, id_col, "left_anti")
-        )
-        swapped = _rewrite_partitions(
-            spark, keep_aff.repartition(*corpus_pcols), corpus_path, corpus_pcols
-        )
-        # an affected partition whose LAST rows were doomed produces no
-        # output dir, so the swap leaves its stale files — delete them
-        # (dir names come from doomed's input files, not re-formatting)
-        root = _os.path.abspath(corpus_path.rstrip("/"))
-        doomed_dirs = {
-            _os.path.relpath(_os.path.dirname(_local(r._file)), root)
-            for r in doomed.select("_file").distinct().collect()
-        }
-        for rel in sorted(doomed_dirs - set(swapped)):
-            stale = _os.path.join(root, rel)
-            if _os.path.isdir(stale):
-                _shutil.rmtree(stale)
-    else:
-        # unpartitioned: whole-table write-temp-then-swap. survivors is
-        # consumed lazily — the temp write happens while the old files
-        # still exist, so no O(corpus) checkpoint is needed
-        _rewrite(spark, corpus.join(ids, id_col, "left_anti"), corpus_path, ())
-    doomed = doomed.drop("_file")
-    # post-swap view of the surviving corpus for the hash/stats steps
-    # below (a pre-swap lazy frame would re-read replaced files). A
-    # takedown that doomed EVERY row can leave the corpus absent (zero
-    # parquet files) — that's a valid outcome, not a crash: fall back
-    # to an empty frame with the pre-swap schema.
-    if table_exists(corpus_path):
-        survivors = read_table(spark, corpus_path, merge_schema=True)
-    else:
-        survivors = spark.createDataFrame([], corpus.schema)
-    return _takedown_rest(
-        spark, ids, doomed, survivors, removed,
-        signature_path, pairs_path, scores_path, stats_path,
-        hashes_path, id_col, text_col, stats_key,
-        extra_id_tables, extra_pair_tables,
-    )
-
-
-def _takedown_rest(
-    spark,
-    ids: DataFrame,
-    doomed: DataFrame,
-    survivors: DataFrame,
-    removed: dict,
-    signature_path: str | None,
-    pairs_path: str | None,
-    scores_path: str | None,
-    stats_path: str | None,
-    hashes_path: str | None,
-    id_col: str,
-    text_col: str,
-    stats_key: str,
-    extra_id_tables: dict | None,
-    extra_pair_tables: dict | None,
-) -> dict:
-    """Everything after the corpus step of ``takedown_batch``, shared
-    by the swap- and snapshot-corpus entry paths: each derived state
-    table dispatches on ITS OWN on-disk format (a mixed estate —
-    snapshot signatures beside a bucketed seen-hash table — is the
-    normal shape after the flat-state default moved to snapshot)."""
-    from ..sinks import snapshot as _snap
-    from ..sinks.store import is_snapshot_table
-    from ..sinks.writer import (
-        _rewrite,
-        _rewrite_partitions,
-        heal_partition_swaps,
-        hive_partition_cols,
-        read_table,
-        table_exists,
-    )
-
-    import os as _os
-    import shutil as _shutil
-
-    def _local(uri: str) -> str:
-        p = uri.split("://", 1)[-1] if "://" in uri else uri
-        return p[5:] if p.startswith("file:") else p
-
-    def _scoped_drop(path: str, pcols: list, split, label: str) -> None:
-        """Shared partition-scoped row removal: ``split(t)`` returns
-        the ``(matched, kept)`` pair of lazy frames over table ``t``,
-        built from broadcast semi/anti joins against the ids frame
-        (never an isin() literal — see the comment at ``_id_split``).
+    def _scoped_drop(path: str, pcols: list, split, label: str) -> DataFrame:
+        """Partition-scoped row removal from a swap table; returns the
+        removed rows, materialized before any rewrite. ``split(t)``
+        returns the ``(matched, kept)`` pair of lazy frames over table
+        ``t``, built from broadcast semi/anti joins against the ids
+        frame (never an isin() literal — see ``_id_split``).
         Partitioned tables rewrite only the dirs holding doomed rows
-        (same input_file_name mechanism as the corpus above, including
-        emptied-dir deletion); unpartitioned tables take the
-        whole-table write-temp-then-swap."""
+        and delete a dir whose last rows were doomed: the swap leaves
+        an emptied partition's stale files, and the dir names come
+        from the matched rows' input files, the on-disk truth whatever
+        the partition column types or escaping. Unpartitioned tables
+        take the whole-table write-temp-then-swap, with the kept rows
+        consumed lazily: the temp write runs while the old files still
+        exist, so no O(table) checkpoint is needed."""
         t = read_table(spark, path, merge_schema=True)
-        if pcols:
-            tf = t.withColumn("_file", F.input_file_name())
-            matched = split(tf)[0].localCheckpoint()
-            removed[label] = matched.count()
-            if removed[label] == 0:
-                return
+        tf = t.withColumn("_file", F.input_file_name())
+        matched = split(tf)[0].localCheckpoint()
+        removed[label] = matched.count()
+        if removed[label] and not pcols:
+            _rewrite(spark, split(t)[1], path, ())
+        elif removed[label]:
             aff = matched.select(*pcols).distinct()
             keep = split(
                 tf.join(F.broadcast(aff), pcols, "left_semi")
@@ -2485,19 +2179,16 @@ def _takedown_rest(
             swapped = _rewrite_partitions(
                 spark, keep.repartition(*pcols), path, pcols
             )
-            root = _os.path.abspath(path.rstrip("/"))
+            root = os.path.abspath(path.rstrip("/"))
             dirs = {
-                _os.path.relpath(_os.path.dirname(_local(r._file)), root)
+                os.path.relpath(os.path.dirname(_local(r._file)), root)
                 for r in matched.select("_file").distinct().collect()
             }
             for rel in sorted(dirs - set(swapped)):
-                stale = _os.path.join(root, rel)
-                if _os.path.isdir(stale):
-                    _shutil.rmtree(stale)
-        else:
-            keep = split(t)[1].localCheckpoint()
-            removed[label] = t.count() - keep.count()
-            _rewrite(spark, keep, path, ())
+                stale = os.path.join(root, rel)
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
+        return matched.drop("_file")
 
     # doom detection stays JOIN-based against the (small, checkpointed)
     # ids frame — broadcast left_semi for matched rows, left_anti for
@@ -2517,6 +2208,37 @@ def _takedown_rest(
 
         return split
 
+    if is_snapshot_table(corpus_path):
+        doomed = (
+            _snap.read_snapshot(spark, corpus_path)
+            .join(ids, id_col, "left_semi")
+            .localCheckpoint()
+        )
+        removed["corpus"] = doomed.count()
+        if removed["corpus"]:
+            _snap.delete_snapshot(spark, ids, corpus_path, id_col)
+        survivors = _snap.read_snapshot(spark, corpus_path)
+    else:
+        # heal BEFORE any layout inference or read: a partition leaf
+        # stuck mid-swap reads as absent (its rows would survive the
+        # takedown invisibly), and an orphaned .swap-old dir must never
+        # be mistaken for layout (hive_partition_cols skips dot-dirs,
+        # heal removes them)
+        heal_partition_swaps(corpus_path)
+        doomed = _scoped_drop(
+            corpus_path,
+            list(corpus_partition_by) or hive_partition_cols(corpus_path),
+            _id_split(id_col), "corpus",
+        )
+        # post-swap view of the surviving corpus for the hash/stats
+        # steps (a pre-swap lazy frame would re-read replaced files). A
+        # takedown that doomed EVERY row can leave the corpus absent —
+        # a valid outcome: fall back to an empty frame
+        if table_exists(corpus_path):
+            survivors = read_table(spark, corpus_path, merge_schema=True)
+        else:
+            survivors = spark.createDataFrame([], doomed.schema)
+
     def _bucketed_doom(path: str, doomed_keys: DataFrame, key_cols):
         """(doomed frame, delete key) for a snapshot state table:
         bucket-led tables get the bucket DERIVED onto the doomed frame
@@ -2530,13 +2252,11 @@ def _takedown_rest(
         key_list = list(key_cols) if not isinstance(key_cols, str) else [key_cols]
         if m.get("key") != ["bucket"] + key_list:
             return doomed_keys, key_cols
-        mod = _snapshot_bucket_mod(path)
+        mod = _layout_buckets(path)
         if mod is None:
             return doomed_keys, key_cols
         return (
-            doomed_keys.withColumn(
-                "bucket", F.pmod(F.xxhash64(*key_list), F.lit(mod))
-            ),
+            doomed_keys.withColumn("bucket", _bucket(key_list, mod)),
             tuple(["bucket"] + key_list),
         )
 
@@ -2561,7 +2281,7 @@ def _takedown_rest(
         # mid-merge) is part of the table's state: its rows re-apply on
         # the next merge, so doomed ids must be filtered out of it too
         # or the takedown is silently undone for those rows
-        journal = _os.path.join(path, "_changes_journal")
+        journal = os.path.join(path, "_changes_journal")
         if table_exists(journal):
             jdf = read_table(spark, journal)
             kept = jdf.join(
@@ -2569,7 +2289,7 @@ def _takedown_rest(
             ).localCheckpoint()
             if kept.count() == jdf.count():
                 return  # journal untouched by this takedown
-            _shutil.rmtree(journal)
+            shutil.rmtree(journal)
             if kept.count() > 0:
                 kept.write.parquet(journal)
 
@@ -2656,15 +2376,12 @@ def _takedown_rest(
             # so its stale dir (still holding the dead hash) must be
             # deleted explicitly — deletion is the one state mutation
             # that can empty a partition (folds and CDC merges cannot)
-            import os as _os
-            import shutil as _shutil
-
             alive = {r.bucket for r in keep.select("bucket").distinct().collect()}
             for b in buckets:
                 if b not in alive:
-                    d = _os.path.join(hashes_path, f"bucket={b}")
-                    if _os.path.isdir(d):
-                        _shutil.rmtree(d)
+                    d = os.path.join(hashes_path, f"bucket={b}")
+                    if os.path.isdir(d):
+                        shutil.rmtree(d)
         else:
             removed["hashes"] = 0
 

@@ -385,3 +385,41 @@ def test_takedown_on_bucketed_snapshot_state_prunes_and_keeps_layout(
         sig_p, pair_p, state_buckets=4, txn=("t", 2), **KW,
     )
     assert read_store(spark, sig_p).count() == 3
+
+
+def test_mistyped_state_format_raises_before_any_job(spark, tmp_path):
+    """A mistyped ``state_format`` fails the state writer's resolve
+    step before any Spark job and before anything is written. The
+    bucketed near-dedup path and the component maintainer used to
+    fall through to the swap backend; the flat path raised only after
+    the eager signature checkpoint."""
+    import os
+
+    from nba_data_pipeline_spark.streaming.ops import (
+        near_dedup_batch,
+        update_component_state,
+    )
+
+    docs = _docs(spark, [(1, BASE)])
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    sig_p, pair_p, labels_p = (str(tmp_path / n) for n in ("s", "p", "l"))
+    calls = (
+        lambda: near_dedup_batch(
+            docs, sig_p, pair_p, state_buckets=4, state_format="snapshots", **KW
+        ),
+        lambda: update_component_state(pairs, labels_p, state_format="snapshots"),
+        lambda: near_dedup_batch(
+            docs, sig_p, pair_p, state_format="snapshots", **KW
+        ),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("mistyped-state-format", "no job expected")
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match="unknown table format"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("mistyped-state-format") == []
+    assert not any(os.path.exists(p) for p in (sig_p, pair_p, labels_p))

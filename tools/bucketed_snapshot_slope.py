@@ -1,6 +1,5 @@
-"""Flatness evidence for BUCKETED SNAPSHOT state merges (round 16,
-`streaming/ops.py _upsert_bucketed_state` — the fenced path VERDICT
-r15 task #2 added).
+"""Flatness evidence for BUCKETED SNAPSHOT state merges (the state
+writer in `streaming/ops.py`: `_resolve_state` then `_write_state`).
 
 The 100-TB claim: merging a batch into a bucket-led snapshot state
 table rewrites only the files holding touched buckets — the zone-map
@@ -52,7 +51,7 @@ def main() -> None:
 
     from nba_data_pipeline_spark.core.session import get_session
     from nba_data_pipeline_spark.sinks import snapshot as S
-    from nba_data_pipeline_spark.streaming.ops import _upsert_bucketed_state
+    from nba_data_pipeline_spark.streaming.ops import _resolve_state, _write_state
 
     spark = get_session("bucketed-snapshot-slope")
     results = []
@@ -93,9 +92,10 @@ def main() -> None:
                     )
                     t0 = time.time()
                     if kind == "bucketed":
-                        _upsert_bucketed_state(
-                            spark, b, t, "doc_id", ("doc_id",), BUCKETS,
-                            "snapshot", None,
+                        _write_state(
+                            spark,
+                            _resolve_state(t, "doc_id", BUCKETS, "snapshot", None),
+                            b,
                         )
                     else:
                         S.upsert_snapshot(spark, b, t, "doc_id", cdf=False)
