@@ -21,7 +21,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.gate import floor, fresh_floor  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Per-query minimum of three back-to-back runs: single-shot numbers
+# on this host swing ~40% with phantom load (same commit measured
+# 28.5s and 36.6s hours apart), and the min is the standard way to
+# measure the plan rather than the scheduler jitter. Two runs
+# proved insufficient: round 5 reported +11%/+12% "regressions" on
+# minhash_lsh_pairs/ngram_jaccard that a min-of-4 re-measure showed
+# were pure jitter (both at or below their round-3 minima).
+# Reported transparently via runs_per_query.
+RUNS = 3
+FLOOR_RUNS = 3
+CANARY_RUNS = 2
 
 HEADLINE = [
     "tpch_q1",
@@ -133,30 +147,14 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         print(f"# fixture warmup failed: {exc}", file=sys.stderr)
 
-    # Per-query minimum of three back-to-back runs: single-shot numbers
-    # on this host swing ~40% with phantom load (same commit measured
-    # 28.5s and 36.6s hours apart), and the min is the standard way to
-    # measure the plan rather than the scheduler jitter. Two runs
-    # proved insufficient: round 5 reported +11%/+12% "regressions" on
-    # minhash_lsh_pairs/ngram_jaccard that a min-of-4 re-measure showed
-    # were pure jitter (both at or below their round-3 minima).
-    # Reported transparently via runs_per_query.
-    RUNS = 3
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in HEADLINE:
-        fn = qs[name]
-        best, n = None, 0
         # per-query fault isolation: one broken query records an error
         # entry and the run keeps timing the rest (round-4 lesson — a
         # single AnalysisException must never zero the whole bench)
         try:
-            for _ in range(RUNS):
-                t0 = time.time()
-                df = fn(spark, SF_DIR)
-                n = df.count()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+            best, n = floor(qs[name], spark, SF_DIR, RUNS, warm=False)
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
@@ -187,9 +185,6 @@ def main() -> None:
     canary_series: list[dict] = []
     CANARY_EVERY = int(os.environ.get("SPARK_GRAFT_CANARY_EVERY", "10"))
     if os.environ.get("SPARK_GRAFT_FLOORS", "1") != "0":
-        from nba_data_pipeline_spark.core.session import get_session
-
-        FLOOR_RUNS = 3
         floor_runs = FLOOR_RUNS
         budget = float(os.environ.get("SPARK_GRAFT_FLOOR_BUDGET", "1500"))
         t_floor0 = time.time()
@@ -210,21 +205,13 @@ def main() -> None:
         CANARY = HEADLINE[0]
 
         def _canary_floor(after_n: int) -> None:
-            cspark = get_session("bench-canary")
             try:
-                cfn = qs[CANARY]
-                cfn(cspark, SF_DIR).count()  # warm (untimed)
-                cbest = None
-                for _ in range(2):
-                    c0 = time.time()
-                    cfn(cspark, SF_DIR).count()
-                    cdt = time.time() - c0
-                    cbest = cdt if cbest is None else min(cbest, cdt)
+                best, _ = fresh_floor(qs[CANARY], SF_DIR, CANARY_RUNS, "bench-canary")
                 la = _loadavg()
                 canary_series.append(
                     {
                         "after_n": after_n,
-                        "sec": round(cbest, 3),
+                        "sec": round(best, 3),
                         "load1": la[0] if la else None,
                     }
                 )
@@ -234,8 +221,6 @@ def main() -> None:
                 )
             except Exception as exc:  # noqa: BLE001
                 print(f"# canary[{after_n}]: ERROR {exc}", file=sys.stderr)
-            finally:
-                cspark.stop()
 
         for idx, name in enumerate(HEADLINE):
             if time.time() - t_floor0 > budget:
@@ -247,23 +232,13 @@ def main() -> None:
                 break
             if idx and idx % CANARY_EVERY == 0:
                 _canary_floor(idx)
-            fspark = get_session("bench-floor")
             try:
-                fn = qs[name]
-                fn(fspark, SF_DIR).count()  # warm (untimed)
-                best = None
-                for _ in range(FLOOR_RUNS):
-                    t0 = time.time()
-                    fn(fspark, SF_DIR).count()
-                    dt = time.time() - t0
-                    best = dt if best is None else min(best, dt)
+                best, _ = fresh_floor(qs[name], SF_DIR, FLOOR_RUNS, "bench-floor")
                 floors[name] = round(best, 3)
                 print(f"# floor {name}: {floors[name]}s", file=sys.stderr)
             except Exception as exc:  # noqa: BLE001
                 floor_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 print(f"# floor {name}: ERROR {floor_errors[name]}", file=sys.stderr)
-            finally:
-                fspark.stop()
         if floors:
             _canary_floor(len(HEADLINE))
 

@@ -22,6 +22,7 @@ storage type. All engine code MUST read testdata through here (or use
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -145,6 +146,9 @@ def spread_by_key(
     return df.repartition(goal, *key_cols)
 
 
+_NOCKPT_ANNOUNCED = False
+
+
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=False)`` — the shared-materialization
     device for frames feeding multiple plan branches — unless
@@ -153,8 +157,17 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     pipeline, so plan-evidence captures (tools/capture_plans.py) set
     the flag to see the full operator tree. NEVER set it for real
     runs — without the checkpoint each consumer re-derives the
-    pipeline (r17, VERDICT r16 #6)."""
+    pipeline (r17, VERDICT r16 #6). The first checkpoint the flag
+    skips in a process prints one stderr line, so a run says so."""
+    global _NOCKPT_ANNOUNCED
     if os.environ.get("SPARK_GRAFT_EXPLAIN_NOCKPT") == "1":
+        if not _NOCKPT_ANNOUNCED:
+            _NOCKPT_ANNOUNCED = True
+            print(
+                "# SPARK_GRAFT_EXPLAIN_NOCKPT=1: lazy_checkpoint is off; "
+                "shared frames are re-derived per consumer",
+                file=sys.stderr,
+            )
         return df
     return df.localCheckpoint(eager=False)
 

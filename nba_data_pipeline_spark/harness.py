@@ -21,6 +21,8 @@ instead (SURVEY.md §7.4 #6).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -105,6 +107,18 @@ def q(name: str, sql: str | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def _tempdir_gate(prefix: str, build: Callable[[str], DataFrame]) -> DataFrame:
+    """Run ``build(root)`` in a fresh temp dir and return its frame
+    materialized (eager local checkpoint) before the dir is deleted:
+    the shape of every gate that writes persisted tables and checks
+    what it reads back."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return build(root).localCheckpoint()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # ===========================================================================
@@ -468,9 +482,6 @@ def q_takedown_gate(spark, sf):
     for emptied buckets deleted); surviving content is still seen.
     Rows-only would hide a silent false; the constant-verdict oracle
     makes every invariant a value-hash assertion."""
-    import shutil
-    import tempfile
-
     from .operators.text import fit_trigram_lm
     from .sinks.store import read_store
     from .streaming.ops import (
@@ -481,8 +492,8 @@ def q_takedown_gate(spark, sf):
 
     docs = _t(spark, sf, "documents").select("doc_id", "text", "source")
     lm = fit_trigram_lm(docs.limit(100), "text")
-    root = tempfile.mkdtemp(prefix="takedown_gate_")
-    try:
+
+    def build(root):
         p = {k: f"{root}/{k}"
              for k in ("corpus", "sigs", "pairs", "scores", "bloom",
                        "hashes", "stats")}
@@ -543,9 +554,9 @@ def q_takedown_gate(spark, sf):
             "stats_conserved boolean, removed_reingestable boolean, "
             "survivors_still_seen boolean",
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return out
+
+    return _tempdir_gate("takedown_gate_", build)
 
 
 @q(
@@ -593,9 +604,6 @@ def q_cdc_table_materialize(spark, sf):
     the value hash proves latest-wins stays exact under out-of-order,
     at-least-once delivery — the semantics the reference's row-wise
     ON CONFLICT upserts (database/db_client.py:69-90) cannot give."""
-    import shutil
-    import tempfile
-
     from .operators.incremental import cdc_apply_table, read_cdc_snapshot
 
     c = _t(spark, sf, "customer")
@@ -622,17 +630,17 @@ def q_cdc_table_materialize(spark, sf):
         .unionByName(ch(k % 10 == 1, "U", 7, bal - 1))
         .unionByName(ch(k % 10 == 2, "U", 2, bal * 2))
     )
-    root = tempfile.mkdtemp(prefix="cdc_table_")
-    try:
+
+    def build(root):
         path = f"{root}/snap"
         for b in (b1, b2, b2, b3):  # b2 twice = redelivery
             cdc_apply_table(spark, b, path, ["c_custkey"], "seq", n_buckets=32)
         out = read_cdc_snapshot(spark, path).select(
             "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return out
+
+    return _tempdir_gate("cdc_table_", build)
 
 
 @q(
@@ -656,9 +664,6 @@ def q_incremental_agg_table(spark, sf):
     the aggregate. This is the high-cardinality twin of
     `incremental_agg_state` (per-user rollups at 100 TB, where
     rewriting the whole state per batch would be O(state))."""
-    import shutil
-    import tempfile
-
     from .operators.incremental import fold_aggregate_state_table
 
     o = _t(spark, sf, "orders")
@@ -668,8 +673,8 @@ def q_incremental_agg_table(spark, sf):
         "min_total": ("min", "o_totalprice"),
         "max_total": ("max", "o_totalprice"),
     }
-    root = tempfile.mkdtemp(prefix="agg_table_")
-    try:
+
+    def build(root):
         path = f"{root}/state"
         trickle = F.col("o_custkey") == 7
         for m in range(3):
@@ -691,9 +696,9 @@ def q_incremental_agg_table(spark, sf):
             F.round("min_total", 2).alias("min_total"),
             F.round("max_total", 2).alias("max_total"),
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return out
+
+    return _tempdir_gate("agg_table_", build)
 
 
 @q(
@@ -4225,9 +4230,6 @@ def q_component_state_gate(spark, sf):
     connected_components over the full pair history. The
     takedown_gate temp-dir pattern; the incremental_components query
     checks the operator, this checks the persisted composition."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import update_component_state
 
     ev = _t(spark, sf, "events")
@@ -4235,8 +4237,8 @@ def q_component_state_gate(spark, sf):
         F.col("user_id").alias("id_a"),
         (F.lit(1000) + F.col("event_id") % 211).alias("id_b"),
     ).distinct()
-    root = tempfile.mkdtemp(prefix="component_state_gate_")
-    try:
+
+    def build(root):
         labels_p = f"{root}/labels"
         b2 = pairs.filter(F.col("id_a") >= 75).localCheckpoint()
         update_component_state(pairs.filter(F.col("id_a") < 75), labels_p,
@@ -4263,10 +4265,9 @@ def q_component_state_gate(spark, sf):
                 ),
                 F.col("_n").cast("long").alias("n_docs"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("component_state_gate_", build)
 
 
 @q(
@@ -5743,15 +5744,12 @@ def q_bm25_state_gate(spark, sf):
     not a verdict: the additive dfreq fold, the membership filter, and
     the bucket-pruned query path must together reproduce every
     integer score."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import bm25_ingest_batch, bm25_query_index
 
     docs = _t(spark, sf, "documents")
     qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
-    root = tempfile.mkdtemp(prefix="bm25_state_gate_")
-    try:
+
+    def build(root):
         idx = f"{root}/bm25"
         b2 = docs.filter(F.col("doc_id") % 4 == 0).localCheckpoint()
         bm25_ingest_batch(docs.filter(F.col("doc_id") % 4 != 0), idx,
@@ -5760,9 +5758,9 @@ def q_bm25_state_gate(spark, sf):
         bm25_ingest_batch(b2, idx, state_buckets=16)  # replay -> no-op
         return bm25_query_index(
             spark, idx, qdf, k=10, state_buckets=16
-        ).localCheckpoint()  # materialize before the temp dir dies
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    return _tempdir_gate("bm25_state_gate_", build)
 
 
 @q(
@@ -5952,9 +5950,6 @@ def q_streaming_replay_parity(spark, sf):
     doc 1 (id 1e9, landing in a different micro-batch than the
     original) must be caught in both runs. Converted from rows-only
     to a constant-verdict oracle (VERDICT r13 task #5)."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import near_dedup_batch
 
     base = (
@@ -5966,8 +5961,8 @@ def q_streaming_replay_parity(spark, sf):
         (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
     )
     docs = base.unionByName(planted)
-    root = tempfile.mkdtemp(prefix="replay_parity_")
-    try:
+
+    def build(root):
         s_multi, p_multi = f"{root}/sig_multi", f"{root}/pairs_multi"
         s_one, p_one = f"{root}/sig_one", f"{root}/pairs_one"
         batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
@@ -6019,12 +6014,9 @@ def q_streaming_replay_parity(spark, sf):
             all_in_both.unionByName(no_dupes).unionByName(plant_hit)
             .unionByName(sig_rows)
             .orderBy("metric")
-            # materialize before the temp tables are deleted — the
-            # returned frame must survive the rmtree below
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("replay_parity_", build)
 
 
 @q("corpus_pipeline")  # composes LSH (engine-hash) stages -> rows-only
@@ -6687,9 +6679,6 @@ def q_ivf_state_gate(spark, sf):
     then three verdicts over the persisted state. The ivf_ann_topk
     query checks the operator; this checks the persisted composition —
     the same split as incremental_components vs component_state_gate."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import (
         assign_to_centers,
         ivf_ingest_batch,
@@ -6698,8 +6687,8 @@ def q_ivf_state_gate(spark, sf):
     )
 
     emb = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-    root = tempfile.mkdtemp(prefix="ivf_state_gate_")
-    try:
+
+    def build(root):
         idx = f"{root}/ivf"
         b1 = emb.filter(F.col("vec_id") % 3 != 0).orderBy("vec_id").coalesce(1)
         b2 = emb.filter(F.col("vec_id") % 3 == 0).localCheckpoint()
@@ -6736,10 +6725,9 @@ def q_ivf_state_gate(spark, sf):
                 (F.col("_m") == 0).alias("assignments_ok"),
                 (F.col("_h") >= 18).alias("recall_ok"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("ivf_state_gate_", build)
 
 
 @q(
@@ -6762,9 +6750,6 @@ def q_pq_state_gate(spark, sf):
     codebooks, batch 2 replays (idempotent merge), then three verdicts
     over the persisted compressed state. pq_recall checks the
     operator; this checks the persisted composition."""
-    import shutil
-    import tempfile
-
     from .operators.similarity import pq_encode
     from .streaming.ops import (
         pq_ingest_batch,
@@ -6773,8 +6758,8 @@ def q_pq_state_gate(spark, sf):
     )
 
     emb = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-    root = tempfile.mkdtemp(prefix="pq_state_gate_")
-    try:
+
+    def build(root):
         idx = f"{root}/pq"
         b1 = emb.filter(F.col("vec_id") % 3 != 0).orderBy("vec_id").coalesce(1)
         b2 = emb.filter(F.col("vec_id") % 3 == 0).localCheckpoint()
@@ -6811,10 +6796,9 @@ def q_pq_state_gate(spark, sf):
                 (F.col("_m") == 0).alias("codes_ok"),
                 (F.col("_h") >= 18).alias("recall_ok"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("pq_state_gate_", build)
 
 
 @q(
@@ -6839,14 +6823,11 @@ def q_embedding_ingest_gate(spark, sf):
     through the persisted IVF blocking; every copy folded into its
     source's component; the replay left pairs and labels byte-stable;
     the index holds every vector."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import embedding_ingest_batch
 
     emb = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-    root = tempfile.mkdtemp(prefix="embedding_ingest_gate_")
-    try:
+
+    def build(root):
         kw = dict(
             n_lists=8, threshold=0.9, probe_lists=2,
             pairs_path=f"{root}/pairs", components_path=f"{root}/components",
@@ -6911,10 +6892,9 @@ def q_embedding_ingest_gate(spark, sf):
                 (F.col("_cb") == 0).alias("components_ok"),
                 ((F.col("_pd") == 0) & (F.col("_ld") == 0)).alias("replay_stable"),
             )
-            .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("embedding_ingest_gate_", build)
 
 
 def _fixture_game(spark):
@@ -8163,9 +8143,6 @@ def q_streaming_replay_oracle(spark, sf):
     Upgrades the xxhash64 twin ``streaming_replay_parity`` (rows-only by
     nature) to full driver evidence; same portability split as
     minhash_pairs_portable vs minhash_lsh_pairs."""
-    import shutil
-    import tempfile
-
     from .streaming.ops import near_dedup_batch
 
     docs = (
@@ -8173,8 +8150,8 @@ def q_streaming_replay_oracle(spark, sf):
         .filter(F.col("doc_id") < 600)
         .select("doc_id", "text")
     )
-    root = tempfile.mkdtemp(prefix="replay_oracle_")
-    try:
+
+    def build(root):
         sig_p, pairs_p = f"{root}/sigs", f"{root}/pairs"
         batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
         kw = dict(num_perm=16, bands=8, threshold=0.3, hash="md5")
@@ -8186,10 +8163,9 @@ def q_streaming_replay_oracle(spark, sf):
         from .sinks.store import read_store
 
         out = read_store(spark, pairs_p).select("id_a", "id_b", "est_jaccard")
-        # materialize before the temp tables are deleted
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return out
+
+    return _tempdir_gate("replay_oracle_", build)
 
 
 @q(
@@ -8858,8 +8834,6 @@ def q_streaming_hh_gate(spark, sf):
     streaming (key, token) aggregate cannot guarantee on an unbounded
     vocabulary."""
     import os as _os
-    import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -8873,17 +8847,17 @@ def q_streaming_hh_gate(spark, sf):
             T.StructField("props", T.StringType()),
         ]
     )
+
     # the streaming file source requires a DIRECTORY; the testdata
     # table is a single parquet file — stage it into a temp dir
-    root = tempfile.mkdtemp(prefix="hh_gate_")
-    try:
+    def build(root):
         shutil.copy(_os.path.join(sf, "events.parquet"), root)
-        raw = stream_heavy_hitters(
+        return stream_heavy_hitters(
             spark, root, schema, "user_id", "props", capacity=capacity,
             query_name="hh_gate_q",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+
+    raw = _tempdir_gate("hh_gate_", build)
     # token column carried props verbatim; key = user string. Reduce to
     # the FINAL emission per key (max n_seen), then verify vs exact.
     final_n = raw.groupBy("key").agg(F.max("n_seen").alias("n_seen"))
@@ -9620,6 +9594,42 @@ def q_seen_content_delta(spark, sf):
 # link-CAS commits, file-granular copy-on-write merges, time travel.
 # ===========================================================================
 
+def _snapshot_merge_chain(spark, sf, prefix: str, cdf: bool | None) -> DataFrame:
+    """Create (``cdf`` as given), merge, replay the merge POISONED under
+    the same txn version, takedown-delete, and read the current
+    snapshot: the body snapshot_merge_gate and its cdf=False twin
+    share."""
+    from .sinks.snapshot import (
+        delete_snapshot,
+        read_snapshot,
+        upsert_snapshot,
+        write_snapshot,
+    )
+
+    o = _t(spark, sf, "orders")
+    base = o.select("o_orderkey", F.col("o_totalprice").alias("totalprice"))
+    batch = (
+        o.filter(F.col("o_orderkey") % 10 == 0)
+        .select("o_orderkey", (F.col("o_totalprice") * 2).alias("totalprice"))
+    )
+    doomed = o.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
+
+    def build(root):
+        write_snapshot(spark, base, root, key="o_orderkey", cdf=cdf)
+        upsert_snapshot(spark, batch, root, "o_orderkey", txn=("gate", 1))
+        poisoned = batch.withColumn("totalprice", F.col("totalprice") * 999)
+        upsert_snapshot(  # redelivered epoch, corrupted payload: fenced
+            spark, poisoned, root, "o_orderkey", txn=("gate", 1)
+        )
+        delete_snapshot(spark, doomed, root, "o_orderkey")
+        return (
+            read_snapshot(spark, root)
+            .withColumn("totalprice", F.round("totalprice", 2))
+        )
+
+    return _tempdir_gate(prefix, build)
+
+
 @q(
     "snapshot_merge_gate",
     # full-value oracle (merge_upsert pattern): create + upsert (the
@@ -9641,39 +9651,7 @@ def q_snapshot_merge_gate(spark, sf):
     SQL. Exercises the whole chain the pytest crash matrix probes:
     footer stats, exact file pruning, carried-by-reference files,
     link-CAS commits, txnAppId/txnVersion idempotence."""
-    import shutil
-    import tempfile
-
-    from .sinks.snapshot import (
-        delete_snapshot,
-        read_snapshot,
-        upsert_snapshot,
-        write_snapshot,
-    )
-
-    o = _t(spark, sf, "orders")
-    base = o.select("o_orderkey", F.col("o_totalprice").alias("totalprice"))
-    batch = (
-        o.filter(F.col("o_orderkey") % 10 == 0)
-        .select("o_orderkey", (F.col("o_totalprice") * 2).alias("totalprice"))
-    )
-    doomed = o.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="snapshot_merge_gate_")
-    try:
-        write_snapshot(spark, base, root, key="o_orderkey")
-        upsert_snapshot(spark, batch, root, "o_orderkey", txn=("gate", 1))
-        poisoned = batch.withColumn("totalprice", F.col("totalprice") * 999)
-        upsert_snapshot(  # redelivered epoch, corrupted payload: fenced
-            spark, poisoned, root, "o_orderkey", txn=("gate", 1)
-        )
-        delete_snapshot(spark, doomed, root, "o_orderkey")
-        return (
-            read_snapshot(spark, root)
-            .withColumn("totalprice", F.round("totalprice", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _snapshot_merge_chain(spark, sf, "snapshot_merge_gate_", cdf=None)
 
 
 @q(
@@ -9692,39 +9670,7 @@ def q_snapshot_merge_nocdf_gate(spark, sf):
     the change-file sidecar (feeds fall back to the endpoint diff).
     Identical row semantics — the floor delta vs the default gate IS
     the measured CDF write tax."""
-    import shutil
-    import tempfile
-
-    from .sinks.snapshot import (
-        delete_snapshot,
-        read_snapshot,
-        upsert_snapshot,
-        write_snapshot,
-    )
-
-    o = _t(spark, sf, "orders")
-    base = o.select("o_orderkey", F.col("o_totalprice").alias("totalprice"))
-    batch = (
-        o.filter(F.col("o_orderkey") % 10 == 0)
-        .select("o_orderkey", (F.col("o_totalprice") * 2).alias("totalprice"))
-    )
-    doomed = o.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="snapshot_merge_nocdf_")
-    try:
-        write_snapshot(spark, base, root, key="o_orderkey", cdf=False)
-        upsert_snapshot(spark, batch, root, "o_orderkey", txn=("gate", 1))
-        poisoned = batch.withColumn("totalprice", F.col("totalprice") * 999)
-        upsert_snapshot(  # redelivered epoch, corrupted payload: fenced
-            spark, poisoned, root, "o_orderkey", txn=("gate", 1)
-        )
-        delete_snapshot(spark, doomed, root, "o_orderkey")
-        return (
-            read_snapshot(spark, root)
-            .withColumn("totalprice", F.round("totalprice", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _snapshot_merge_chain(spark, sf, "snapshot_merge_nocdf_", cdf=False)
 
 
 @q(
@@ -9739,9 +9685,6 @@ def q_snapshot_time_travel(spark, sf):
     return the ORIGINAL rows byte-for-byte — old data files are never
     mutated, only superseded in newer manifests (the Delta/Iceberg
     immutability contract, here as a DuckDB full-value oracle)."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         delete_snapshot,
         read_snapshot,
@@ -9756,18 +9699,17 @@ def q_snapshot_time_travel(spark, sf):
         .select("o_orderkey", (F.col("o_totalprice") * 3).alias("totalprice"))
     )
     doomed = o.filter(F.col("o_orderkey") % 5 == 0).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="snapshot_time_travel_")
-    try:
+
+    def build(root):
         write_snapshot(spark, base, root, key="o_orderkey")
         upsert_snapshot(spark, batch, root, "o_orderkey")
         delete_snapshot(spark, doomed, root, "o_orderkey")
         return (
             read_snapshot(spark, root, version=1)
             .withColumn("totalprice", F.round("totalprice", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_time_travel_", build)
 
 
 @q(
@@ -9800,9 +9742,6 @@ def q_snapshot_changes_gate(spark, sf):
     %10==0 AND %7==0 keys: updated in v2 then deleted in v3, the
     v1->v3 feed reports one delete with the v1 value (intermediate
     states are invisible by design)."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         delete_snapshot,
         snapshot_changes,
@@ -9824,8 +9763,8 @@ def q_snapshot_changes_gate(spark, sf):
         )
     )
     doomed = o.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="snapshot_changes_gate_")
-    try:
+
+    def build(root):
         write_snapshot(spark, base, root, key="o_orderkey")
         upsert_snapshot(spark, updates.unionByName(inserts), root, "o_orderkey")
         delete_snapshot(spark, doomed, root, "o_orderkey")
@@ -9833,10 +9772,9 @@ def q_snapshot_changes_gate(spark, sf):
             snapshot_changes(spark, root, 1)
             .withColumn("totalprice", F.round("totalprice", 2))
             .withColumnRenamed("_change_type", "change_type")
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_changes_gate_", build)
 
 
 @q(
@@ -9858,9 +9796,6 @@ def q_snapshot_mirror_gate(spark, sf):
     must hash row-for-row against the one-shot SQL. End-to-end
     exactly-once through the whole chain: feed extraction from changed
     files only, single-commit apply, txn-watermark redelivery fence."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         compact_snapshot,
         delete_snapshot,
@@ -9877,9 +9812,9 @@ def q_snapshot_mirror_gate(spark, sf):
         .select("o_orderkey", (F.col("o_totalprice") * 2).alias("totalprice"))
     )
     doomed = o.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="snapshot_mirror_gate_")
-    src, dst = f"{root}/src", f"{root}/dst"
-    try:
+
+    def build(root):
+        src, dst = f"{root}/src", f"{root}/dst"
         write_snapshot(spark, base, src, key="o_orderkey")
         mirror_snapshot(spark, src, dst)  # bootstrap full copy
         upsert_snapshot(spark, batch, src, "o_orderkey")
@@ -9890,10 +9825,9 @@ def q_snapshot_mirror_gate(spark, sf):
         return (
             read_snapshot(spark, dst)
             .withColumn("totalprice", F.round("totalprice", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_mirror_gate_", build)
 
 
 @q(
@@ -9914,9 +9848,6 @@ def q_snapshot_fold_gate(spark, sf):
     POISONED (all prices 1e9, same txn version: the watermark must
     no-op it or the hash diverges). Oracle = single-pass GROUP BY, the
     incremental_agg_table contract on the lakehouse backend."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import fold_snapshot_state, read_snapshot
 
     o = _t(spark, sf, "orders")
@@ -9926,8 +9857,8 @@ def q_snapshot_fold_gate(spark, sf):
         "min_total": ("min", "o_totalprice"),
         "max_total": ("max", "o_totalprice"),
     }
-    root = tempfile.mkdtemp(prefix="snapshot_fold_gate_")
-    try:
+
+    def build(root):
         path = f"{root}/state"
         for m in range(3):
             fold_snapshot_state(
@@ -9950,10 +9881,9 @@ def q_snapshot_fold_gate(spark, sf):
                 F.round("min_total", 2).alias("min_total"),
                 F.round("max_total", 2).alias("max_total"),
             )
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_fold_gate_", build)
 
 
 @q(
@@ -9971,9 +9901,6 @@ def q_snapshot_retention_gate(spark, sf):
     reference — and a REPLAYED call under the same txn version must
     no-op. The survivors must hash against the one-shot NOT-BETWEEN
     SQL."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         delete_where_range,
         read_snapshot,
@@ -9982,8 +9909,8 @@ def q_snapshot_retention_gate(spark, sf):
 
     o = _t(spark, sf, "orders")
     base = o.select("o_orderkey", F.col("o_totalprice").alias("totalprice"))
-    root = tempfile.mkdtemp(prefix="snapshot_retention_gate_")
-    try:
+
+    def build(root):
         write_snapshot(
             spark, base, root, key="o_orderkey",
             sort_by=["totalprice"], stat_cols=["totalprice"],
@@ -9997,10 +9924,9 @@ def q_snapshot_retention_gate(spark, sf):
         return (
             read_snapshot(spark, root)
             .withColumn("totalprice", F.round("totalprice", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_retention_gate_", build)
 
 
 @q(
@@ -10046,9 +9972,6 @@ def q_snapshot_pipeline_gate(spark, sf):
     The read-back must hash against the one-shot SQL over the full
     input: proof the snapshot sink is a drop-in system-of-record for
     the reference pipelines (time travel/CDF/retention come free)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from .operators.incremental import delta_filter
@@ -10067,8 +9990,8 @@ def q_snapshot_pipeline_gate(spark, sf):
         F.when(F.col("rn") % 11 == 0, F.lit(None)).otherwise(F.col("PTS")).alias("PTS"),
     )
     initial = raw.filter(F.substring("GAME_ID", 6, 5).cast("int") % 5 != 0)
-    root = tempfile.mkdtemp(prefix="snapshot_pipeline_gate_")
-    try:
+
+    def build(root):
         out1 = team_game_log(initial, "2024-25", "Regular Season")
         upsert_store(spark, out1, root, key="id", default="snapshot")
         # delta catch-up over the FULL input (the CLI --delta path)
@@ -10081,10 +10004,9 @@ def q_snapshot_pipeline_gate(spark, sf):
         return (
             read_store(spark, root)
             .withColumn("PTS", F.round("PTS", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("snapshot_pipeline_gate_", build)
 
 
 @q(
@@ -10118,9 +10040,6 @@ def q_agg_view_gate(spark, sf):
     removes rows holding group extremes — both force per-group
     recomputes whose results must hash against the one-shot GROUP BY
     over the final source state, together with the folded sum/count."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         delete_snapshot,
         read_snapshot,
@@ -10135,13 +10054,13 @@ def q_agg_view_gate(spark, sf):
         (F.col("o_custkey") % 100).alias("g"),
         F.col("o_totalprice").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="agg_view_gate_")
-    src, dst = f"{root}/src", f"{root}/view"
-    specs = {
-        "sum_price": ("sum", "price"), "n_orders": ("count_rows", "*"),
-        "min_price": ("min", "price"), "max_price": ("max", "price"),
-    }
-    try:
+
+    def build(root):
+        src, dst = f"{root}/src", f"{root}/view"
+        specs = {
+            "sum_price": ("sum", "price"), "n_orders": ("count_rows", "*"),
+            "min_price": ("min", "price"), "max_price": ("max", "price"),
+        }
         write_snapshot(spark, base, src, key="o_orderkey")
         refresh_agg_view(spark, src, dst, "g", specs)  # bootstrap
         upsert_snapshot(
@@ -10165,10 +10084,9 @@ def q_agg_view_gate(spark, sf):
                 F.round("min_price", 2).alias("min_price"),
                 F.round("max_price", 2).alias("max_price"),
             )
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("agg_view_gate_", build)
 
 
 @q(
@@ -10198,9 +10116,6 @@ def q_derived_view_gate(spark, sf):
     the view — and a delete wave, by folding only the change feed in
     one fenced commit per refresh (replay exercised). Must hash
     against the one-shot SQL over the final source state."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         delete_snapshot,
         read_snapshot,
@@ -10221,9 +10136,8 @@ def q_derived_view_gate(spark, sf):
             "o_orderkey", "g", (F.col("price") * 2).alias("price2x")
         )
 
-    root = tempfile.mkdtemp(prefix="derived_view_gate_")
-    src, dst = f"{root}/src", f"{root}/view"
-    try:
+    def build(root):
+        src, dst = f"{root}/src", f"{root}/view"
         write_snapshot(spark, base, src, key="o_orderkey")
         refresh_derived_snapshot(spark, src, dst, tf)  # bootstrap
         upsert_snapshot(  # halve every 10th price: crosses the filter
@@ -10243,10 +10157,9 @@ def q_derived_view_gate(spark, sf):
         return (
             read_snapshot(spark, dst)
             .withColumn("price2x", F.round("price2x", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("derived_view_gate_", build)
 
 
 @q(
@@ -10275,9 +10188,6 @@ def q_cdc_snapshot_gate(spark, sf):
     sequence — and finally the first batch is REPLAYED verbatim (ties
     into the same values; visible no-op). The surviving live view
     must hash against the log's logical endpoint."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import cdc_apply_snapshot, read_cdc_state
 
     c = _t(spark, sf, "customer")
@@ -10324,8 +10234,8 @@ def q_cdc_snapshot_gate(spark, sf):
             )
         )
     )
-    root = tempfile.mkdtemp(prefix="cdc_snapshot_gate_")
-    try:
+
+    def build(root):
         cdc_apply_snapshot(spark, base, root, "c_custkey", "seq")
         cdc_apply_snapshot(spark, high, root, "c_custkey", "seq")
         cdc_apply_snapshot(spark, late, root, "c_custkey", "seq")
@@ -10333,10 +10243,9 @@ def q_cdc_snapshot_gate(spark, sf):
         return (
             read_cdc_state(spark, root)
             .withColumn("acctbal", F.round("acctbal", 2))
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("cdc_snapshot_gate_", build)
 
 
 @q(
@@ -10367,9 +10276,6 @@ def q_state_txn_fence_gate(spark, sf):
     single-shot ingest of the same documents: same pair rows, same
     signature rows, and the exact post-replay version numbers +
     signature rowcount as oracle-bound values."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import current_version
     from .sinks.store import detect_format, read_store
     from .streaming.ops import near_dedup_batch
@@ -10379,8 +10285,8 @@ def q_state_txn_fence_gate(spark, sf):
         .filter(F.col("doc_id") < 400)
         .select("doc_id", "text")
     )
-    root = tempfile.mkdtemp(prefix="state_fence_gate_")
-    try:
+
+    def build(root):
         s_m, p_m = f"{root}/sig_m", f"{root}/pair_m"
         s_1, p_1 = f"{root}/sig_1", f"{root}/pair_1"
         kw = dict(num_perm=32, bands=16, threshold=0.3)
@@ -10413,8 +10319,8 @@ def q_state_txn_fence_gate(spark, sf):
         return spark.createDataFrame(rows, "metric string, value long").orderBy(
             "metric"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("state_fence_gate_", build)
 
 
 @q(
@@ -10444,9 +10350,6 @@ def q_state_txn_fence_bucketed_gate(spark, sf):
     same documents (bucket column aside), so the bucketing is pure
     layout, not semantics. Reference parity anchor: Postgres upserts
     are idempotent at any scale (database/db_client.py:69-90)."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import _load_manifest, current_version
     from .sinks.store import read_store
     from .streaming.ops import near_dedup_batch
@@ -10456,8 +10359,8 @@ def q_state_txn_fence_bucketed_gate(spark, sf):
         .filter(F.col("doc_id") < 400)
         .select("doc_id", "text")
     )
-    root = tempfile.mkdtemp(prefix="state_fence_bkt_gate_")
-    try:
+
+    def build(root):
         s_b, p_b = f"{root}/sig_b", f"{root}/pair_b"
         s_1, p_1 = f"{root}/sig_1", f"{root}/pair_1"
         kw = dict(num_perm=32, bands=16, threshold=0.3)
@@ -10493,8 +10396,8 @@ def q_state_txn_fence_bucketed_gate(spark, sf):
         return spark.createDataFrame(rows, "metric string, value long").orderBy(
             "metric"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("state_fence_bkt_gate_", build)
 
 
 @q(
@@ -10521,16 +10424,13 @@ def q_cdf_overwrite_gate(spark, sf):
     10th order re-priced at v2, then overwritten to the same final
     value) is invisible. Full-value oracle: the keyed diff computed
     directly over the orders table."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import snapshot_changes, upsert_snapshot, write_snapshot
 
     o = _t(spark, sf, "orders")
     base = o.select("o_orderkey", F.col("o_totalprice").alias("price"))
-    root = tempfile.mkdtemp(prefix="cdf_overwrite_gate_")
-    t = f"{root}/t"
-    try:
+
+    def build(root):
+        t = f"{root}/t"
         write_snapshot(spark, base, t, key="o_orderkey")        # v1
         upsert_snapshot(                                        # v2 (invisible)
             spark,
@@ -10551,10 +10451,9 @@ def q_cdf_overwrite_gate(spark, sf):
                 F.round("price", 2).alias("price"),
                 F.col("_change_type").alias("change"),
             )
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("cdf_overwrite_gate_", build)
 
 
 @q(
@@ -10580,9 +10479,6 @@ def q_cdf_rollback_gate(spark, sf):
     Also pins the restored-metadata contract: the rolled-back version
     carries the TARGET's cdf_enabled/renames, not the rolled-away
     parent's."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         _load_manifest,
         rollback_snapshot,
@@ -10593,9 +10489,9 @@ def q_cdf_rollback_gate(spark, sf):
 
     o = _t(spark, sf, "orders")
     base = o.select("o_orderkey", F.col("o_totalprice").alias("price"))
-    root = tempfile.mkdtemp(prefix="cdf_rollback_gate_")
-    t = f"{root}/t"
-    try:
+
+    def build(root):
+        t = f"{root}/t"
         write_snapshot(spark, base, t, key="o_orderkey", cdf=False)  # v1
         upsert_snapshot(                                             # v2
             spark,
@@ -10616,10 +10512,9 @@ def q_cdf_rollback_gate(spark, sf):
                 F.round("price", 2).alias("price"),
                 F.col("_change_type").alias("change"),
             )
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("cdf_rollback_gate_", build)
 
 
 @q(
@@ -10652,9 +10547,6 @@ def q_cdf_delete_range_gate(spark, sf):
     so the gate also proves the lazy mode COMPOSES with sidecar steps
     in one netted window: an in-range key the merge re-priced nets to
     a single delete carrying its v1 pre-image."""
-    import shutil
-    import tempfile
-
     from .sinks.snapshot import (
         _load_manifest,
         delete_where_range,
@@ -10665,9 +10557,9 @@ def q_cdf_delete_range_gate(spark, sf):
 
     o = _t(spark, sf, "orders")
     base = o.select("o_orderkey", F.col("o_totalprice").alias("price"))
-    root = tempfile.mkdtemp(prefix="cdf_delete_range_gate_")
-    t = f"{root}/t"
-    try:
+
+    def build(root):
+        t = f"{root}/t"
         write_snapshot(spark, base, t, key="o_orderkey")        # v1
         upsert_snapshot(                                        # v2: merge
             spark,
@@ -10685,10 +10577,9 @@ def q_cdf_delete_range_gate(spark, sf):
                 F.round("price", 2).alias("price"),
                 F.col("_change_type").alias("change"),
             )
-            .localCheckpoint()  # materialize before the temp dir dies
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _tempdir_gate("cdf_delete_range_gate_", build)
 
 
 # The driver's correctness gate samples the FIRST 50 entries of
@@ -10701,7 +10592,8 @@ def q_cdf_delete_range_gate(spark, sf):
 # Round-9 rotation (VERDICT r8 task #1): every member of the r7/r8
 # window is now multi-round driver-green, so 40 of the 50 slots rotate
 # to queries that have NEVER earned a driver CORRECTNESS row (they are
-# all oracle-backed and preflight-green at all three local scales).
+# all oracle-backed and green at all three local scales under
+# `tools/gate.py oracle --preflight`).
 # Ten §2 family representatives are retained so every family keeps
 # fresh driver evidence; the rotated-out members stay registered and
 # locally swept, and COVERAGE.md keeps the ever-driver-green ledger.
@@ -10740,8 +10632,8 @@ _DRIVER_WINDOW = [
     # 26 of the 44 r10-stale queries. The 18 deferred r10 queries
     # (simple column-transform / sampling shapes) were ALL re-run
     # locally against their DuckDB oracles at sf0.01 this round —
-    # 44/44 OK, artifact tools/r10_cohort_check_r16.txt — and are
-    # first in line for r17; reasons recorded in COVERAGE.md.
+    # 44/44 OK — and are first in line for r17; reasons recorded in
+    # COVERAGE.md.
     # --- the 24-query changed-path set (3 new gates lead) ---
     "state_txn_fence_bucketed_gate", "cdf_delete_range_gate",
     "cdf_rollback_gate",

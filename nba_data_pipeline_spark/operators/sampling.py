@@ -441,33 +441,36 @@ def dsir_log_ratios(
     shared ``hashed_bigram_buckets`` frame so the corpus explodes once,
     not per consumer (the fit aggregates and the per-doc scoring cannot
     be common-subplan-deduplicated by Catalyst)."""
-    if target_flag_col is not None:
-        if source_grams is None:
-            raise ValueError("target_flag_col requires source_grams")
+    if target_flag_col is not None and source_grams is None:
+        raise ValueError("target_flag_col requires source_grams")
+    if source_grams is None:
+        source_grams = hashed_bigram_buckets(source, [], text_col, n_buckets)
+    if target_grams is None and target_flag_col is None:
+        target_grams = hashed_bigram_buckets(target, [], text_col, n_buckets)
+
+    def bucket_counts(grams: DataFrame, *aggs) -> list:
         # drop keep_empty_docs placeholder rows (NULL bucket) if the
         # caller shares a left-join-complete gram frame
-        source_grams = source_grams.filter(F.col("bucket").isNotNull())
-        counts = source_grams.groupBy("bucket").agg(
-            F.count("*").alias("source_n"),
-            F.count_if(F.col(target_flag_col)).alias("target_n"),
+        return (
+            grams.filter(F.col("bucket").isNotNull())
+            .groupBy("bucket")
+            .agg(*aggs)
+            .collect()
         )
+
+    if target_flag_col is not None:
         rows = {
             int(r["bucket"]): (int(r["target_n"]), int(r["source_n"]))
-            for r in counts.collect()
+            for r in bucket_counts(
+                source_grams,
+                F.count("*").alias("source_n"),
+                F.count_if(F.col(target_flag_col)).alias("target_n"),
+            )
         }
     else:
-        if target_grams is None:
-            target_grams = hashed_bigram_buckets(target, [], text_col, n_buckets)
-        if source_grams is None:
-            source_grams = hashed_bigram_buckets(source, [], text_col, n_buckets)
-        t = {
-            int(r["bucket"]): int(r["n"])
-            for r in target_grams.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        s = {
-            int(r["bucket"]): int(r["n"])
-            for r in source_grams.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
+        n = F.count("*").alias("n")
+        t = {int(r["bucket"]): int(r["n"]) for r in bucket_counts(target_grams, n)}
+        s = {int(r["bucket"]): int(r["n"]) for r in bucket_counts(source_grams, n)}
         rows = {b: (t.get(b, 0), s.get(b, 0)) for b in set(t) | set(s)}
     t_tot = sum(v[0] for v in rows.values())
     s_tot = sum(v[1] for v in rows.values())

@@ -754,7 +754,7 @@ def bm25_ingest_batch(
     two-batch-ingested index's top-k against the full-corpus SQL.
     """
     from ..operators.incremental import fold_aggregate_state_table
-    from ..operators.text import exploded_tokens, token_count, tokens
+    from ..operators.text import exploded_tokens, token_count
     from ..sinks.writer import table_exists, upsert_table
 
     spark = batch_df.sparkSession
@@ -1133,7 +1133,7 @@ def pq_ingest_batch(
     import json
 
     from ..operators.similarity import pq_encode, pq_fit
-    from ..sinks.writer import table_exists, upsert_table
+    from ..sinks.writer import upsert_table
 
     spark = batch_df.sparkSession
     codes_p = os.path.join(index_path, "codes")

@@ -65,7 +65,7 @@ def test_oracle_type_parity(spark):
     import duckdb
 
     import __spark_entry__ as entrymod
-    from tools.check_oracle import type_parity_problems
+    from tools.gate import type_parity_problems
 
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events "

@@ -406,3 +406,25 @@ def test_dsir_complete_grams_match_legacy_join_semantics(spark):
     )
     assert got.exceptAll(legacy).count() == 0
     assert legacy.exceptAll(got).count() == 0
+
+
+def test_dsir_log_ratios_skips_null_buckets_without_flag(spark):
+    """Gram frames built with keep_empty_docs carry one NULL-bucket row
+    per zero-bigram doc; the separate target/source path must drop them
+    like the flag path does instead of raising on ``int(None)``."""
+    from nba_data_pipeline_spark.operators.sampling import (
+        dsir_log_ratios,
+        hashed_bigram_buckets,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "")], "doc_id long, text string"
+    )
+    grams = hashed_bigram_buckets(docs, ["doc_id"], "text", 16, keep_empty_docs=True)
+    ratios = dsir_log_ratios(
+        None, docs, n_buckets=16,
+        target_grams=grams.filter("doc_id = 1"), source_grams=grams,
+    ).collect()
+    assert len(ratios) == 16
+    assert sum(r.target_n for r in ratios) == 2
+    assert sum(r.source_n for r in ratios) == 2
