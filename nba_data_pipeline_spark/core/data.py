@@ -26,6 +26,7 @@ import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # event-time columns whose parquet storage type must be normalized
 _TS_COLS = {"events": ("ts",)}
@@ -170,6 +171,18 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
             )
         return df
     return df.localCheckpoint(eager=False)
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` that the optimizer can see is
+    empty. A bare ``createDataFrame([], schema)`` is a ``LogicalRDD``
+    whose emptiness Catalyst cannot know, so a join or union over it
+    still plans (and runs) its aggregates and shuffles. ``limit(0)``
+    lets ``OptimizeLimitZero`` turn it into an empty ``LocalRelation``,
+    and ``PropagateEmptyRelation`` then folds every join and union
+    over it away: an append merge into an empty target plans as the
+    source alone."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def maybe_broadcast(

@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core.data import load_table, maybe_broadcast, spread_by_key, ts_micros
+from .core.data import empty_frame, load_table, maybe_broadcast, spread_by_key, ts_micros
 from .functions.gameid import season_from_game_id, season_type_from_game_id
 from .functions.ids import add_id, fill_nulls, stamp
 from .functions.timeops import clock_to_seconds
@@ -6068,7 +6068,7 @@ def q_incremental_minhash(spark, sf):
     )
     new_sigs = sigs.filter(F.col("doc_id") % 5 == 0)
     old_sigs = sigs.filter(F.col("doc_id") % 5 != 0)
-    empty = spark.createDataFrame([], sigs.schema)
+    empty = empty_frame(spark, sigs.schema)
 
     def canon(pairs):
         return pairs.select(
@@ -6132,7 +6132,7 @@ def q_incremental_simhash(spark, sf):
 
     docs = _t(spark, sf, "documents")
     fps = simhash_df(docs, "doc_id", "text").localCheckpoint(eager=False)
-    empty = spark.createDataFrame([], fps.schema)
+    empty = empty_frame(spark, fps.schema)
     new_fps = fps.filter(F.col("doc_id") % 5 == 0)
     old_fps = fps.filter(F.col("doc_id") % 5 != 0)
 

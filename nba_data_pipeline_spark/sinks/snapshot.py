@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..core.data import empty_frame
 from ..operators.incremental import insert_ignore, merge_upsert
 from .writer import _align_schemas
 
@@ -526,8 +527,13 @@ def _read_files(
     rels: list[str],
     renames: dict | None = None,
 ) -> DataFrame:
+    """Read ``rels`` (paths under ``root``) with ``schema``; ``renames``
+    coalesces historical column names. No files yields ``empty_frame``:
+    an append merge (every file carried) then plans ``combine`` over a
+    target the optimizer knows is empty, so its anti-join, dedup
+    aggregate and union fold away and the merge pays only its write."""
     if not rels:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     paths = [os.path.join(root, r) for r in rels]
     # explicit schema: files written before a column was added read it
     # back as NULL (ADD COLUMN evolution without a mergeSchema footer
@@ -914,9 +920,12 @@ def _merge_commit(
     # (bounds, exact prune, rewrite) and a non-deterministic source
     # recomputed between the prune and the rewrite could change keys
     # after the prune decided which files can be carried — the same
-    # reason Delta materializes MERGE sources. Lazy: the _batch_bounds
-    # collect is the first action and materializes it, one Spark job
-    # fewer than an eager checkpoint.
+    # reason Delta materializes MERGE sources. Lazy, which saves the
+    # eager checkpoint's own job, but not free at call time: under AQE
+    # the checkpoint builds its RDD from the final adaptive plan, so
+    # every shuffle stage of the source runs HERE (a pairs upsert runs
+    # most of its jobs before _batch_bounds). The bounds collect then
+    # computes the checkpoint's blocks from those shuffle outputs.
     if materialize:
         source = source.localCheckpoint(eager=False)
 
@@ -1692,7 +1701,7 @@ def _changes_from_cdf(
             ).select(*cols, "_change_type")
         feeds.append(feed.withColumn("_step", F.lit(i)))
     if not feeds:
-        return spark.createDataFrame([], cdf_schema)
+        return empty_frame(spark, cdf_schema)
     evs = feeds[0]
     for f in feeds[1:]:
         evs = evs.unionByName(f)

@@ -69,6 +69,15 @@ def store_exists(path: str) -> bool:
     return detect_format(path) is not None
 
 
+def txn_applied(path: str, txn: tuple[str, int] | None) -> bool:
+    """True iff the table at ``path`` already committed ``txn`` (or a
+    later version of its app): a write under it would be a no-op.
+    Reads only the manifest, so a caller can skip a replayed batch
+    before any Spark job. False for ``txn=None`` and for swap or
+    absent tables, which have no transaction watermark."""
+    return snap._txn_already_applied(path, txn)
+
+
 def read_store(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
     """Read a table regardless of backend. Snapshot reads are always at
     the current committed version (manifest schema covers evolution, so

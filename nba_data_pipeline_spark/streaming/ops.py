@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.data import empty_frame
 from .sink import _start_batches
 
 
@@ -244,7 +245,7 @@ def _pair_step(
     if store.store_exists(key_path):
         corpus = store.read_store(spark, key_path).drop("bucket")
     else:  # first batch: empty corpus, new-vs-new pairs still form
-        corpus = spark.createDataFrame([], keys.schema)
+        corpus = empty_frame(spark, keys.schema)
     pairs = pair_fn(keys, corpus).select(
         F.least("id_new", "id_other").alias("id_a"),
         F.greatest("id_new", "id_other").alias("id_b"),
@@ -1696,8 +1697,31 @@ def corpus_ingest_batch(
     composition).
     """
     from ..operators.text import gopher_rules
-    from ..sinks.store import upsert_store
+    from ..sinks import store
 
+    # resolve every table the step writes before its first job
+    # (filesystem probes only). A redelivered batch that every one of
+    # them already committed is a no-op: return before the gate's eager
+    # checkpoint. The seen-content and stats tables have no txn fence,
+    # so with any of them set the step runs and their own paths decide
+    state_buckets = near_dedup_kwargs.get("state_buckets")
+    fenced = [
+        _resolve_state(p, k, state_buckets, state_format, txn).path
+        for p, k in (
+            (signature_path, "doc_id"),
+            (pairs_path, ("id_a", "id_b")),
+            (scores_path, id_col),
+            (components_path, "doc_id"),
+        )
+        if p is not None
+    ]
+    store._resolve(corpus_path, state_format, "snapshot")
+    if (
+        txn is not None
+        and bloom_path is None and hashes_path is None and stats_path is None
+        and all(store.txn_applied(p, txn) for p in fenced + [corpus_path])
+    ):
+        return
     if pii_types:
         from ..operators.pii import redact_pii
 
@@ -1725,17 +1749,15 @@ def corpus_ingest_batch(
         # table); this table answers "which cluster is this doc in NOW"
         update_component_state(
             batch_pairs, components_path,
-            state_buckets=near_dedup_kwargs.get("state_buckets"),
-            state_format=state_format, txn=txn,
+            state_buckets=state_buckets, state_format=state_format, txn=txn,
         )
     quality_score_batch(
         gated, lm, scores_path, id_col, text_col,
         # one knob lays out both merge-state tables; the signature
         # table picks it up through near_dedup_kwargs
-        state_buckets=near_dedup_kwargs.get("state_buckets"),
-        state_format=state_format, txn=txn,
+        state_buckets=state_buckets, state_format=state_format, txn=txn,
     )
-    upsert_store(
+    store.upsert_store(
         batch_df.sparkSession, gated, corpus_path, key=id_col,
         fmt=state_format, default="snapshot", txn=txn,
     )
@@ -2237,7 +2259,7 @@ def takedown_batch(
         if table_exists(corpus_path):
             survivors = read_table(spark, corpus_path, merge_schema=True)
         else:
-            survivors = spark.createDataFrame([], doomed.schema)
+            survivors = empty_frame(spark, doomed.schema)
 
     def _bucketed_doom(path: str, doomed_keys: DataFrame, key_cols):
         """(doomed frame, delete key) for a snapshot state table:

@@ -2296,3 +2296,92 @@ def test_fenced_replays_run_no_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert S.current_version(root) == v_src and S.current_version(dst) == v_dst
+
+
+# ---------------------------------------------------------------------------
+# optimizer-visible empty frames: an append merge plans as its write
+# ---------------------------------------------------------------------------
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _plan_has(df, *nodes):
+    plan = _optimized(df).toString()
+    return [n for n in nodes if n in plan]
+
+
+def test_empty_frame_optimizes_to_empty_local_relation(spark):
+    import json
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from nba_data_pipeline_spark.core.data import empty_frame
+
+    schema = StructType([
+        StructField("k", LongType(), False),
+        StructField("s", StringType(), True),
+    ])
+    df = empty_frame(spark, schema)
+    plan = _optimized(df)
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert plan.data().isEmpty()
+    assert df.schema == schema
+    assert StructType.fromJson(json.loads(plan.schema().json())) == schema
+    assert df.collect() == []
+
+
+def test_merge_over_empty_frame_plans_no_join_or_aggregate(spark):
+    from nba_data_pipeline_spark.core.data import empty_frame
+    from nba_data_pipeline_spark.operators.incremental import insert_ignore
+
+    src = _table(spark, 10)
+    # control: a bare createDataFrame([]) target is opaque to Catalyst
+    opaque = spark.createDataFrame([], src.schema)
+    assert _plan_has(merge_upsert(opaque, src, "k"), "Join", "Aggregate")
+    empty = empty_frame(spark, src.schema)
+    for combine in (merge_upsert, insert_ignore):
+        merged = combine(empty, src, "k")
+        assert _plan_has(merged, "Join", "Aggregate", "Union") == []
+        assert _rows(merged) == _rows(src)
+
+
+def test_append_upsert_keeps_rows_and_add_only_cdf(spark, tmp_path):
+    root = str(tmp_path / "t")
+    base = _table(spark, 100)
+    S.write_snapshot(spark, base, root, key="k")
+    files_before = {f["path"] for f in S._load_manifest(root, 1)["files"]}
+    fresh = spark.range(1000, 1050).select(
+        F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
+    )
+    v = S.upsert_snapshot(spark, fresh, root, "k")
+    m = S._load_manifest(root, v)
+    assert m["cdf"] == {"mode": "add_only"}
+    assert files_before <= {f["path"] for f in m["files"]}  # all carried
+    assert m["rows"] == 150
+    assert _rows(S.read_snapshot(spark, root)) == _rows(base.unionByName(fresh))
+    ch = S.snapshot_changes(spark, root, 1, v)
+    assert _rows(ch) == _rows(fresh.withColumn("_change_type", F.lit("insert")))
+
+
+def test_key_between_pruning_every_file_reads_empty(spark, tmp_path):
+    root = str(tmp_path / "t")
+    S.write_snapshot(spark, _table(spark, 500), root, key="k")
+    df = S.read_snapshot(spark, root, key_between=("k", 10_000, 20_000))
+    assert df.schema == S._schema_of(S._load_manifest(root, 1))
+    assert df.count() == 0
+    assert _optimized(df).getClass().getSimpleName() == "LocalRelation"
+
+
+def test_changes_over_commit_without_change_files_is_empty(spark, tmp_path):
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    root = str(tmp_path / "t")
+    S.write_snapshot(spark, _table(spark, 500), root, key="k")
+    v = S.compact_snapshot(spark, root, target_rows_per_file=100)
+    ch = S.snapshot_changes(spark, root, 1, v)
+    schema = S._schema_of(S._load_manifest(root, v))
+    want = StructType(schema.fields + [StructField("_change_type", StringType(), False)])
+    assert ch.schema == want
+    assert ch.collect() == []
+    assert _optimized(ch).getClass().getSimpleName() == "LocalRelation"

@@ -353,6 +353,42 @@ def test_corpus_ingest_batch_txn_fences_whole_composition(spark, tmp_path):
     assert read_store(spark, p["corpus"]).count() == 6
 
 
+def test_corpus_ingest_batch_replay_runs_no_spark_jobs(spark, tmp_path):
+    """A redelivered batch every table already committed returns before
+    the gate's eager checkpoint: 0 jobs, every version unchanged."""
+    import uuid
+
+    from nba_data_pipeline_spark.operators.text import fit_trigram_lm
+    from nba_data_pipeline_spark.streaming.ops import corpus_ingest_batch
+
+    docs = _docs(spark, [(i, f"{BASE} doc {i}") for i in range(6)])
+    lm = fit_trigram_lm(docs, "text")
+    p = {k: str(tmp_path / k) for k in ("corpus", "sigs", "pairs", "scores")}
+    kw = dict(
+        gate_kwargs=dict(stopwords=("alpha", "beta"), min_tokens=3),
+        num_perm=16, bands=8, threshold=0.3, state_format="snapshot",
+    )
+    args = (docs, lm, p["corpus"], p["sigs"], p["pairs"], p["scores"])
+    corpus_ingest_batch(*args, txn=("ingest", 1), **kw)
+    versions = {k: S.current_version(v) for k, v in p.items()}
+
+    sc = spark.sparkContext
+    group = f"corpus-replay-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "corpus replay")
+    try:
+        corpus_ingest_batch(*args, txn=("ingest", 1), **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {k: S.current_version(v) for k, v in p.items()} == versions
+    # the early return still resolves first: a mistyped format raises
+    with pytest.raises(ValueError, match="unknown table format"):
+        corpus_ingest_batch(
+            *args, txn=("ingest", 1), **{**kw, "state_format": "snapshots"}
+        )
+
+
 def test_stream_quality_scores_app_id_end_to_end(spark, tmp_path):
     """stream_quality_scores with app_id (VERDICT r15 task #7 — the
     replay-proof twin of the near-dedup e2e test): epochs commit the

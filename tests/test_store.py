@@ -15,6 +15,7 @@ from nba_data_pipeline_spark.sinks.store import (
     is_snapshot_table,
     read_store,
     store_exists,
+    txn_applied,
     upsert_store,
 )
 
@@ -75,6 +76,20 @@ def test_txn_fence_snapshot_only(spark, tmp_path):
     with pytest.raises(ValueError, match="txn"):
         upsert_store(spark, _df(spark, [(1, 1)]), q, "k", fmt="swap",
                      txn=("app", 1))
+
+
+def test_txn_applied_reads_the_watermark(spark, tmp_path):
+    p = str(tmp_path / "t")
+    assert not txn_applied(p, ("app", 1))  # absent table
+    upsert_store(spark, _df(spark, [(1, 1)]), p, "k", fmt="snapshot",
+                 txn=("app", 2))
+    assert txn_applied(p, ("app", 2)) and txn_applied(p, ("app", 1))
+    assert not txn_applied(p, ("app", 3))
+    assert not txn_applied(p, ("other", 1))
+    assert not txn_applied(p, None)
+    q = str(tmp_path / "u")
+    upsert_store(spark, _df(spark, [(1, 1)]), q, "k", fmt="swap")
+    assert not txn_applied(q, ("app", 1))  # swap: no watermark
 
 
 def test_store_exists_and_crashed_snapshot_is_absent(spark, tmp_path):

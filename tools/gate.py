@@ -28,6 +28,8 @@ session per query, one untimed warm run, then the best of
 print the log-log slope between consecutive scales:
 slope = log(t2/t1) / log(n2/n1); 1.0 is linear in the scaled input,
 0.0 is flat. Their docstrings hold each experiment's claim and bar.
+``slope merge_phases`` is the one probe among them: jobs and seconds
+per phase of a snapshot merge, with no scaling and no bar.
 
 This module imports neither pyspark nor duckdb at load time: bench.py
 and the tests import ``floor`` from here.
@@ -780,6 +782,91 @@ def _merge(runs: int) -> int:
     for mode, points in results.items():
         for lo, hi, s in slopes(points):
             print(f"{mode:9s} slope {lo:,}->{hi:,}: {s:+.2f}")
+    return 0
+
+
+@experiment("merge_phases", runs=2)
+def _merge_phases(runs: int) -> int:
+    """Jobs and seconds per snapshot-merge phase, no scaling and no bar:
+    a 300-row append batch (every key new) and a 2-row point batch (one
+    existing key, one new) upserted into a 200k-row, 2-file
+    bigint-keyed snapshot table, each run into a fresh copy. Each phase
+    (bounds, refine, stage:data, stage:cdf, commit) runs in its own job
+    group; `other` is the rest of the upsert's jobs, which includes the
+    source's shuffle stages that the lazy checkpoint runs at call time."""
+    from pyspark.sql import functions as F
+
+    from nba_data_pipeline_spark.sinks import snapshot as S
+
+    spark = _session("merge_phases", cpus="4", shuffle="4")
+    sc = spark.sparkContext
+    phases = ("bounds", "refine", "stage:data", "stage:cdf", "commit")
+    seen: dict[str, list] = {}
+    outer = ["", ""]
+
+    def timed(name_of, fn):
+        def wrapper(*args, **kw):
+            name = name_of(kw)
+            group = f"{outer[0]}/{name}"
+            sc.setJobGroup(group, name)
+            t0 = clock()
+            try:
+                return fn(*args, **kw)
+            finally:
+                seen.setdefault(name, []).append((group, clock() - t0))
+                sc.setJobGroup(outer[0], outer[1])
+        return wrapper
+
+    patched = {
+        "_batch_bounds": lambda kw: "bounds",
+        "_refine_touched": lambda kw: "refine",
+        "_stage_files": lambda kw: "stage:cdf" if kw.get("prefix") else "stage:data",
+        "_commit": lambda kw: "commit",
+    }
+    originals = {a: getattr(S, a) for a in patched}
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def keyed(lo: int, n: int, v: int):
+        return spark.range(lo, lo + n).select(
+            F.col("id").alias("k"), F.lit(v).cast("long").alias("v")
+        )
+
+    batches = {
+        "append": keyed(1_000_000, 300, -1),
+        "point": keyed(99_999, 1, -2).unionByName(keyed(2_000_000, 1, -2)),
+    }
+    print(f"{'batch':<7} {'run':>3} {'phase':<11} {'jobs':>5} {'sec':>7}")
+    with scratch_dir("merge_phases_") as work:
+        base = os.path.join(work, "base")
+        S.write_snapshot(spark, keyed(0, 200_000, 0), base, key="k")
+        S.compact_snapshot(spark, base, target_rows_per_file=100_000)
+        for a, name_of in patched.items():
+            setattr(S, a, timed(name_of, originals[a]))
+        try:
+            for r in range(runs):
+                for label, batch in batches.items():
+                    root = os.path.join(work, f"{label}{r}")
+                    shutil.copytree(base, root)
+                    seen.clear()
+                    outer[:] = [f"merge_phases-{label}-{r}", label]
+                    sc.setJobGroup(*outer)
+                    t0 = clock()
+                    S.upsert_snapshot(spark, batch, root, "k")
+                    total = clock() - t0
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    rows = [(p, jobs(g), sec) for p in phases for g, sec in seen.get(p, [])]
+                    rows.insert(0, ("other", jobs(outer[0]),
+                                    total - sum(sec for *_, sec in rows)))
+                    rows.append(("total", sum(n for _, n, _ in rows), total))
+                    for p, n, sec in rows:
+                        print(f"{label:<7} {r:>3} {p:<11} {n:>5} {sec:>7.2f}", flush=True)
+        finally:
+            for a, fn in originals.items():
+                setattr(S, a, fn)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
     return 0
 
 
