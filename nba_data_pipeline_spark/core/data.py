@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -173,16 +174,64 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples, lists, ``Row``s or
+    dicts) typed by ``schema`` (a StructType or a DDL string), built
+    through Arrow. ``createDataFrame(list)`` pickles the rows into an
+    RDD that a Python worker re-serializes, which costs a Python-worker
+    job (~0.3 s on a 4-core host) every time the frame runs. An Arrow
+    table is turned into rows JVM-side, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    Values go through ``schema.toInternal`` first, exactly as on the
+    list path: dates become day numbers and naive datetimes are read in
+    the driver's local zone (a plain ``pa.array`` would read them as
+    UTC). A NULL in a non-nullable column raises. The table is cut into
+    ``min(len(rows), defaultParallelism)`` record batches, one
+    partition each."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    width = len(schema.fields)
+    internal = []
+    for r in rows:
+        # before toInternal, whose zip would drop a long row's extras
+        if isinstance(r, (tuple, list)) and len(r) != width:
+            raise ValueError(f"row has {len(r)} fields, schema has {width}: {r!r}")
+        internal.append(schema.toInternal(r))
+
+    def batch(part: list) -> pa.RecordBatch:
+        cols = [
+            pa.array([r[i] for r in part], type=arrow.field(i).type)
+            for i in range(width)
+        ]
+        for f, col in zip(schema.fields, cols):
+            if not f.nullable and col.null_count:
+                raise ValueError(f"NULL in non-nullable column {f.name!r}")
+        return pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+    # no rows still make one (empty) batch: Spark's nested-type
+    # timestamp localization rejects a table with no chunks
+    m = len(internal)
+    n = max(min(m, spark.sparkContext.defaultParallelism), 1)
+    parts = [internal[i * m // n:(i + 1) * m // n] for i in range(n)]
+    table = pa.Table.from_batches([batch(p) for p in parts], arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     """A zero-row frame of ``schema`` that the optimizer can see is
-    empty. A bare ``createDataFrame([], schema)`` is a ``LogicalRDD``
-    whose emptiness Catalyst cannot know, so a join or union over it
-    still plans (and runs) its aggregates and shuffles. ``limit(0)``
-    lets ``OptimizeLimitZero`` turn it into an empty ``LocalRelation``,
-    and ``PropagateEmptyRelation`` then folds every join and union
-    over it away: an append merge into an empty target plans as the
-    source alone."""
-    return spark.createDataFrame([], schema).limit(0)
+    empty. ``limit(0)`` lets ``OptimizeLimitZero`` turn it into an
+    empty ``LocalRelation`` whatever relation Spark built for the
+    rows, and ``PropagateEmptyRelation`` then folds every join and
+    union over it away: an append merge into an empty target plans as
+    the source alone."""
+    return local_frame(spark, [], schema).limit(0)
 
 
 def maybe_broadcast(

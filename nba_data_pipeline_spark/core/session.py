@@ -33,6 +33,23 @@ def _shuffle_partitions() -> str:
     SPARK_GRAFT_CPUS."""
     return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", _cpus())
 
+
+def _driver_mem() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` wins; otherwise half the
+    host's physical memory, at most the 16g the engine was tuned with
+    and at least 1g. A fixed 16g overcommits a 15 GB host with no swap
+    (the likeliest cause of the JVM lost mid-run in
+    ``tools/gate.py slope scaling``)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "16g"
+    return f"{max(1024, min(16 << 10, (phys // 2) >> 20))}m"
+
+
 # single source of truth for "small enough to force-broadcast": the
 # session's autoBroadcastJoinThreshold AND the explicit-hint size gates
 # (e.g. core.data.maybe_broadcast) both read this
@@ -85,7 +102,7 @@ def get_session(app_name: str = "nba_data_pipeline_spark", **extra_conf: str) ->
         SparkSession.builder.master(f"local[{_cpus()}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", _shuffle_partitions())
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (*RUNTIME_CONF, *extra_conf.items()):

@@ -29,7 +29,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core.data import empty_frame, load_table, maybe_broadcast, spread_by_key, ts_micros
+from .core.data import (
+    empty_frame, load_table, local_frame, maybe_broadcast, spread_by_key, ts_micros,
+)
 from .functions.gameid import season_from_game_id, season_type_from_game_id
 from .functions.ids import add_id, fill_nulls, stamp
 from .functions.timeops import clock_to_seconds
@@ -542,7 +544,8 @@ def q_takedown_gate(spark, sf):
             [i for i in surv if 1_000_000 <= i < 2_000_000]
         ) == min(3, nd)
         survivors_still_seen = not any(i >= 2_000_000 for i in surv)
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [(
                 bool(corpus_ok),
                 orphans == 0,
@@ -2486,8 +2489,8 @@ def q_fuzzy_join(spark, sf):
     from .operators.dedup import fuzzy_join
 
     left = _t(spark, sf, "documents").select("source").distinct()
-    dirty = spark.createDataFrame(
-        [("src0",), ("sre1",), ("srx2",), ("zzz9",)], "dirty string"
+    dirty = local_frame(
+        spark, [("src0",), ("sre1",), ("srx2",), ("zzz9",)], "dirty string"
     )
     out = fuzzy_join(left, dirty, "source", "dirty", max_distance=1)
     return out.select("source", "dirty_matched", F.col("edit_distance").cast("long").alias("edit_distance"))
@@ -3522,8 +3525,8 @@ def q_cms_bounds_gate(spark, sf):
         est = sketches[r["lang"]].estimateCount(r["token"])
         if not (r["n"] <= est <= r["n"] + math.ceil(tots[r["lang"]] * 0.001)):
             ok = False
-    return spark.createDataFrame(
-        [("cms_bounds", bool(ok))], "method string, bounds_ok boolean"
+    return local_frame(
+        spark, [("cms_bounds", bool(ok))], "method string, bounds_ok boolean"
     )
 
 
@@ -3609,8 +3612,8 @@ _BPE_GATE_DOCS = [
 
 
 def _bpe_gate_corpus(spark):
-    return spark.createDataFrame(
-        _BPE_GATE_DOCS, "doc_id long, text string, lang string"
+    return local_frame(
+        spark, _BPE_GATE_DOCS, "doc_id long, text string, lang string"
     )
 
 
@@ -4707,7 +4710,8 @@ def q_jl_distortion_gate(spark, sf):
     frac = nn.agg(
         F.avg((F.col("cid") == F.col("qid") + 1_000_000).cast("double")).alias("f")
     ).collect()[0]["f"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("median_distortion", bool(med <= 0.5)), ("planted_nn_preserved", bool(frac >= 0.9))],
         "metric string, ok boolean",
     ).orderBy("metric")
@@ -5065,8 +5069,8 @@ def q_quality_classifier_gate(spark, sf):
     ).collect()[0]
     bal_acc = ((m["tpr"] or 0.0) + (m["tnr"] or 0.0)) / 2
     sep = (m["p_pos"] or 0.0) - (m["p_neg"] or 0.0)
-    return spark.createDataFrame(
-        [("balanced_accuracy", bool(bal_acc >= 0.9)), ("separation", bool(sep >= 0.2))],
+    return local_frame(
+        spark, [("balanced_accuracy", bool(bal_acc >= 0.9)), ("separation", bool(sep >= 0.2))],
         "metric string, ok boolean",
     ).orderBy("metric")
 
@@ -5730,7 +5734,7 @@ _BM25_TOPK_ORACLE = (
 def q_bm25(spark, sf):
     from .operators.text import bm25_topk
 
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = local_frame(spark, _BM25_QUERIES, "query_id long, query_text string")
     return bm25_topk(_t(spark, sf, "documents"), qdf, k=10)
 
 
@@ -5747,7 +5751,7 @@ def q_bm25_state_gate(spark, sf):
     from .streaming.ops import bm25_ingest_batch, bm25_query_index
 
     docs = _t(spark, sf, "documents")
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = local_frame(spark, _BM25_QUERIES, "query_id long, query_text string")
 
     def build(root):
         idx = f"{root}/bm25"
@@ -5809,7 +5813,7 @@ def q_retrieval_metrics(spark, sf):
     from .operators.similarity import ranking_metrics
     from .operators.text import bm25_topk, tokens
 
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = local_frame(spark, _BM25_QUERIES, "query_id long, query_text string")
     docs = _t(spark, sf, "documents")
     run = bm25_topk(docs, qdf, k=10)
     first_term = F.element_at(tokens("query_text"), 1)
@@ -5865,7 +5869,7 @@ def q_hard_negatives(spark, sf):
     positives = each query's BM25 top-1, negatives = next 5."""
     from .operators.text import bm25_topk, hard_negatives
 
-    qdf = spark.createDataFrame(_BM25_QUERIES, "query_id long, query_text string")
+    qdf = local_frame(spark, _BM25_QUERIES, "query_id long, query_text string")
     docs = _t(spark, sf, "documents")
     pos = bm25_topk(docs, qdf, k=1).select("query_id", "doc_id")
     return hard_negatives(docs, qdf, pos, n_negatives=5, depth=50)
@@ -6908,8 +6912,8 @@ def _fixture_game(spark):
         (gid, 100, 12, 0, 2, "12:00", 0, 0, 0, 0),
         (gid, 110, 1, 0, 2, "6:30", 107, home, 0, 0),
     ]
-    pbp = spark.createDataFrame(
-        pbp_rows,
+    pbp = local_frame(
+        spark, pbp_rows,
         "GAME_ID string, EVENTNUM long, EVENTMSGTYPE long, EVENTMSGACTIONTYPE long,"
         "PERIOD long, PCTIMESTRING string, PLAYER1_ID long, PLAYER1_TEAM_ID long,"
         "PLAYER2_ID long, PLAYER2_TEAM_ID long",
@@ -6923,13 +6927,13 @@ def _fixture_game(spark):
         (away, 203): [(0.0, 14400.0)], (away, 204): [(0.0, 14400.0)],
         (away, 205): [(0.0, 14400.0)], (away, 206): [(5000.0, 7200.0)],
     }
-    rot = spark.createDataFrame(
-        [(gid, t, p, s) for (t, p), s in stints.items()],
+    rot = local_frame(
+        spark, [(gid, t, p, s) for (t, p), s in stints.items()],
         "GAME_ID string, TEAM_ID long, PLAYER_ID long,"
         "STINTS array<struct<IN_TIME_REAL: double, OUT_TIME_REAL: double>>",
     )
-    tgl = spark.createDataFrame(
-        [(gid, home, "A vs. B"), (gid, away, "B @ A")],
+    tgl = local_frame(
+        spark, [(gid, home, "A vs. B"), (gid, away, "B @ A")],
         "GAME_ID string, TEAM_ID long, MATCHUP string",
     )
     return pbp, rot, tgl
@@ -7556,7 +7560,7 @@ def q_domain_block_filter(spark, sf):
         extract_urls(_url_seeded(spark, sf))
         .select("doc_id", F.explode("urls").alias("url"))
     )
-    blocklist = spark.createDataFrame([("bad-ads.org",)], "domain string")
+    blocklist = local_frame(spark, [("bad-ads.org",)], "domain string")
     return filter_blocked_domains(urls, blocklist, "url").select("doc_id", "url")
 
 
@@ -8887,8 +8891,8 @@ def q_streaming_hh_gate(spark, sf):
     )
     missing = musts.join(summary, ["key", "token"], "left_anti").count()
     ok = overcount == 0 and slack == 0 and missing == 0
-    return spark.createDataFrame(
-        [("mg_stream", bool(ok))], "method string, bounds_ok boolean"
+    return local_frame(
+        spark, [("mg_stream", bool(ok))], "method string, bounds_ok boolean"
     )
 
 
@@ -10316,7 +10320,7 @@ def q_state_txn_fence_gate(spark, sf):
             ("sig_version_after_replay", current_version(s_m)),
             ("sigs_match_single_shot", int(sigs_ok)),
         ]
-        return spark.createDataFrame(rows, "metric string, value long").orderBy(
+        return local_frame(spark, rows, "metric string, value long").orderBy(
             "metric"
         )
 
@@ -10393,7 +10397,7 @@ def q_state_txn_fence_bucketed_gate(spark, sf):
             ("sig_version_after_replay", current_version(s_b)),
             ("state_matches_flat_single_shot", int(state_ok)),
         ]
-        return spark.createDataFrame(rows, "metric string, value long").orderBy(
+        return local_frame(spark, rows, "metric string, value long").orderBy(
             "metric"
         )
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.data import local_frame
+
 END_OF_WORD = "</w>"
 
 
@@ -239,8 +241,8 @@ def bpe_fit(
         seg = seg.select("word", "freq", syms.alias("syms")).localCheckpoint(eager=True)
 
     spark = words.sparkSession
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, merged string, pair_count long"
+    return local_frame(
+        spark, merges, "step int, left string, right string, merged string, pair_count long"
     )
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.data import local_frame
+
 
 def hashed_token_features(
     df: DataFrame,
@@ -105,7 +107,8 @@ def fit_quality_classifier(
     model = lr.fit(train)
     coefs = model.coefficients.toArray()
     spark = labeled.sparkSession
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [(int(i), float(w)) for i, w in enumerate(coefs) if w != 0.0],
         "bucket long, weight double",
     )

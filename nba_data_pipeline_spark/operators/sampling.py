@@ -15,6 +15,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.data import local_frame
+
 KNUTH = 2654435761  # 2^32 * golden ratio conjugate
 MOD = 1 << 32
 BUCKETS = 10_000
@@ -478,8 +480,8 @@ def dsir_log_ratios(
         (b, *rows.get(b, (0, 0))) for b in range(n_buckets)
     ]
     sess = (target if target is not None else source).sparkSession
-    joined = sess.createDataFrame(
-        spine, "bucket: long, target_n: long, source_n: long"
+    joined = local_frame(
+        sess, spine, "bucket: long, target_n: long, source_n: long"
     )
     lr = F.log((F.col("target_n") + 1) / (F.lit(t_tot) + n_buckets)) - F.log(
         (F.col("source_n") + 1) / (F.lit(s_tot) + n_buckets)

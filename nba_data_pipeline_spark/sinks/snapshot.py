@@ -77,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..core.data import empty_frame
+from ..core.data import empty_frame, local_frame
 from ..operators.incremental import insert_ignore, merge_upsert
 from .writer import _align_schemas
 
@@ -809,7 +809,7 @@ def _refine_touched(
             StructField(f"_lo_{k}", tbl_types[k], True),
             StructField(f"_hi_{k}", tbl_types[k], True),
         ]
-    ranges = spark.createDataFrame(rows, StructType(fields))
+    ranges = local_frame(spark, rows, StructType(fields))
     cond = None
     src = source.select(*refinable).dropDuplicates(refinable)
     for k in refinable:

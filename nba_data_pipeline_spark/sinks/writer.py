@@ -24,6 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.data import local_frame
 from ..operators.incremental import insert_ignore, merge_upsert
 
 
@@ -657,7 +658,7 @@ def compact_table(
     # rebuild the broadcast side from the ALREADY-COLLECTED rows —
     # reusing `stats` would embed its full-table aggregate subplan in
     # the rewrite and scan the table a second time at write
-    frag_df = spark.createDataFrame(frag, schema=stats.schema)
+    frag_df = local_frame(spark, frag, stats.schema)
     sized = df.join(F.broadcast(frag_df), pcols)
     bucketed = sized.withColumn(
         "_f",

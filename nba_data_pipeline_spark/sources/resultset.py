@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.data import local_frame
+
 RESULT_SETS_SCHEMA = T.ArrayType(
     T.StructType(
         [
@@ -70,20 +72,26 @@ def result_set_df(
     reference makes the same positional assumption)."""
     passthrough = passthrough or []
     rows = decoded.filter(F.col("set_name") == set_name)
-    # F.get (0-based, null-tolerant), not element_at: ANSI mode makes
+    # get (0-based, null-tolerant), not element_at: ANSI mode makes
     # element_at raise on a ragged wire row, aborting the whole decode;
-    # a short row should yield NULL trailing columns (flag, don't fail)
+    # a short row should yield NULL trailing columns (flag, don't fail).
+    # One parsed projection: a Column per field costs several py4j
+    # calls each, ~60 fields per endpoint
     cols = [
-        F.get("row", i).cast(f.dataType).alias(f.name)
+        f"CAST(get(`row`, {i}) AS {f.dataType.simpleString()}) AS {_quote(f.name)}"
         for i, f in enumerate(schema.fields)
     ]
-    return rows.select(*passthrough, *cols)
+    return rows.selectExpr(*map(_quote, passthrough), *cols)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def payloads_from_json_strings(spark: SparkSession, payloads: list[str]) -> DataFrame:
     """Wrap raw JSON strings (e.g. fixture files or driver-fetched
     responses) into the payload DataFrame shape."""
-    return spark.createDataFrame([(p,) for p in payloads], "payload string")
+    return local_frame(spark, [(p,) for p in payloads], "payload string")
 
 
 def result_sets_to_payload(sets: dict[str, tuple[list[str], list[list]]]) -> str:

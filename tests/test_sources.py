@@ -48,3 +48,22 @@ def test_fetch_many_distributed_fixture(spark):
     decoded = decode_result_sets(out.select("GAME_ID", "payload"))
     assert decoded.count() == 4  # 2 payloads x 2 data rows
     assert set(decoded.columns) >= {"GAME_ID", "set_name", "row"}
+
+
+def test_short_wire_row_yields_null_trailing_columns(spark):
+    payload = result_sets_to_payload(
+        {"PlayByPlay": (["GAME_ID", "EVENTNUM", "PCTIMESTRING"], [["0022400001", 7]])}
+    )
+    schema = T.StructType(
+        [
+            T.StructField("GAME_ID", T.StringType()),
+            T.StructField("EVENTNUM", T.LongType()),
+            T.StructField("PCTIMESTRING", T.StringType()),
+        ]
+    )
+    decoded = decode_result_sets(payloads_from_json_strings(spark, [payload]))
+    typed = result_set_df(decoded, "PlayByPlay", schema, passthrough=["set_name"])
+    assert typed.schema == T.StructType(
+        [T.StructField("set_name", T.StringType()), *schema.fields]
+    )
+    assert [tuple(r) for r in typed.collect()] == [("PlayByPlay", "0022400001", 7, None)]
