@@ -43,8 +43,8 @@ PIPELINES = (
     # full dataset release: pipeline -> per-split shuffled shard trees
     # + audit summary (plans/corpus_pipeline.py release_corpus)
     "corpus_release",
-    # continuous CDC materialization: change-log stream -> bucketed
-    # snapshot with seq-aware tombstones (streaming/ops.py
+    # continuous CDC materialization: change-log stream -> snapshot
+    # table with seq-aware tombstones (streaming/ops.py
     # stream_cdc_apply); latest-wins exact under out-of-order delivery
     "cdc_materialize",
     # right-to-be-forgotten: remove ids from EVERY ingest state table
@@ -175,9 +175,9 @@ def build_parser() -> argparse.ArgumentParser:
         help="corpus_ingest: bound each batch's state-table merge to "
         "pmod(xxhash64(key), N) buckets instead of the whole table (use "
         "once state outgrows whole-rewrites; keep the value stable for a "
-        "given output dir). Composes with --app_id: fenced bucketed "
-        "state rides the snapshot format with bucket leading the merge "
-        "key; without --app_id fresh roots use hive bucket dirs",
+        "given output dir). The bucket column leads each snapshot "
+        "state table's merge key, so a merge rewrites only files that "
+        "hold touched buckets; composes with --app_id",
     )
     p.add_argument(
         "--partition_by",
@@ -193,18 +193,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--gate_stopwords",
         help="corpus_ingest: comma-separated stopword list for the rule gate "
              "(override the English defaults for non-English or synthetic corpora)",
-    )
-    p.add_argument(
-        "--format",
-        choices=("swap", "snapshot"),
-        help="table format for the output: 'snapshot' (manifest-committed "
-        "lakehouse table: atomic commits, time travel, change feed, "
-        "retention — the default for the reference pipeline tables, "
-        "matching the reference's Postgres-as-system-of-record) or "
-        "'swap' (hive-partitioned parquet with partition-swap merges — "
-        "the default for the corpus table, whose shard layout feeds the "
-        "bucketed ingest state). An existing table's on-disk format "
-        "always wins; requesting the other format raises.",
     )
     p.add_argument(
         "--no-cdf",
@@ -448,7 +436,7 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
     from .functions.gameid import season_from_game_id, season_type_from_game_id  # noqa: F401
     from .operators.incremental import delta_filter
     from .plans import nba_pipelines as P
-    from .sinks.store import upsert_store
+    from .sinks.store import require_snapshot, upsert_store
 
     args = parse_args(argv)
     if spark is None:
@@ -458,6 +446,10 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
     if args.pipeline == "snapshot_admin":
         _run_snapshot_admin(spark, args)
         return
+    if args.pipeline not in ("corpus_release", "corpus_takedown", "corpus_ingest"):
+        # --output is one keyed table: refuse a legacy swap table
+        # before reading any input
+        require_snapshot(args.output)
     if args.pipeline == "corpus_release":
         from .plans.corpus_pipeline import release_corpus
 
@@ -476,9 +468,8 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
     if args.pipeline == "corpus_takedown":
         import os as _os
 
-        # store_exists sees BOTH backends — state tables default to the
-        # snapshot format now, which has no top-level parquet files for
-        # the swap-side table_exists to find
+        # store_exists sees snapshot tables (no top-level parquet files
+        # for the swap-side table_exists to find) and legacy swap tables
         from .sinks.store import store_exists
         from .streaming.ops import takedown_batch
 
@@ -513,9 +504,6 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
             args.seq_col,
             op_col=args.op_col,
             checkpoint_dir=args.checkpoint,
-            # bucketed hive state by default; --format snapshot gives
-            # the materialized state atomic commits + time travel + CDF
-            fmt=args.format or "swap",
         )
         q.awaitTermination()
         return
@@ -563,16 +551,7 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
             num_shards=args.shards,
             pii_types=_pii_types(args),
         )
-        # partition by shard, NOT split: the upsert only rewrites
-        # partitions that receive source rows, so partition columns
-        # must be stable per key. shard is the Knuth bucket of doc_id
-        # (immutable); split derives from the dup-cluster id, which can
-        # change when the corpus changes — partitioning on it could
-        # strand a stale copy of a doc in its old split.
-        upsert_store(
-            spark, out, args.output, key="doc_id", partition_by=("shard",),
-            fmt=args.format, default="swap",
-        )
+        upsert_store(spark, out, args.output, key="doc_id")
         return
     inputs = [spark.read.parquet(p) for p in args.input.split(",")]
     seasons = args.seasons or [None]
@@ -582,10 +561,8 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
         if args.game_id and season is None:
             # --game_id path: derive season/type from the id itself
             # (reference utils/utils.py:66-69 positional decode) —
-            # stamping NULLs would create VOID-typed columns that the
-            # (SEASON, SEASON_TYPE)-partitioned write rejects, and a
-            # later --season run would re-upsert the same key into a
-            # different partition.
+            # stamping NULLs would create VOID-typed SEASON columns
+            # that a later --season run could not merge into.
             gid = args.game_id  # format validated in parse_args
             start = int("20" + gid[3:5])
             season = f"{start}-{str(start + 1)[-2:]}"
@@ -636,21 +613,16 @@ def run(argv: Sequence[str], spark: SparkSession | None = None) -> None:
             if store_exists(args.output):
                 existing = read_store(spark, args.output)
                 out = delta_filter(out, existing, ["GAME_ID"])
-        partition = ("SEASON", "SEASON_TYPE") if "SEASON" in out.columns else ()
-        # Reference pipeline tables default to the snapshot format —
-        # parity with Postgres as the system of record (transactional
-        # upserts, consistent readers, database/db_client.py:37-92).
-        # SEASON/SEASON_TYPE pruning moves from hive dirs to the
-        # manifest zone maps (files are key-sorted, GAME_ID embeds the
-        # season, so a season filter prunes files just the same).
+        # Reference pipeline tables are snapshot tables — parity with
+        # Postgres as the system of record (transactional upserts,
+        # consistent readers, database/db_client.py:37-92). SEASON
+        # pruning rides the manifest zone maps (files are key-sorted,
+        # GAME_ID embeds the season, so a season filter prunes files).
         upsert_store(
             spark,
             out,
             args.output,
             key="id" if "id" in out.columns else "GAME_ID",
-            partition_by=partition,
-            fmt=args.format,
-            default="snapshot",
             cdf=args.cdf,
         )
 

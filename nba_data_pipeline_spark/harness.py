@@ -598,16 +598,15 @@ def q_takedown_gate(spark, sf):
 )
 def q_cdc_table_materialize(spark, sf):
     """Continuous CDC materialization
-    (operators/incremental.py cdc_apply_table + read_cdc_snapshot):
+    (sinks/snapshot.py cdc_apply_snapshot + read_cdc_state):
     the same log applied as THREE micro-batches in scrambled seq order
     — updates arriving after their successors, a delete racing a
     late lower-seq update, one batch REDELIVERED — into the
-    bucket-partitioned snapshot with persisted sequence numbers and
-    tombstones. The oracle is one window pass over the flat log, so
+    snapshot table with persisted sequence numbers and tombstones. The oracle is one window pass over the flat log, so
     the value hash proves latest-wins stays exact under out-of-order,
     at-least-once delivery — the semantics the reference's row-wise
     ON CONFLICT upserts (database/db_client.py:69-90) cannot give."""
-    from .operators.incremental import cdc_apply_table, read_cdc_snapshot
+    from .sinks.snapshot import cdc_apply_snapshot, read_cdc_state
 
     c = _t(spark, sf, "customer")
 
@@ -637,8 +636,8 @@ def q_cdc_table_materialize(spark, sf):
     def build(root):
         path = f"{root}/snap"
         for b in (b1, b2, b2, b3):  # b2 twice = redelivery
-            cdc_apply_table(spark, b, path, ["c_custkey"], "seq", n_buckets=32)
-        out = read_cdc_snapshot(spark, path).select(
+            cdc_apply_snapshot(spark, b, path, ["c_custkey"], "seq")
+        out = read_cdc_state(spark, path).select(
             "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
         )
         return out
@@ -4233,6 +4232,7 @@ def q_component_state_gate(spark, sf):
     connected_components over the full pair history. The
     takedown_gate temp-dir pattern; the incremental_components query
     checks the operator, this checks the persisted composition."""
+    from .sinks.store import read_store
     from .streaming.ops import update_component_state
 
     ev = _t(spark, sf, "events")
@@ -4249,7 +4249,7 @@ def q_component_state_gate(spark, sf):
         update_component_state(b2, labels_p, state_buckets=8)
         update_component_state(b2, labels_p, state_buckets=8)  # replay
         got = (
-            spark.read.parquet(labels_p)
+            read_store(spark, labels_p)
             .select("doc_id", F.col("component_id").cast("long").alias("component_id"))
             .localCheckpoint()  # materialize before the temp dir dies
         )
@@ -9594,8 +9594,8 @@ def q_seen_content_delta(spark, sf):
 
 # ===========================================================================
 # Manifest-committed snapshot tables (sinks/snapshot.py): the lakehouse
-# commit protocol next to the swap-protocol state tables — atomic
-# link-CAS commits, file-granular copy-on-write merges, time travel.
+# commit protocol behind every keyed write — atomic link-CAS commits,
+# file-granular copy-on-write merges, time travel.
 # ===========================================================================
 
 def _snapshot_merge_chain(spark, sf, prefix: str, cdf: bool | None) -> DataFrame:
@@ -10183,8 +10183,8 @@ def q_derived_view_gate(spark, sf):
 )
 def q_cdc_snapshot_gate(spark, sf):
     """CDC materialization on the snapshot format (sinks/snapshot.py
-    cdc_apply_snapshot + read_cdc_state) — the transactional
-    counterpart of cdc_apply_table's hive buckets. Batches applied
+    cdc_apply_snapshot + read_cdc_state) with the batches in a
+    different disorder than cdc_table_materialize. Batches applied
     OUT OF ORDER: the high-seq batch (updates %10==0, deletes %10==1,
     inserts) lands first; a late batch with LOWER seqs then arrives
     and every one of its changes must lose — including an update
@@ -10348,8 +10348,8 @@ def q_state_txn_fence_bucketed_gate(spark, sf):
     the snapshot format with ``bucket = pmod(xxhash64(key), n)`` as
     the LEADING merge-key column — key-sorted files + zone maps + the
     exact refine pass bound each merge's rewrite to the files holding
-    touched buckets (the manifest-format equivalent of the swap
-    layout's per-dir rewrites) — and a redelivered epoch advances
+    touched buckets (the manifest-format equivalent of per-bucket
+    dir rewrites) — and a redelivered epoch advances
     neither version. State equals a FLAT single-shot ingest of the
     same documents (bucket column aside), so the bucketing is pure
     layout, not semantics. Reference parity anchor: Postgres upserts

@@ -243,7 +243,7 @@ def fold_aggregate_state_table(
     seen-content hash table (``streaming/ops.py``).
 
     REPLAY SEMANTICS: the fold is ADDITIVE, so unlike the upsert-based
-    merge states (near-dedup signatures, CDC snapshots) a replayed
+    merge states (near-dedup signatures, CDC state) a replayed
     batch double-counts. ``batch_id`` makes replay exact at BUCKET
     granularity — each bucket dir records the last applied batch in an
     ``_epoch`` column (every row, constant per swap), and a merge
@@ -256,9 +256,8 @@ def fold_aggregate_state_table(
     With ``batch_id=None`` the caller owns at-most-once delivery
     (pair with ``delta_filter`` / the Bloom seen-set).
 
-    Default ``n_buckets``: see ``sinks.writer.choose_state_buckets``
-    for the measured crossover rule (whole rewrite wins below ~50M
-    state rows; past it, ~1M rows per bucket)."""
+    Sizing ``n_buckets`` (measured): the whole rewrite wins below ~50M
+    state rows; past it, aim for ~1M rows per bucket."""
     from ..sinks.writer import (
         _rewrite_partitions,
         check_partition_layout,
@@ -374,155 +373,3 @@ def cdc_apply(
     untouched = snapshot.join(latest.select(*keys), keys, "left_anti")
     upserts = latest.filter(F.col(op_col) != F.lit("D")).select(snapshot.columns)
     return untouched.unionByName(upserts)
-
-
-def cdc_apply_table(
-    spark,
-    changes: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    seq_col: str,
-    op_col: str = "op",
-    n_buckets: int = 256,
-) -> None:
-    """Continuously materialize a CDC log into a bucket-partitioned
-    snapshot table — latest-wins stays EXACT under out-of-order
-    delivery, at-least-once redelivery, and deletes, because the state
-    row keeps its winning sequence number and deletes persist as
-    TOMBSTONES (the merge-on-read design Delta/Hudi use, expressed
-    over plain parquet):
-
-    - within-batch: one window pass picks the latest change per key
-      (same tie-break discipline as ``cdc_apply``),
-    - state rows carry ``_seq`` (the applied change's sequence) and
-      ``_deleted``; merging state with the batch is ONE more window
-      pass over (touched-bucket state ∪ batch winners) by ``_seq``
-      desc — a change that arrives LATE with a LOWER seq than what the
-      table already applied loses, and a late update for a deleted key
-      loses to the tombstone's seq,
-    - the table is laid out in ``pmod(xxhash64(keys), n_buckets)``
-      partition dirs; a batch reads and rewrites only its touched
-      buckets (same O(batch) contract as
-      ``fold_aggregate_state_table``).
-
-    Read through ``read_cdc_snapshot`` (filters tombstones, drops the
-    bookkeeping columns). Redelivering any batch is a no-op by
-    construction: the replayed winners carry the same seqs and lose
-    (or tie into the same values) against the state.
-
-    Default ``n_buckets``: see ``sinks.writer.choose_state_buckets``.
-    """
-    from ..sinks.writer import (
-        _rewrite_partitions,
-        check_partition_layout,
-        read_table,
-        table_exists,
-        write_layout_meta,
-        write_table,
-    )
-    from pyspark.sql import Window
-
-    keys = list(keys)
-    # same modulus-is-layout guard as fold_aggregate_state_table
-    check_partition_layout(path, ["bucket"], n_buckets)
-    payload = [
-        c for c in changes.columns if c not in (*keys, seq_col, op_col)
-    ]
-    bucket = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).alias("bucket")
-    tie_hash = F.xxhash64(
-        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in payload]
-    )
-    w_batch = Window.partitionBy(*keys).orderBy(
-        F.col(seq_col).desc(), F.col(op_col).desc(), tie_hash.desc()
-    )
-    winners = (
-        changes.withColumn("_rn", F.row_number().over(w_batch))
-        .filter(F.col("_rn") == 1)
-        .select(
-            *keys,
-            *payload,
-            F.col(seq_col).cast("long").alias("_seq"),
-            (F.col(op_col) == F.lit("D")).alias("_deleted"),
-        )
-        .select("*", bucket)
-    )
-    if not table_exists(path):
-        write_table(winners.repartition("bucket"), path, partition_by=["bucket"])
-        write_layout_meta(path, ["bucket"], n_buckets)
-        return
-    touched = [r.bucket for r in winners.select("bucket").distinct().collect()]
-    if not touched:
-        return
-    # merge_schema for the same reason as fold_aggregate_state_table:
-    # merge paths must see every file's columns, not one file's schema
-    state = (
-        read_table(spark, path, merge_schema=True)
-        .withColumn("bucket", F.col("bucket").cast("long"))
-        .filter(F.col("bucket").isin(touched))
-        .select(winners.columns)
-    )
-    state_tie = F.xxhash64(
-        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in payload]
-    )
-    w_merge = Window.partitionBy(*keys).orderBy(
-        F.col("_seq").desc(),
-        # ties prefer the tombstone-free row deterministically, then
-        # content hash — a well-formed log never ties on (key, seq)
-        F.col("_deleted").asc(),
-        state_tie.desc(),
-    )
-    merged = (
-        state.unionByName(winners)
-        .withColumn("_rn", F.row_number().over(w_merge))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    _rewrite_partitions(spark, merged.repartition("bucket"), path, ["bucket"])
-    # legacy tables (no sidecar) gain the bucket-modulus guard on their
-    # first successful merge — the check_partition_layout contract
-    write_layout_meta(path, ["bucket"], n_buckets)
-
-
-def read_cdc_snapshot(spark, path: str) -> DataFrame:
-    """The live view of a ``cdc_apply_table`` state table: tombstones
-    filtered, bookkeeping columns dropped. Heals any crash-interrupted
-    bucket swap first — a half-swapped bucket would read as absent."""
-    from ..sinks.writer import heal_partition_swaps, read_table
-
-    heal_partition_swaps(path)
-    df = read_table(spark, path)
-    return df.filter(~F.col("_deleted")).drop("_seq", "_deleted", "bucket")
-
-
-def compact_cdc_table(
-    spark,
-    path: str,
-    drop_tombstones_below_seq: int | None = None,
-) -> None:
-    """Housekeeping for a ``cdc_apply_table`` snapshot: rewrite every
-    bucket to one file and (optionally) garbage-collect tombstones.
-
-    A tombstone must outlive the possibility of a LATE change with a
-    lower sequence arriving for its key — dropping it early would let
-    such a change resurrect a deleted row. ``drop_tombstones_below_seq``
-    is therefore a WATERMARK the caller derives from the log transport
-    (e.g. "every change below seq S has been delivered"): only
-    tombstones whose ``_seq`` is below it are removed. With ``None``
-    the compaction only merges small files.
-
-    Runs as one full-table rewrite — schedule it like any compaction
-    (off-peak, per-partition at cluster scale), not per batch.
-    """
-    from ..sinks.writer import _rewrite_partitions, heal_partition_swaps, read_table
-
-    heal_partition_swaps(path)  # never compact a half-swapped read
-    df = read_table(spark, path).withColumn(
-        "bucket", F.col("bucket").cast("long")
-    )
-    if drop_tombstones_below_seq is not None:
-        df = df.filter(
-            ~(F.col("_deleted") & (F.col("_seq") < drop_tombstones_below_seq))
-        )
-    _rewrite_partitions(
-        spark, df.repartition("bucket").localCheckpoint(), path, ["bucket"]
-    )

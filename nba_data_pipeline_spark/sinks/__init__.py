@@ -1,1 +1,1 @@
-from .writer import write_table, upsert_table, insert_ignore_table, read_table  # noqa: F401
+from .writer import read_table, write_table  # noqa: F401

@@ -1878,21 +1878,18 @@ def cdc_apply_snapshot(
     txn: tuple[str, int] | None = None,
 ) -> int:
     """Materialize a CDC log batch onto a SNAPSHOT table — the
-    transactional counterpart of ``operators/incremental.
-    cdc_apply_table`` (which buckets hive dirs): latest change per key
-    wins by ``seq_col``, ``op == 'D'`` persists as a TOMBSTONE so a
+    persisted, incremental form of ``operators/incremental.cdc_apply``:
+    latest change per key wins by ``seq_col``, ``op == 'D'`` persists as a TOMBSTONE so a
     LATE lower-seq update for a deleted key still loses, and the state
     row keeps its winning ``_seq``. Exact under out-of-order delivery
     and at-least-once redelivery by construction (a replayed batch's
     winners tie into the same values); ``txn`` adds the manifest fence
     on top for corrupted-replay protection.
 
-    What the snapshot format adds over the bucketed variant: atomic
-    commits (no partition-swap windows), time travel over the
-    materialized state, CDF for downstream consumers, retention, and
+    The snapshot format gives the materialized state atomic commits,
+    time travel, CDF for downstream consumers, retention, and
     concurrent snapshot-isolated readers. Cost per batch is O(batch +
-    touched files) — the key-stat prune plays the role the hive
-    buckets play in ``cdc_apply_table``.
+    touched files): the key-stat prune bounds the rewrite.
 
     Read the live view with ``read_cdc_state`` (drops tombstones and
     bookkeeping columns). Same deterministic tie-break discipline as

@@ -1,36 +1,31 @@
-"""Format-dispatching storage facade: one upsert/read/exists surface
-over the two table backends — swap-protocol hive tables
-(``sinks/writer.py``) and manifest-committed snapshot tables
-(``sinks/snapshot.py``).
+"""Storage facade for keyed writes: one upsert/insert-ignore/read/exists
+surface whose only write backend is the manifest-committed snapshot
+table (``sinks/snapshot.py``).
 
 The reference's pipelines treat Postgres as the system of record: every
 table gets transactional upserts, consistent reads, and survives a
 crashed loader (``database/db_client.py:37-92`` ON CONFLICT upserts
 inside one connection). The snapshot format is this engine's equivalent
 guarantee set (atomic link-CAS commits, snapshot-isolated readers, time
-travel, CDF), so the CLI defaults the six reference pipeline tables to
-it; the swap format remains for bucketed ingest state where per-bucket
-layout beats manifest bookkeeping.
+travel, CDF, the ``txn`` replay fence), so every keyed MERGE — the CLI's
+pipeline tables, the streaming state writer, CDC apply, the streaming
+upsert sink — commits through it, and a fresh root always becomes a
+snapshot table.
 
-Format resolution is STICKY: an existing table's on-disk format always
-wins (a snapshot table is recognizable by its ``_manifests/`` version
-files), and asking for the OTHER format on an existing table raises
-instead of silently forking two tables under one path — the failure
-mode this facade exists to prevent.
+Legacy swap-protocol hive tables (``sinks/writer.py``) stay READABLE
+(``read_store``, ``detect_format``, ``store_exists``) and migratable
+(``migrate_to_snapshot``), but a keyed write into one raises before any
+Spark job instead of forking a second format under one path.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import snapshot as snap
 from . import writer
-
-FORMATS = ("swap", "snapshot")
-
 
 def is_snapshot_table(path: str) -> bool:
     """True iff ``path`` holds at least one committed snapshot manifest.
@@ -39,30 +34,38 @@ def is_snapshot_table(path: str) -> bool:
     return snap.current_version(path) > 0
 
 
+def _is_swap_table(path: str) -> bool:
+    return not is_snapshot_table(path) and writer.table_exists(path)
+
+
 def detect_format(path: str) -> str | None:
-    """On-disk format of the table at ``path``: ``"snapshot"``,
-    ``"swap"``, or None when nothing committed/written exists yet."""
+    """On-disk format of the table at ``path``: ``"snapshot"``, the
+    legacy swap writer's ``writer.FORMAT``, or None when nothing
+    committed/written exists yet."""
     if is_snapshot_table(path):
         return "snapshot"
     if writer.table_exists(path):
-        return "swap"
+        return writer.FORMAT
     return None
 
 
-def _resolve(path: str, fmt: str | None, default: str) -> str:
-    if fmt is not None and fmt not in FORMATS:
-        raise ValueError(f"unknown table format {fmt!r}; expected one of {FORMATS}")
-    on_disk = detect_format(path)
-    if on_disk is None:
-        return fmt or default
-    if fmt is not None and fmt != on_disk:
+def require_snapshot(path: str, *fmts: str | None) -> None:
+    """Refuse a keyed write that would not commit a snapshot table:
+    a requested format other than None/``"snapshot"``, or a legacy
+    swap table already at ``path``. Filesystem probes only, so every
+    writer calls it before its first Spark job."""
+    for fmt in fmts:
+        if fmt not in (None, "snapshot"):
+            raise ValueError(
+                f"unknown table format {fmt!r}; keyed writes commit only "
+                "snapshot tables (pass None or 'snapshot')"
+            )
+    if _is_swap_table(path):
         raise ValueError(
-            f"table at {path} is on-disk format {on_disk!r} but "
-            f"format={fmt!r} was requested; formats cannot be mixed "
-            "under one path (migrate_to_snapshot copies a swap table "
-            "into a new snapshot root)"
+            f"table at {path} is a legacy swap table; keyed writes commit "
+            "only snapshot tables — migrate_to_snapshot it into a fresh "
+            "root and point the writer there"
         )
-    return on_disk
 
 
 def store_exists(path: str) -> bool:
@@ -81,7 +84,7 @@ def txn_applied(path: str, txn: tuple[str, int] | None) -> bool:
 def read_store(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
     """Read a table regardless of backend. Snapshot reads are always at
     the current committed version (manifest schema covers evolution, so
-    ``merge_schema`` only applies to the swap backend)."""
+    ``merge_schema`` only applies to legacy swap tables)."""
     if is_snapshot_table(path):
         return snap.read_snapshot(spark, path)
     return writer.read_table(spark, path, merge_schema=merge_schema)
@@ -92,26 +95,20 @@ def upsert_store(
     source: DataFrame,
     path: str,
     key: str | Sequence[str],
-    partition_by: Sequence[str] = (),
     fmt: str | None = None,
-    default: str = "swap",
+    default: str | None = None,
     txn: tuple[str, int] | None = None,
     cdf: bool = True,
 ) -> None:
-    """MERGE through whichever backend owns ``path`` (create on first
-    write in ``fmt`` or ``default``). The snapshot backend sorts new
-    files by the key so footer-stat pruning keeps later point merges
-    O(touched files); ``partition_by`` is a swap-layout concept and is
-    ignored there (zone maps replace hive dirs as the pruning
-    structure). ``txn`` (app_id, version) rides through to the snapshot
-    commit for idempotent replays; the swap backend has no fence and
-    rejects it loudly rather than silently dropping the guarantee.
-    ``cdf`` sets the snapshot write-time change-file property when THIS
-    call creates the table (existing tables keep theirs)."""
-    _dispatch(
-        snap.upsert_snapshot, writer.upsert_table,
-        spark, source, path, key, partition_by, fmt, default, txn, cdf,
-    )
+    """MERGE ``source`` into the snapshot table at ``path`` (created on
+    first write). New files are sorted by the key so footer-stat
+    pruning keeps later point merges O(touched files). ``fmt`` and
+    ``default`` accept only None/``"snapshot"``: the snapshot table is
+    the one backend. ``txn`` (app_id, version) rides through to the
+    commit for idempotent replays. ``cdf`` sets the write-time
+    change-file property when THIS call creates the table (existing
+    tables keep theirs)."""
+    _write(snap.upsert_snapshot, spark, source, path, key, fmt, default, txn, cdf)
 
 
 def migrate_to_snapshot(
@@ -136,11 +133,10 @@ def migrate_to_snapshot(
     merges right after a migration would pay for change files nobody
     reads. Flip it on once consumers exist: one overwrite commit with
     ``write_snapshot(..., cdf=True)`` resets the property."""
-    src_fmt = detect_format(swap_path)
-    if src_fmt != "swap":
+    if not _is_swap_table(swap_path):
         raise ValueError(
             f"migrate_to_snapshot source {swap_path} is "
-            f"{src_fmt or 'absent'}, expected a swap table"
+            f"{detect_format(swap_path) or 'absent'}, expected a swap table"
         )
     if detect_format(snapshot_root) is not None:
         raise ValueError(
@@ -162,32 +158,18 @@ def insert_ignore_store(
     source: DataFrame,
     path: str,
     key: str | Sequence[str],
-    partition_by: Sequence[str] = (),
     fmt: str | None = None,
-    default: str = "swap",
+    default: str | None = None,
     txn: tuple[str, int] | None = None,
     cdf: bool = True,
 ) -> None:
-    """ON CONFLICT DO NOTHING through whichever backend owns ``path``."""
-    _dispatch(
-        snap.insert_ignore_snapshot, writer.insert_ignore_table,
-        spark, source, path, key, partition_by, fmt, default, txn, cdf,
+    """ON CONFLICT DO NOTHING into the snapshot table at ``path``."""
+    _write(
+        snap.insert_ignore_snapshot, spark, source, path, key, fmt, default, txn, cdf
     )
 
 
-def _dispatch(
-    snapshot_op, swap_op, spark, source, path, key, partition_by, fmt, default, txn, cdf,
-) -> None:
-    """Resolve the backend of ``path`` and run the write there. The
-    swap backend has no transaction watermark, so it rejects ``txn``
-    loudly rather than silently dropping the guarantee."""
-    if _resolve(path, fmt, default) == "snapshot":
-        keys = [key] if isinstance(key, str) else list(key)
-        snapshot_op(spark, source, path, keys, txn=txn, cdf=cdf)
-        return
-    if txn is not None:
-        raise ValueError(
-            "txn fencing requires format='snapshot'; the swap backend "
-            "has no transaction watermark"
-        )
-    swap_op(spark, source, path, key, partition_by)
+def _write(op, spark, source, path, key, fmt, default, txn, cdf) -> None:
+    require_snapshot(path, fmt, default)
+    keys = [key] if isinstance(key, str) else list(key)
+    op(spark, source, path, keys, txn=txn, cdf=cdf)

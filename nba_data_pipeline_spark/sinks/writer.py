@@ -1,16 +1,18 @@
-"""Lakehouse writer: partitioned parquet tables with merge semantics.
+"""Swap-protocol writer: hive-partitioned parquet tables merged by
+write-temp-then-swap.
 
-Replaces the reference's Postgres sink stack (create-on-first-write,
-row-wise upsert, manual indexes — ``database/db_client.py:37-150``):
+Keyed tables (the pipeline outputs, streaming state, CDC state) commit
+through the snapshot format behind ``sinks/store.py``. This writer
+stays for the side indexes that keep hive dirs (BM25 tf/doclen, PQ
+codes, IVF lists, Bloom words, content hashes, ingest stats), for
+takedown on legacy swap tables, and for reading and migrating legacy
+swap tables:
 
-- layout: parquet partitioned by (SEASON, SEASON_TYPE) so the
-  reference's indexed filters become partition pruning; GAME_ID
-  predicates ride parquet row-group min/max stats;
-- upsert: MERGE-shaped anti-join + rewrite. On a Delta/Iceberg
-  cluster this function body is one ``MERGE INTO`` statement; plain
-  parquet (this environment) rewrites only the partitions that
+- layout: parquet partitioned by hive dirs (an index's list or bucket
+  column) so filters on them become partition pruning;
+- upsert: MERGE-shaped anti-join + rewrite of only the partitions that
   received source rows (dynamic-partition-overwrite-shaped), not the
-  whole table — at 100 TB a merge touches O(changed partitions).
+  whole table — a merge touches O(changed partitions).
 """
 
 from __future__ import annotations
@@ -24,8 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.data import local_frame
-from ..operators.incremental import insert_ignore, merge_upsert
+from ..operators.incremental import merge_upsert
 
 
 def _align_schemas(target: DataFrame, source: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -134,7 +135,7 @@ def heal_partition_swaps(path: str) -> None:
     that stale view — then committed — silently loses every prior row
     in the leaf. ``check_partition_layout`` calls this, so every merge
     path heals before it reads; read-only/maintenance paths
-    (takedown, compaction, CDC snapshot) call it directly.
+    (takedown, index queries, migration) call it directly.
 
     Recovery per leaf (see the protocol comment in
     ``_rewrite_partitions``): ``.swap-new`` is only ever COMPLETE once
@@ -183,45 +184,7 @@ def heal_partition_swaps(path: str) -> None:
         dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
 
 
-def choose_state_buckets(
-    history_rows: int, batch_rows: int | None = None
-) -> int | None:
-    """Default ``state_buckets`` / ``n_buckets`` for the merge-state
-    writers (``fold_aggregate_state_table``, ``cdc_apply_table``,
-    ``near_dedup_batch``, ``update_component_state``), encoding three
-    rounds of measured crossovers rather than a guess:
-
-    - **None below 50M history rows** — the whole-table rewrite WINS on
-      fixed costs there. Measured (COVERAGE: fold family): whole-state
-      fold 0.62/1.10/1.43s at 50k/500k/5M keys vs bucketed
-      2.99/3.93/5.75s; the lines cross between 5M and 50M (16.86s vs
-      8.03s at 50M). The signature-merge and component-state families
-      show the same shape on identical machinery.
-    - **Past the crossover, size buckets so history/buckets amortizes
-      the per-dir fixed cost** (~1M rows per bucket): buckets larger
-      than that are measured to LOSE — 1024 buckets over a 5M-row label
-      table cost 97.9s/batch vs 13.6s at 64, because dir listing,
-      footer sweeps and serial leaf swaps scale with touched-bucket
-      count while each tiny bucket prunes almost nothing.
-    - **A batch comparable to the history defeats pruning** (it sprays
-      into every bucket, so the merge reads ~everything plus overhead):
-      with ``batch_rows`` >= history/10 the whole rewrite is again the
-      honest default.
-
-    Returns a power of two in [64, 65536] or None. Callers with a
-    measured workload should still override; this is the
-    documented default, not a tuner."""
-    if history_rows < 50_000_000:
-        return None
-    if batch_rows is not None and batch_rows * 10 >= history_rows:
-        return None
-    rows_per_bucket = 1_000_000
-    n = 64
-    while n * 2 <= min(history_rows // rows_per_bucket, 65536):
-        n *= 2
-    return n
-
-
+FORMAT = "swap"  # the name store.detect_format reports for these tables
 LAYOUT_META = "_layout_meta.json"
 
 
@@ -435,7 +398,6 @@ def _merge_partitioned(
     path: str,
     key: str | Sequence[str],
     partition_by: Sequence[str],
-    combine,
 ) -> None:
     """Shared partition-scoped merge: only target rows in partitions that
     received source rows participate (left-semi on the broadcast distinct
@@ -454,7 +416,7 @@ def _merge_partitioned(
     target, source = _align_schemas(target, source)
     src_parts = source.select(*partition_by).distinct()
     affected = target.join(F.broadcast(src_parts), list(partition_by), "left_semi")
-    merged = combine(affected, source, key)
+    merged = merge_upsert(affected, source, key)
     # one output file per swapped partition dir (the fold-state
     # discipline): without the repartition every merge sprays
     # shuffle-partition-count files into each dir, and although the
@@ -464,73 +426,6 @@ def _merge_partitioned(
     _rewrite_partitions(
         spark, merged.repartition(*partition_by), path, partition_by
     )
-
-
-def _try_delta_merge(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    key: str | Sequence[str],
-    update_matched: bool,
-) -> bool:
-    """Transactional MERGE INTO when the table at ``path`` is a Delta
-    table and the ``delta`` package is importable (reference upsert
-    semantics, db_client.py:69-90, with real concurrent-writer
-    atomicity). Returns False — caller falls back to the anti-join
-    partition rewrite — when delta is absent or the path is plain
-    parquet.
-
-    Parity with the fallback: schema evolution is EXPLICIT, mirroring
-    ``_align_schemas`` — genuinely new source columns become an ALTER
-    TABLE ADD COLUMNS on the Delta table (NULL backfill into history),
-    target-only columns are padded into the source as typed NULLs, and
-    a same-name/different-type column raises. No session conf is
-    touched: the earlier approach of flipping delta's autoMerge conf
-    around execute() was a read-modify-write race for any concurrent
-    writer sharing the SparkSession. One DECLARED divergence: a source
-    with duplicate keys raises Delta's multiple-source-rows-matched
-    error here, while the rewrite path keeps all copies — dedup the
-    source first if that matters."""
-    try:
-        from delta.tables import DeltaTable  # noqa: PLC0415
-    except ImportError:
-        return False
-    try:
-        if not DeltaTable.isDeltaTable(spark, path):
-            return False
-        target = DeltaTable.forPath(spark, path)
-    except Exception:
-        return False
-    t_fields = {f.name: f.dataType for f in target.toDF().schema.fields}
-    s_fields = {f.name: f.dataType for f in source.schema.fields}
-    conflicts = {
-        c: (t_fields[c], s_fields[c])
-        for c in s_fields
-        if c in t_fields and t_fields[c].simpleString() != s_fields[c].simpleString()
-    }
-    if conflicts:
-        raise ValueError(
-            f"upsert schema conflict (column: table type vs source type): {conflicts}"
-        )
-    new_cols = [
-        (c, dt.simpleString()) for c, dt in s_fields.items() if c not in t_fields
-    ]
-    if new_cols:
-        ddl = ", ".join(f"`{c}` {t}" for c, t in new_cols)
-        spark.sql(f"ALTER TABLE delta.`{path}` ADD COLUMNS ({ddl})")
-        target = DeltaTable.forPath(spark, path)  # re-resolve post-DDL
-    for c, dt in t_fields.items():
-        if c not in s_fields:
-            source = source.withColumn(c, F.lit(None).cast(dt))
-    keys = [key] if isinstance(key, str) else list(key)
-    # null-safe equality: NULL key components must collide, matching
-    # merge_upsert's anti-join semantics
-    cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-    merge = target.alias("t").merge(source.alias("s"), cond)
-    if update_matched:
-        merge = merge.whenMatchedUpdateAll()
-    merge.whenNotMatchedInsertAll().execute()
-    return True
 
 
 def upsert_table(
@@ -543,8 +438,7 @@ def upsert_table(
 ) -> None:
     """MERGE: source rows win on key collision; first write creates the
     table (reference create-on-first-write, db_client.py:43-54).
-    Delta tables MERGE transactionally (``_try_delta_merge``); plain
-    parquet rewrites only the partitions receiving source rows.
+    Rewrites only the partitions receiving source rows.
     ``check_partition_layout`` refuses a merge whose declared layout
     (``partition_by`` + hash-bucket count ``buckets``) disagrees with
     the on-disk table — silent layout mixing duplicates rows on read."""
@@ -553,126 +447,14 @@ def upsert_table(
         write_table(source, path, partition_by)
         write_layout_meta(path, partition_by, buckets)
         return
-    if _try_delta_merge(spark, source, path, key, update_matched=True):
-        return
     if partition_by:
-        _merge_partitioned(spark, source, path, key, partition_by, merge_upsert)
+        _merge_partitioned(spark, source, path, key, partition_by)
         write_layout_meta(path, partition_by, buckets)
         return
     target, source = _align_schemas(read_table(spark, path, merge_schema=True), source)
     merged = merge_upsert(target, source, key)
     _rewrite(spark, merged, path, partition_by)
     write_layout_meta(path, partition_by, buckets)
-
-
-def insert_ignore_table(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    key: str | Sequence[str],
-    partition_by: Sequence[str] = (),
-    buckets: int | None = None,
-) -> None:
-    """ON CONFLICT DO NOTHING (reference db_client.py:87-88)."""
-    check_partition_layout(path, partition_by, buckets)
-    if not table_exists(path):
-        write_table(source, path, partition_by)
-        write_layout_meta(path, partition_by, buckets)
-        return
-    if _try_delta_merge(spark, source, path, key, update_matched=False):
-        return
-    if partition_by:
-        _merge_partitioned(spark, source, path, key, partition_by, insert_ignore)
-        write_layout_meta(path, partition_by, buckets)
-        return
-    target, source = _align_schemas(read_table(spark, path, merge_schema=True), source)
-    merged = insert_ignore(target, source, key)
-    _rewrite(spark, merged, path, partition_by)
-    write_layout_meta(path, partition_by, buckets)
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int,
-    partition_by: Sequence[str] = (),
-    min_files: int = 2,
-) -> dict[str, int]:
-    """Small-file compaction (the OPTIMIZE step of a lakehouse table):
-    rewrite fragmented partitions so each holds ~ceil(rows / target)
-    parquet files. Streaming upserts and per-batch appends fragment a
-    table into thousands of KB-sized files; at 100 TB that turns every
-    scan into an open()-bound crawl, so compaction is a first-class
-    maintenance operation, not a nicety.
-
-    Shape: one stats aggregate over (partition cols, input_file_name)
-    — tiny result, one row per table partition — then ONE distributed
-    rewrite of only the fragmented partitions (file count >
-    max(needed, min_files - 1)); healthy partitions are never read
-    again or touched on disk. Within the rewrite, rows are bucketed by
-    a deterministic hash into ceil(rows/target) buckets per partition
-    and shuffled on (partition cols, bucket), so output file count
-    tracks the target (hash collisions can merge buckets into fewer,
-    larger files — compaction is a floor on file size, not an exact
-    count). Returns {'partitions_compacted': n, 'files_before': f}.
-
-    Unpartitioned tables compact wholesale via the temp-swap rewrite.
-    """
-    import math
-
-    heal_partition_swaps(path)  # never compact a half-swapped read
-    # merge_schema: compaction REWRITES partitions, and after a schema
-    # evolution untouched partitions still carry the old file schema —
-    # a single-footer read here would rewrite them without the evolved
-    # column, deleting its values from disk
-    df = read_table(spark, path, merge_schema=True)
-    # non-deterministic exprs can't sit inside an aggregate (ANSI
-    # analyzer rule) — project the file name into a column first
-    fdf = df.withColumn("_fn", F.input_file_name())
-    if not partition_by:
-        stats = fdf.agg(
-            F.count("*").alias("_rows"),
-            F.countDistinct("_fn").alias("_files"),
-        ).collect()[0]
-        needed = max(1, math.ceil(stats["_rows"] / target_rows_per_file))
-        if stats["_files"] <= max(needed, min_files - 1):
-            return {"partitions_compacted": 0, "files_before": stats["_files"]}
-        _rewrite(spark, df.repartition(needed), path, ())
-        return {"partitions_compacted": 1, "files_before": stats["_files"]}
-    pcols = list(partition_by)
-    stats = (
-        fdf.groupBy(*pcols)
-        .agg(
-            F.count("*").alias("_rows"),
-            F.countDistinct("_fn").alias("_files"),
-        )
-        .withColumn(
-            "_nf", F.greatest(F.ceil(F.col("_rows") / target_rows_per_file), F.lit(1))
-        )
-        .filter(F.col("_files") > F.greatest(F.col("_nf"), F.lit(min_files - 1)))
-        .select(*pcols, "_nf", "_files")
-    )
-    frag = stats.collect()  # one row per FRAGMENTED partition — tiny
-    if not frag:
-        return {"partitions_compacted": 0, "files_before": 0}
-    # rebuild the broadcast side from the ALREADY-COLLECTED rows —
-    # reusing `stats` would embed its full-table aggregate subplan in
-    # the rewrite and scan the table a second time at write
-    frag_df = local_frame(spark, frag, stats.schema)
-    sized = df.join(F.broadcast(frag_df), pcols)
-    bucketed = sized.withColumn(
-        "_f",
-        F.pmod(F.xxhash64(*[c for c in df.columns if c not in pcols]), F.col("_nf")),
-    )
-    total_files = int(sum(r["_nf"] for r in frag))
-    merged = (
-        bucketed.repartition(total_files, *pcols, F.col("_f")).drop("_nf", "_files", "_f")
-    )
-    _rewrite_partitions(spark, merged, path, pcols)
-    return {
-        "partitions_compacted": len(frag),
-        "files_before": int(sum(r["_files"] for r in frag)),
-    }
 
 
 def write_training_shards(

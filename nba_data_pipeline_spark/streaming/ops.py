@@ -9,17 +9,17 @@ dimension without shuffling the stream.
 
 State plumbing: every persisted state table the ingest maintainers
 write goes through one state writer in two steps. ``_resolve_state``
-does the argument checks, picks the backend (sticky on disk; on a
-fresh root snapshot, or the hive-bucketed swap layout for unfenced
-bucketed state) and guards the layout (manifest key and recorded
-bucket modulus) with filesystem probes only, so a caller resolves all
-of its tables before its first Spark job or write. ``_write_state``
+does the argument checks and guards the layout (manifest key and
+recorded bucket modulus) with filesystem probes only, so a caller
+resolves all of its tables before its first Spark job or write. State
+is always a snapshot table: a fresh root becomes one, and a legacy
+swap table raises (``sinks.store.require_snapshot``). ``_write_state``
 adds the ``bucket`` column, MERGEs through ``sinks.store.upsert_store``
 (looked up at call time) and writes the modulus sidecar. The two pair
 ingest steps (``near_dedup_batch``, ``image_dedup_batch``) share one
 body, ``_pair_step``, and every Structured Streaming wrapper starts
 through ``streaming.sink._start_batches``, the one foreachBatch runner
-with the fenced-query setup check.
+with the setup checks (legacy swap targets, fenced-query checkpoint).
 """
 
 from __future__ import annotations
@@ -92,7 +92,6 @@ class _StateTable(NamedTuple):
     """One resolved state table (the resolve step's output)."""
 
     path: str
-    fmt: str  # "snapshot" or "swap"
     key: list  # merge key without the bucket column
     buckets: int | None
     recorded: int | None  # modulus in the _layout_meta.json sidecar
@@ -107,8 +106,7 @@ def _bucket(cols: Sequence[str], n: int):
 
 def _layout_buckets(path: str) -> int | None:
     """Hash modulus recorded in a table's ``_layout_meta.json``
-    sidecar; None for flat or legacy tables. Snapshot state keeps the
-    same sidecar as the swap layout: the manifest key records the
+    sidecar; None for flat tables. The manifest key records the
     bucket COLUMN, not the modulus."""
     import json
 
@@ -128,43 +126,23 @@ def _resolve_state(
     state_format: str | None,
     txn: tuple[str, int] | None,
 ) -> _StateTable:
-    """Resolve step of the state writer: argument checks, backend and
-    layout guards for one state table. Filesystem probes only, no
-    Spark job, so a caller resolves every table it writes before its
-    first job or write.
+    """Resolve step of the state writer: argument checks and layout
+    guards for one state table. Filesystem probes only, no Spark job,
+    so a caller resolves every table it writes before its first job or
+    write.
 
-    The backend is sticky on disk. On a fresh root flat state goes to
-    snapshot; bucketed state goes to snapshot when fenced or asked for
-    (``bucket`` leads the merge key, and zone maps plus the refine
-    pass prune the rewrite to files holding touched buckets), else to
-    the hive-bucketed swap layout. Only the snapshot backend has a
-    transaction watermark, so ``txn`` against swap state fails loud
-    rather than silently dropping the replay guarantee. A snapshot
-    table's manifest key and recorded modulus must match the call:
-    either mismatch would NULL-mismatch or re-hash old rows and
-    silently duplicate keys on the next merge."""
+    State is always a snapshot table (``state_format`` accepts only
+    None/``"snapshot"``; a legacy swap table at ``path`` raises).
+    Bucketed state keeps ``bucket`` as the leading merge-key column, so
+    zone maps and the refine pass prune the rewrite to files holding
+    touched buckets. A table's manifest key and recorded modulus must
+    match the call: either mismatch would NULL-mismatch or re-hash old
+    rows and silently duplicate keys on the next merge."""
     from ..sinks import snapshot as _snap
-    from ..sinks.store import _resolve
+    from ..sinks.store import require_snapshot
 
-    if txn is not None and state_format == "swap":
-        raise ValueError(
-            "txn fencing requires the snapshot backend; the swap "
-            "layout has no transaction watermark — drop "
-            "state_format='swap' (bucketed state rides the snapshot "
-            "format with bucket as the leading merge-key column)"
-        )
+    require_snapshot(path, state_format)
     keys = [key] if isinstance(key, str) else list(key)
-    fmt = _resolve(
-        path, state_format, "swap" if state_buckets and txn is None else "snapshot"
-    )
-    if fmt == "swap":
-        if txn is not None:  # only an on-disk swap table gets here
-            raise ValueError(
-                f"state table at {path} is on-disk swap format, which has "
-                "no transaction watermark; migrate_to_snapshot it (or point "
-                "the fenced pipeline at a fresh root) to arm the txn fence"
-            )
-        return _StateTable(path, fmt, keys, state_buckets, None, txn)
     want = (["bucket"] + keys) if state_buckets else keys
     v = _snap.current_version(path)
     if v > 0:
@@ -184,32 +162,25 @@ def _resolve_state(
             f"called with {state_buckets}; the modulus is part of "
             "the layout (rebuild into a fresh root to change it)"
         )
-    return _StateTable(path, fmt, keys, state_buckets, recorded, txn)
+    return _StateTable(path, keys, state_buckets, recorded, txn)
 
 
 def _write_state(spark: SparkSession, t: _StateTable, df: DataFrame) -> None:
     """Write step of the state writer: MERGE ``df`` into the resolved
-    table. Bucketed rows get the ``bucket`` column; swap tables keep
-    the hive ``bucket=`` dirs; snapshot tables merge on the
-    (bucket-led) key with ``cdf=False`` (state is derived, rebuildable
-    and has no change-feed consumers, so the write-time change files
-    would be pure merge tax), and a bucketed one gets its modulus
+    snapshot table on its (bucket-led) key with ``cdf=False`` (state is
+    derived, rebuildable and has no change-feed consumers, so the
+    write-time change files would be pure merge tax). Bucketed rows
+    get the ``bucket`` column, and a bucketed table gets its modulus
     sidecar after the first commit. ``store.upsert_store`` is looked
     up at call time so wrappers installed on it see every write."""
     from ..sinks import store
-    from ..sinks.writer import upsert_table, write_layout_meta
+    from ..sinks.writer import write_layout_meta
 
     if t.buckets:
         df = df.withColumn("bucket", _bucket(t.key, t.buckets))
-        if t.fmt == "swap":
-            upsert_table(
-                spark, df, t.path, key=t.key,
-                partition_by=["bucket"], buckets=t.buckets,
-            )
-            return
     store.upsert_store(
         spark, df, t.path, key=(["bucket"] if t.buckets else []) + t.key,
-        fmt=t.fmt, txn=t.txn, cdf=False,
+        txn=t.txn, cdf=False,
     )
     if t.buckets and t.recorded is None:
         write_layout_meta(t.path, [], t.buckets)
@@ -298,45 +269,30 @@ def near_dedup_batch(
     through exact dedup (they are cheap to hash whole) or lower
     ``shingle_n``.
 
-    ``state_buckets``: PAIR GENERATION is O(batch) either way, but the
-    default signature/pairs MERGE rewrites its whole state table per
-    batch — fine for millions of rows, O(history) write volume at
-    billions. Passing ``state_buckets`` lays both tables out in
-    ``bucket = pmod(xxhash64(key), n)`` hive partitions so a merge
-    rewrites only the buckets the batch touches — the same
-    crossover-honest trade as ``incremental.fold_aggregate_state_table``
-    (whole rewrite wins below ~10M state rows on fixed costs, buckets
-    win past the tens of millions and stay O(batch x history/n)). Pick
-    n so history/n rows fit one task comfortably (e.g. 4096 buckets for
-    1B signatures). Bucketed state COMPOSES with ``txn``: with a fence
-    (or ``state_format='snapshot'``) the buckets ride the snapshot
-    format as the leading merge-key column — same
-    O(touched buckets) write volume via zone-map/refine pruning, plus
-    the per-epoch replay fence; without either, the historical
-    hive-bucketed swap layout. The layout is sticky — and ENFORCED: the writer's
-    ``check_partition_layout`` (backed by the ``_layout_meta.json``
-    sidecar, same pattern as the Bloom family's ``_bloom_meta.json``)
-    raises on a flat call against a bucketed table, a bucketed call
-    against a flat table, or a changed modulus, because any of those
-    silently duplicates rows on the next read. Readers are unaffected
-    (the pair join drops the bucket column).
-    ``sinks.writer.choose_state_buckets`` encodes the measured sizing
-    rule as the documented default.
+    ``state_buckets``: PAIR GENERATION is O(batch) either way, but a
+    flat signature/pairs MERGE may rewrite every file a batch's keys
+    spread over. Passing ``state_buckets`` makes ``bucket =
+    pmod(xxhash64(key), n)`` the leading merge-key column of both
+    snapshot tables, so zone maps and the refine pass prune the rewrite
+    to files holding touched buckets (whole rewrites win below ~10M
+    state rows on fixed costs; buckets win past the tens of millions).
+    The layout is sticky and ENFORCED by ``_resolve_state``: a flat call
+    against a bucketed table, a bucketed call against a flat table, or
+    a changed modulus raises, because any of those silently duplicates
+    rows on the next merge. Readers are unaffected (the pair join drops
+    the bucket column).
 
-    FLAT state (no ``state_buckets``) lives on SNAPSHOT tables by
-    default (sticky: an existing swap table keeps its format, and
-    ``state_format`` forces either): atomic manifest commits replace
-    the partition-swap machinery, and ``txn=(app_id, version)`` makes
-    a replayed foreachBatch a visible no-op on BOTH tables — the
-    exactly-once contract the reference gets from Postgres ON CONFLICT
-    (reference database/db_client.py:69-90). The write order is pairs
-    then signatures, so a crash between the two commits replays as:
-    pairs fence no-op, signatures apply — and the pair generation on
-    that replay still sees the pre-batch corpus (signatures were never
-    merged), reproducing identical pairs. State tables are created
-    ``cdf=False``: they are derived, rebuildable, and have no
-    change-feed consumers, so the write-time sidecar would be pure
-    merge tax (the measured ~1.7x merge dial at sf0.1).
+    State lives on SNAPSHOT tables: atomic manifest commits, and
+    ``txn=(app_id, version)`` makes a replayed foreachBatch a visible
+    no-op on BOTH tables — the exactly-once contract the reference gets
+    from Postgres ON CONFLICT (reference database/db_client.py:69-90).
+    The write order is pairs then signatures, so a crash between the
+    two commits replays as: pairs fence no-op, signatures apply — and
+    the pair generation on that replay still sees the pre-batch corpus
+    (signatures were never merged), reproducing identical pairs. State
+    tables are created ``cdf=False``: they are derived, rebuildable,
+    and have no change-feed consumers, so the write-time sidecar would
+    be pure merge tax (the measured ~1.7x merge dial at sf0.1).
 
     SINGLE LOGICAL WRITER per state root: the snapshot CAS makes
     concurrent writers safe (no corruption, both commits land or
@@ -444,9 +400,9 @@ def stream_near_dedup(
     ``state_buckets`` (bucketed state rides the snapshot format with
     ``bucket`` leading the merge key — see ``_resolve_state``).
     Requires a durable ``checkpoint_dir`` — same contract and failure
-    mode as ``stream_upsert_snapshot`` (a fresh checkpoint restarts
+    mode as ``stream_upsert`` with ``app_id`` (a fresh checkpoint restarts
     epochs at 0 and the stale watermark would silently fence real
-    data) — and snapshot-format (or fresh) state roots, validated at
+    data) — and snapshot (or fresh) state roots, validated at
     setup so a misconfigured query fails here, not at the first
     micro-batch."""
     return _start_batches(
@@ -480,9 +436,9 @@ def quality_score_batch(
     replay-idempotent — same contract as ``near_dedup_batch``, and the
     same ``state_buckets`` option bounds the merge's write volume to
     the touched buckets once the score table outgrows whole-rewrites
-    (see the near_dedup_batch docstring for the crossover). Flat state
-    defaults to a SNAPSHOT table (sticky on existing swap tables);
-    ``txn`` fences redelivered batches into visible no-ops."""
+    (see the near_dedup_batch docstring for the crossover). The table
+    is a SNAPSHOT table; ``txn`` fences redelivered batches into
+    visible no-ops."""
     from ..operators.text import trigram_lm_scores
 
     t = _resolve_state(scores_path, id_col, state_buckets, state_format, txn)
@@ -508,7 +464,7 @@ def stream_quality_scores(
     reference model and version it with the corpus snapshot); per-batch
     cost is one explode + broadcast join over the batch only.
     ``app_id`` arms the snapshot txn fence per epoch (same
-    durable-checkpoint + fenceable-state-root contract as
+    durable-checkpoint + snapshot-state-root contract as
     ``stream_near_dedup``, both validated at setup)."""
     return _start_batches(
         stream_df,
@@ -1047,12 +1003,12 @@ def embedding_ingest_batch(
     4. (``pairs_path``) MERGE the canonicalized pairs — replays upsert
        the same rows,
     5. (``components_path``) fold the pairs into the persisted cluster
-       labeling (``update_component_state`` — WAL-journaled).
+       labeling (``update_component_state``).
 
     State lives entirely in the tables; a restart is cold with zero
-    rebuild — the same contract as the text-side ingest. Flat PAIR and
-    COMPONENT state defaults to snapshot tables with the ``txn`` replay
-    fence (see near_dedup_batch); the IVF corpus and PQ code tables
+    rebuild — the same contract as the text-side ingest. PAIR and
+    COMPONENT state are snapshot tables with the ``txn`` replay fence
+    (see near_dedup_batch); the IVF corpus and PQ code tables
     keep their list-/bucket-partitioned swap layouts — their partition
     pruning IS the query speedup, and their replays are idempotent by
     deterministic assignment."""
@@ -1419,100 +1375,49 @@ def rebuild_component_labels(
     naming the label. Incremental maintenance cannot fix this (the min
     over a component only ever decreases batch-over-batch); this full
     ``connected_components`` pass recomputes every representative from
-    the LIVE pair table and swaps the label table to exactly the live
-    doc set — departed docs drop out, surviving components get a live
-    min-id representative.
+    the LIVE pair table and replaces the label table with exactly the
+    live doc set — departed docs drop out, surviving components get a
+    live min-id representative.
 
     Schedule like a compaction (after large takedowns), not per batch:
     cost is one full propagation over the pair table, O(E log D). The
-    write honors the same bucketed layout contract as the maintainer
-    (``check_partition_layout`` + sidecar); the swap is the staged
-    whole-dir replace for flat tables and per-leaf for bucketed ones —
-    here every bucket changes by definition, so the rewrite is
-    whole-table either way. A stale ``_changes_journal`` from a crashed
-    incremental merge is superseded by the rebuild and removed.
-
-    Snapshot-format tables (flat-state default) rebuild as one
-    overwrite commit — atomic, time-travel keeps the pre-rebuild
-    labeling until vacuum, no journal to heal."""
-    import os
+    rebuild is one overwrite commit of the snapshot label table —
+    atomic, and time travel keeps the pre-rebuild labeling until
+    vacuum. Because it is a full overwrite it may re-lay the table out:
+    pass ``state_buckets`` to (re)bucket the labels, omit it for flat;
+    later incremental merges must then match (the ``_resolve_state``
+    guard)."""
     import shutil
 
     from ..operators.dedup import connected_components
     from ..sinks import snapshot as _snap
-    from ..sinks.store import is_snapshot_table, read_store, store_exists
-    from ..sinks.writer import (
-        _rewrite,
-        _rewrite_partitions,
-        check_partition_layout,
-        read_table,
-        table_exists,
-        write_layout_meta,
-        write_table,
-    )
+    from ..sinks.store import read_store, require_snapshot, store_exists
+    from ..sinks.writer import write_layout_meta
 
-    if is_snapshot_table(labels_path) or is_snapshot_table(pairs_path):
-        # the rebuild is a full OVERWRITE, so it may legitimately
-        # re-lay the table out: pass state_buckets to (re)bucket the
-        # labels, omit it for flat — later incremental merges must
-        # then match (the state writer's _resolve_state guard)
-        skey = (["bucket", "doc_id"] if state_buckets else ["doc_id"])
-        if not store_exists(pairs_path):
-            if os.path.exists(labels_path):
-                shutil.rmtree(labels_path)
-            return
-        pairs = read_store(spark, pairs_path).drop("bucket")
-        labels = connected_components(pairs, id_a=id_a, id_b=id_b)
-        if state_buckets:
-            labels = labels.withColumn("bucket", _bucket(["doc_id"], state_buckets))
-        # cdf=False like every state table: derived, rebuildable, no
-        # change-feed consumers — skip the write-time sidecar tax
-        _snap.write_snapshot(spark, labels, labels_path, key=skey, cdf=False)
-        # the rebuild owns the layout: refresh the modulus sidecar to
-        # whatever was just written (or drop it on a flat rebuild)
-        meta = os.path.join(labels_path, "_layout_meta.json")
-        if state_buckets:
-            write_layout_meta(labels_path, [], state_buckets)
-        elif os.path.exists(meta):
-            os.unlink(meta)
-        return
-    pby = ["bucket"] if state_buckets else []
-    check_partition_layout(labels_path, pby, state_buckets)
-    heal_needed = os.path.join(labels_path, "_changes_journal")
-    for stale in (heal_needed, heal_needed + ".tmp"):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)  # rebuild supersedes any pending delta
-    if not table_exists(pairs_path):
+    require_snapshot(labels_path)
+    if not store_exists(pairs_path):
         # no pairs -> no components; an absent label table is the
         # consistent result (every doc is its own singleton implicitly)
         if os.path.exists(labels_path):
             shutil.rmtree(labels_path)
         return
-    pairs = read_table(spark, pairs_path, merge_schema=True)
+    pairs = read_store(spark, pairs_path).drop("bucket")
     labels = connected_components(pairs, id_a=id_a, id_b=id_b)
     if state_buckets:
         labels = labels.withColumn("bucket", _bucket(["doc_id"], state_buckets))
-    if table_exists(labels_path):
-        if pby:
-            swapped = _rewrite_partitions(
-                spark, labels.repartition(*pby), labels_path, pby
-            )
-            # full-rebuild semantics: a bucket whose every doc departed
-            # produces no output dir and is never swapped — its stale
-            # files must go (same emptied-dir rule as takedown_batch)
-            for name in os.listdir(labels_path):
-                leaf = os.path.join(labels_path, name)
-                if (
-                    os.path.isdir(leaf)
-                    and name.startswith("bucket=")
-                    and name not in swapped
-                ):
-                    shutil.rmtree(leaf)
-        else:
-            _rewrite(spark, labels, labels_path, ())
-    else:
-        write_table(labels, labels_path, partition_by=pby)
-    write_layout_meta(labels_path, pby, state_buckets)
+    # cdf=False like every state table: derived, rebuildable, no
+    # change-feed consumers — skip the write-time sidecar tax
+    _snap.write_snapshot(
+        spark, labels, labels_path,
+        key=(["bucket", "doc_id"] if state_buckets else ["doc_id"]), cdf=False,
+    )
+    # the rebuild owns the layout: refresh the modulus sidecar to
+    # whatever was just written (or drop it on a flat rebuild)
+    meta = os.path.join(labels_path, "_layout_meta.json")
+    if state_buckets:
+        write_layout_meta(labels_path, [], state_buckets)
+    elif os.path.exists(meta):
+        os.unlink(meta)
 
 
 def update_component_state(
@@ -1528,26 +1433,17 @@ def update_component_state(
     interiors are never re-propagated — and MERGE only the rows whose
     label actually changed (new docs + members of components the batch
     merged). Write volume is O(changed rows); with ``state_buckets``
-    the merge rewrites only the touched bucket dirs (same layout
-    contract + ``check_partition_layout`` guard as every other
-    merge-state table).
+    the merge rewrites only files holding touched buckets (same layout
+    contract and ``_resolve_state`` guard as every other state table).
 
     Replay-idempotent: a redelivered batch maps its endpoints to the
     already-merged labels, every condensed edge collapses to a self
-    edge, and the changed set is empty.
-
-    CRASH SAFETY (write-ahead journal): ``incremental_components``
-    requires ``labels`` to be a CONSISTENT fixed point, but the
-    changed-rows merge swaps one bucket dir at a time — a crash
-    mid-merge leaves a mixture (some docs relabeled, their old
-    component-mates not), and the merge fact exists only in the
-    crashed run's computation, so no later batch could repair it. The
-    changed set is therefore journaled to ``_changes_journal`` inside
-    the table (underscore-prefixed — invisible to readers, exactly the
-    delta, O(changed) extra write) BEFORE the merge and removed after;
-    on the next call a surviving journal is re-applied first (the
-    doc_id-keyed upsert is idempotent), restoring consistency before
-    anything reads the labels.
+    edge, and the changed set is empty. ``txn=(app_id, version)``
+    turns a redelivered batch into a visible no-op before the label
+    read. ``incremental_components`` requires ``labels`` to be a
+    CONSISTENT fixed point; the snapshot commit of the changed set is
+    all-or-nothing, so a crash mid-merge leaves the previous labeling
+    intact.
 
     SCALE NOTE (honest): the label LOOKUP reads the labels table once
     per batch (column-pruned to two longs, no shuffle — the batch side
@@ -1561,47 +1457,14 @@ def update_component_state(
     that was its component's min keeps naming the representative id
     (labels are arbitrary representatives, not live ids); run
     ``rebuild_component_labels`` over the pair table when
-    representative liveness matters. ``state_buckets`` default: see
-    ``sinks.writer.choose_state_buckets`` (measured crossover rule).
-
-    FLAT state defaults to a SNAPSHOT table (sticky on existing swap
-    tables): the manifest commit is all-or-nothing, so the
-    write-ahead journal below — which exists only because the bucketed
-    swap merge commits one bucket dir at a time — is unnecessary
-    there, and ``txn=(app_id, version)`` turns a redelivered batch
-    into a visible no-op before ``incremental_components`` would even
-    compute an empty delta."""
-    import shutil
-
+    representative liveness matters."""
     from ..operators.dedup import connected_components, incremental_components
     from ..sinks import store
-    from ..sinks.writer import check_partition_layout, table_exists
 
     t = _resolve_state(labels_path, "doc_id", state_buckets, state_format, txn)
+    if store.txn_applied(labels_path, txn):
+        return  # fenced replay: skip the label read + delta
     spark = new_pairs.sparkSession
-    journal = os.path.join(labels_path, "_changes_journal")
-    if t.fmt == "snapshot":
-        if txn is not None:
-            from ..sinks.snapshot import txn_version
-
-            applied = txn_version(labels_path, txn[0])
-            if applied is not None and applied >= txn[1]:
-                return  # fenced replay: skip the label read + delta
-    else:
-        check_partition_layout(
-            labels_path, ["bucket"] if state_buckets else [], state_buckets
-        )
-        # recovery: a surviving journal means the previous merge crashed
-        # mid-swap — re-apply its full change set (idempotent), THEN read
-        if os.path.exists(journal + ".tmp"):  # crashed mid-journal-write
-            shutil.rmtree(journal + ".tmp")
-        if table_exists(journal):
-            _write_state(
-                spark, t, spark.read.parquet(journal).select("doc_id", "component_id")
-            )
-            shutil.rmtree(journal)
-        elif os.path.exists(journal):  # empty leftover dir
-            shutil.rmtree(journal)
     if not store.store_exists(labels_path):
         _write_state(spark, t, connected_components(new_pairs))
         return
@@ -1609,25 +1472,9 @@ def update_component_state(
     changed = incremental_components(labels, new_pairs, changed_only=True).select(
         "doc_id", "component_id"
     )
-    if t.fmt == "snapshot" or not state_buckets:
-        # one atomic commit (a manifest link, or the unpartitioned
-        # swap's staged whole-table rename, which a journal inside the
-        # dir would not survive anyway), so no journal. An empty fenced
-        # delta still commits so the watermark advances.
-        _write_state(spark, t, changed)
-        return
-    # journal the delta atomically (write-then-rename), apply, clear.
-    # The journal write IS the materialization of `changed`; the merge
-    # re-reads it, so the incremental computation runs exactly once.
-    changed.write.mode("overwrite").parquet(journal + ".tmp")
-    if not table_exists(journal + ".tmp"):  # empty delta (e.g. replay)
-        shutil.rmtree(journal + ".tmp", ignore_errors=True)
-        return
-    os.rename(journal + ".tmp", journal)
-    _write_state(
-        spark, t, spark.read.parquet(journal).select("doc_id", "component_id")
-    )
-    shutil.rmtree(journal)
+    # one atomic commit; an empty fenced delta still commits so the
+    # watermark advances
+    _write_state(spark, t, changed)
 
 
 def corpus_ingest_batch(
@@ -1715,7 +1562,7 @@ def corpus_ingest_batch(
         )
         if p is not None
     ]
-    store._resolve(corpus_path, state_format, "snapshot")
+    store.require_snapshot(corpus_path, state_format)
     if (
         txn is not None
         and bloom_path is None and hashes_path is None and stats_path is None
@@ -1759,7 +1606,7 @@ def corpus_ingest_batch(
     )
     store.upsert_store(
         batch_df.sparkSession, gated, corpus_path, key=id_col,
-        fmt=state_format, default="snapshot", txn=txn,
+        fmt=state_format, txn=txn,
     )
     if seen_state:
         record_ingested_content(gated, bloom_path, hashes_path, text_col)
@@ -1915,9 +1762,8 @@ def stream_corpus_ingest(
     so a redelivered epoch no-ops table by table (the crash-anywhere
     replay contract of ``corpus_ingest_batch``). Composes with
     ``state_buckets`` (bucketed state rides the snapshot format).
-    Requires a durable ``checkpoint_dir``, same as
-    ``stream_upsert_snapshot``, and fenceable (snapshot or fresh)
-    state roots — both validated HERE at setup, so a misconfigured
+    Requires a durable ``checkpoint_dir``, same as ``stream_upsert``
+    with ``app_id``, and snapshot (or fresh) state roots — both validated HERE at setup, so a misconfigured
     long-running query fails before it starts instead of dying at the
     first micro-batch with a backend error."""
 
@@ -2027,7 +1873,7 @@ def stream_classifier_scores(
             batch_df, weights, intercept, scores_path, id_col, text_col,
             n_features,
         ),
-        query_name, checkpoint_dir, available_now,
+        query_name, checkpoint_dir, available_now, scores=scores_path,
     )
 
 
@@ -2037,46 +1883,25 @@ def stream_cdc_apply(
     keys: list,
     seq_col: str,
     op_col: str = "op",
-    n_buckets: int = 256,
     checkpoint_dir: str | None = None,
     available_now: bool = True,
     query_name: str = "stream_cdc_apply",
-    fmt: str = "swap",
 ):
-    """Continuously materialize a CDC stream: one foreachBatch per
-    micro-batch, latest-wins exact under out-of-order and
+    """Continuously materialize a CDC stream into the snapshot table at
+    ``path`` (``sinks/snapshot.cdc_apply_snapshot``): one foreachBatch
+    per micro-batch, latest-wins exact under out-of-order and
     at-least-once delivery because every state row keeps its applied
-    sequence and deletes persist as tombstones. ``fmt`` picks the
-    state backend:
-
-    - ``"swap"`` (default): the bucket-partitioned hive table
-      (``operators/incremental.cdc_apply_table``), O(batch + touched
-      buckets) per batch; read with ``incremental.read_cdc_snapshot``.
-    - ``"snapshot"``: the manifest-committed table
-      (``sinks/snapshot.cdc_apply_snapshot``) — same semantics plus
-      atomic commits, time travel over the materialized state, CDF
-      and retention; read with ``snapshot.read_cdc_state``.
-    """
-    from ..operators.incremental import cdc_apply_table
+    sequence and deletes persist as tombstones. Commits are atomic,
+    with time travel, CDF and retention over the materialized state;
+    read it with ``snapshot.read_cdc_state``."""
     from ..sinks.snapshot import cdc_apply_snapshot
 
-    if fmt not in ("swap", "snapshot"):
-        raise ValueError(f"unknown cdc state format {fmt!r}")
-
-    def process(batch_df: DataFrame, epoch: int, txn) -> None:
-        if fmt == "snapshot":
-            cdc_apply_snapshot(
-                batch_df.sparkSession, batch_df, path, keys, seq_col,
-                op_col=op_col,
-            )
-        else:
-            cdc_apply_table(
-                batch_df.sparkSession, batch_df, path, keys, seq_col,
-                op_col=op_col, n_buckets=n_buckets,
-            )
-
     return _start_batches(
-        stream_df, process, query_name, checkpoint_dir, available_now
+        stream_df,
+        lambda batch_df, epoch, txn: cdc_apply_snapshot(
+            batch_df.sparkSession, batch_df, path, keys, seq_col, op_col=op_col
+        ),
+        query_name, checkpoint_dir, available_now, target=path,
     )
 
 
@@ -2146,11 +1971,11 @@ def takedown_batch(
     the same ids removes nothing.
 
     FORMAT DISPATCH: every table is removed through its own backend —
-    snapshot tables (the flat-state default since the state
-    maintainers moved onto the format) take ``delete_snapshot``'s
+    snapshot tables (the corpus and every state table the ingest
+    maintainers write) take ``delete_snapshot``'s
     pruned copy-on-write commit (O(touched files), atomic, time-travel
-    keeps the pre-takedown version until vacuum); swap tables keep the
-    partition-scoped rewrite below.
+    keeps the pre-takedown version until vacuum); swap tables (the side
+    indexes and legacy tables) keep the partition-scoped rewrite below.
     """
     import shutil
 
@@ -2299,21 +2124,6 @@ def takedown_batch(
             return
         pcols = list(pcols) if pcols else hive_partition_cols(path)
         _scoped_drop(path, pcols, _id_split(key), label)
-        # a pending write-ahead journal (update_component_state crashed
-        # mid-merge) is part of the table's state: its rows re-apply on
-        # the next merge, so doomed ids must be filtered out of it too
-        # or the takedown is silently undone for those rows
-        journal = os.path.join(path, "_changes_journal")
-        if table_exists(journal):
-            jdf = read_table(spark, journal)
-            kept = jdf.join(
-                F.broadcast(ids.withColumnRenamed(id_col, key)), key, "left_anti"
-            ).localCheckpoint()
-            if kept.count() == jdf.count():
-                return  # journal untouched by this takedown
-            shutil.rmtree(journal)
-            if kept.count() > 0:
-                kept.write.parquet(journal)
 
     # the signature table's id column is the literal "doc_id"
     # (near_dedup_batch contract), scores likewise

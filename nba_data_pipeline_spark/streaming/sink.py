@@ -2,10 +2,10 @@
 upsert" (J1 + S7) as a Structured Streaming façade.
 
 ``foreachBatch`` gives each micro-batch as a normal DataFrame, merged
-into the target table with the same MERGE-shaped writer the batch path
-uses — checkpointing makes re-delivered batches idempotent (upsert on
-the key), which is the exactly-once-ish contract the reference gets
-from ON CONFLICT DO UPDATE (``database/db_client.py:69-90``).
+into a snapshot table through the same ``sinks.store`` upsert the batch
+path uses — the key-upsert (plus the optional ``txn`` fence) makes
+re-delivered batches idempotent, the contract the reference gets from
+ON CONFLICT DO UPDATE (``database/db_client.py:69-90``).
 """
 
 from __future__ import annotations
@@ -13,9 +13,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..sinks.snapshot import upsert_snapshot
-from ..sinks.writer import upsert_table
 
 
 def _start_batches(
@@ -25,7 +22,7 @@ def _start_batches(
     checkpoint_dir: str | None = None,
     available_now: bool = True,
     app_id: str | None = None,
-    **fenced_paths: str | None,
+    **targets: str | None,
 ):
     """The one foreachBatch runner: start a query that runs
     ``process(batch_df, epoch_id, txn)`` per micro-batch, where ``txn``
@@ -33,29 +30,23 @@ def _start_batches(
     fence and None otherwise. ``available_now=True`` drains what is
     pending and stops (cron-style incremental ingest).
 
-    A fenced query is checked at setup, so a misconfigured query fails
-    here instead of at its first micro-batch: it needs a durable
-    ``checkpoint_dir`` (a fresh checkpoint restarts epochs at 0, and
-    the stale watermark would fence every new batch as a replay), and
-    no table named in ``fenced_paths`` may be an on-disk swap table
-    (no transaction watermark). The format probe is filesystem-only."""
-    if app_id is not None:
-        if not checkpoint_dir:
-            raise ValueError(
-                "app_id (txn fencing) requires a durable checkpoint_dir: "
-                "without one every run restarts epoch_id at 0 and the "
-                "prior watermark silently drops each new batch as a replay"
-            )
-        from ..sinks.store import detect_format
+    The query is checked at setup, so a misconfigured one fails here
+    instead of at its first micro-batch: no table named in ``targets``
+    may be a legacy swap table (keyed writes commit only snapshot
+    tables), and a fenced query needs a durable ``checkpoint_dir`` (a
+    fresh checkpoint restarts epochs at 0, and the stale watermark
+    would fence every new batch as a replay). Filesystem probes only."""
+    from ..sinks.store import require_snapshot
 
-        for name, path in fenced_paths.items():
-            if path is not None and detect_format(path) == "swap":
-                raise ValueError(
-                    f"app_id={app_id!r} arms the snapshot txn fence, but "
-                    f"the {name} table at {path} is an on-disk swap table "
-                    "with no transaction watermark; migrate_to_snapshot it "
-                    "or point the fenced pipeline at a fresh root"
-                )
+    if app_id is not None and not checkpoint_dir:
+        raise ValueError(
+            "app_id (txn fencing) requires a durable checkpoint_dir: "
+            "without one every run restarts epoch_id at 0 and the "
+            "prior watermark silently drops each new batch as a replay"
+        )
+    for path in targets.values():
+        if path is not None:
+            require_snapshot(path)
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -73,65 +64,39 @@ def stream_upsert(
     stream_df: DataFrame,
     path: str,
     key: str | Sequence[str],
-    partition_by: Sequence[str] = (),
     checkpoint_dir: str | None = None,
     query_name: str = "stream_upsert",
     available_now: bool = True,
+    app_id: str | None = None,
 ):
     """Start a streaming query that MERGEs every micro-batch into the
-    parquet table at ``path``. ``available_now=True`` drains what's
-    currently available and stops scheduling new triggers (incremental
-    batch semantics — run it on a cron like the reference's CLI)."""
-    return _start_batches(
-        stream_df,
-        lambda batch_df, epoch, txn: upsert_table(
-            batch_df.sparkSession, batch_df, path, key, partition_by
-        ),
-        query_name, checkpoint_dir, available_now,
-    )
+    snapshot table at ``path`` (``sinks.store.upsert_store``).
+    ``available_now=True`` drains what's currently available and stops
+    scheduling new triggers (incremental batch semantics — run it on a
+    cron like the reference's CLI).
 
-
-def stream_upsert_snapshot(
-    stream_df: DataFrame,
-    root: str,
-    key: str | Sequence[str],
-    app_id: str,
-    checkpoint_dir: str | None = None,
-    query_name: str = "stream_upsert_snapshot",
-    available_now: bool = True,
-):
-    """Exactly-once streaming MERGE into a manifest-committed snapshot
-    table (``sinks/snapshot.py``). foreachBatch is at-least-once —
-    after a crash between the sink write and the checkpoint commit,
-    Structured Streaming REDELIVERS the epoch — so the plain
-    ``stream_upsert`` is only idempotent when re-merging identical
-    rows happens to converge. This sink is idempotent BY PROTOCOL:
+    foreachBatch is at-least-once: after a crash between the sink
+    write and the checkpoint commit, Structured Streaming REDELIVERS
+    the epoch. Without ``app_id`` a redelivered epoch re-merges the
+    same rows (idempotent only when that converges). With ``app_id``
     every micro-batch commits with ``txn=(app_id, epoch_id)`` and the
-    manifest's transaction watermark makes any replayed epoch a
-    visible no-op (the public Delta txnAppId/txnVersion design). The
-    commit itself is a single atomic link, so a crash can never leave
-    a half-merged table for the retry to trip over.
+    manifest's transaction watermark makes a replayed epoch a visible
+    no-op (the public Delta txnAppId/txnVersion design); the commit is
+    one atomic link, so a crash never leaves a half-merged table.
 
-    ``checkpoint_dir`` is REQUIRED: without a durable checkpoint every
-    run restarts epoch_id at 0, and the (app_id, epoch) watermark left
-    by a prior run fences each new batch as an already-applied replay —
-    data is silently dropped. The watermark's lifetime is the
-    checkpoint's lifetime; reuse an app_id only with its checkpoint,
-    or pick a fresh app_id for a fresh checkpoint."""
-    if not checkpoint_dir:
-        raise ValueError(
-            "stream_upsert_snapshot requires checkpoint_dir: the "
-            "(app_id, epoch) txn fence outlives a temp checkpoint, so "
-            "a re-run without one silently drops every batch as a "
-            "replay. Pass a durable checkpoint_dir (and keep app_id "
-            "paired with it), or use a fresh app_id per run."
-        )
+    ``app_id`` REQUIRES ``checkpoint_dir``: without a durable checkpoint
+    every run restarts epoch_id at 0, and the (app_id, epoch) watermark
+    left by a prior run fences each new batch as an already-applied
+    replay — data is silently dropped. Reuse an app_id only with its
+    checkpoint, or pick a fresh app_id for a fresh checkpoint."""
+    from ..sinks import store
+
     return _start_batches(
         stream_df,
-        lambda batch_df, epoch, txn: upsert_snapshot(
-            batch_df.sparkSession, batch_df, root, key, txn=txn
+        lambda batch_df, epoch, txn: store.upsert_store(
+            batch_df.sparkSession, batch_df, path, key, txn=txn
         ),
-        query_name, checkpoint_dir, available_now, app_id=app_id,
+        query_name, checkpoint_dir, available_now, app_id=app_id, target=path,
     )
 
 
@@ -141,13 +106,10 @@ def run_incremental_merge(
     schema,
     path: str,
     key: str | Sequence[str],
-    partition_by: Sequence[str] = (),
     checkpoint_dir: str | None = None,
 ) -> None:
     """One AvailableNow incremental pass: read whatever new files landed
     in ``source_dir`` (per the checkpoint), upsert them, stop."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    q = stream_upsert(
-        stream, path, key, partition_by, checkpoint_dir, query_name="incr_merge"
-    )
+    q = stream_upsert(stream, path, key, checkpoint_dir, query_name="incr_merge")
     q.awaitTermination()

@@ -155,11 +155,11 @@ def test_cli_corpus_pipeline_end_to_end(spark, tmp_path):
     argv = ["corpus", "--input", docs_p, "--benchmark", bench_p,
             "--output", out_p, "--pack_capacity", "64", "--shards", "4"]
     cli.run(argv, spark)
-    got = spark.read.parquet(out_p)
+    got = _rs(spark, out_p)
     assert got.count() == 2
     assert {"split", "pack_id", "start_offset"} <= set(got.columns)
     cli.run(argv, spark)  # idempotent re-run (upsert on doc_id)
-    assert spark.read.parquet(out_p).count() == 2
+    assert _rs(spark, out_p).count() == 2
     # --benchmark is mandatory for corpus
     import pytest
     with pytest.raises(SystemExit, match="benchmark"):
@@ -181,7 +181,7 @@ def test_cli_corpus_pii_scrub_flag(spark, tmp_path):
     cli.run(["corpus", "--input", docs_p, "--benchmark", bench_p,
              "--output", out_p, "--pack_capacity", "64", "--shards", "4",
              "--pii_scrub", "email,phone"], spark)
-    text = spark.read.parquet(out_p).collect()[0].text
+    text = _rs(spark, out_p).collect()[0].text
     assert "[EMAIL]" in text and "[PHONE]" in text
     assert "fox@example.com" not in text and "555-123-4567" not in text
     # typo'd type fails loudly pre-Spark
@@ -365,7 +365,7 @@ def test_cli_corpus_ingest_seen_state(spark, tmp_path):
 
 def test_cli_cdc_materialize(spark, tmp_path):
     from nba_data_pipeline_spark.cli import parse_args, run
-    from nba_data_pipeline_spark.operators.incremental import read_cdc_snapshot
+    from nba_data_pipeline_spark.sinks.snapshot import read_cdc_state
 
     src, out = str(tmp_path / "log"), str(tmp_path / "snap")
     spark.createDataFrame(
@@ -376,7 +376,7 @@ def test_cli_cdc_materialize(spark, tmp_path):
     run(["cdc_materialize", "--input", src, "--output", out,
          "--key", "id", "--seq_col", "seq",
          "--checkpoint", str(tmp_path / "ckpt")], spark=spark)
-    got = {r.id: r.bal for r in read_cdc_snapshot(spark, out).collect()}
+    got = {r.id: r.bal for r in read_cdc_state(spark, out).collect()}
     assert got == {1: 3.0}
 
     with pytest.raises(SystemExit, match="requires --key"):

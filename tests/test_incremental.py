@@ -220,88 +220,100 @@ def _cdc_changes(spark, rows):
 
 
 def test_cdc_apply_table_out_of_order_and_tombstones(spark, tmp_path):
+    """CDC applied batch by batch into a snapshot table
+    (``snapshot.cdc_apply_snapshot``): latest seq wins under
+    out-of-order delivery, deletes persist as tombstones that fence
+    late lower-seq updates, and a higher-seq insert resurrects."""
     from pyspark.sql import functions as F
 
-    from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
-        read_cdc_snapshot,
-    )
+    from nba_data_pipeline_spark.sinks.snapshot import cdc_apply_snapshot, read_cdc_state
 
     path = str(tmp_path / "snap")
     # batch 1: inserts + an update at seq 5
-    cdc_apply_table(
+    cdc_apply_snapshot(
         spark,
         _cdc_changes(spark, [(1, "I", 1, "a", 1.0), (2, "I", 1, "b", 2.0),
                              (1, "U", 5, "a", 5.0)]),
-        path, ["id"], "seq", n_buckets=8,
+        path, ["id"], "seq",
     )
-    got = {r.id: r.bal for r in read_cdc_snapshot(spark, path).collect()}
+    got = {r.id: r.bal for r in read_cdc_state(spark, path).collect()}
     assert got == {1: 5.0, 2: 2.0}
     # batch 2 arrives LATE with a LOWER seq for key 1 -> must lose;
     # and deletes key 2 at seq 9
-    cdc_apply_table(
+    cdc_apply_snapshot(
         spark,
         _cdc_changes(spark, [(1, "U", 3, "a", 3.0), (2, "D", 9, "b", 0.0)]),
-        path, ["id"], "seq", n_buckets=8,
+        path, ["id"], "seq",
     )
-    got = {r.id: r.bal for r in read_cdc_snapshot(spark, path).collect()}
+    got = {r.id: r.bal for r in read_cdc_state(spark, path).collect()}
     assert got == {1: 5.0}
     # batch 3: a late update for the DELETED key with seq < 9 loses to
     # the tombstone; a later insert (seq 12) resurrects it
-    cdc_apply_table(
-        spark, _cdc_changes(spark, [(2, "U", 7, "b", 7.0)]),
-        path, ["id"], "seq", n_buckets=8,
+    cdc_apply_snapshot(
+        spark, _cdc_changes(spark, [(2, "U", 7, "b", 7.0)]), path, ["id"], "seq"
     )
-    assert read_cdc_snapshot(spark, path).filter(F.col("id") == 2).count() == 0
-    cdc_apply_table(
-        spark, _cdc_changes(spark, [(2, "I", 12, "b2", 12.0)]),
-        path, ["id"], "seq", n_buckets=8,
+    assert read_cdc_state(spark, path).filter(F.col("id") == 2).count() == 0
+    cdc_apply_snapshot(
+        spark, _cdc_changes(spark, [(2, "I", 12, "b2", 12.0)]), path, ["id"], "seq"
     )
-    got = {r.id: (r.name, r.bal) for r in read_cdc_snapshot(spark, path).collect()}
+    got = {r.id: (r.name, r.bal) for r in read_cdc_state(spark, path).collect()}
     assert got[2] == ("b2", 12.0)
 
 
 def test_cdc_apply_table_redelivery_idempotent(spark, tmp_path):
-    from nba_data_pipeline_spark.operators.incremental import cdc_apply_table
+    from nba_data_pipeline_spark.sinks.snapshot import cdc_apply_snapshot, read_snapshot
 
     path = str(tmp_path / "snap")
     b1 = [(k, "I", 1, f"n{k}", float(k)) for k in range(40)]
     b2 = [(3, "U", 2, "n3", 33.0), (4, "D", 2, "n4", 0.0)]
-    cdc_apply_table(spark, _cdc_changes(spark, b1), path, ["id"], "seq", n_buckets=8)
-    cdc_apply_table(spark, _cdc_changes(spark, b2), path, ["id"], "seq", n_buckets=8)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    # crash-replay of batch 2
-    cdc_apply_table(spark, _cdc_changes(spark, b2), path, ["id"], "seq", n_buckets=8)
-    after = sorted(map(tuple, spark.read.parquet(path).collect()))
+    cdc_apply_snapshot(spark, _cdc_changes(spark, b1), path, ["id"], "seq")
+    cdc_apply_snapshot(spark, _cdc_changes(spark, b2), path, ["id"], "seq")
+    before = sorted(map(tuple, read_snapshot(spark, path).collect()))
+    # crash-replay of batch 2: the state rows (tombstones and _seq
+    # included) do not move
+    cdc_apply_snapshot(spark, _cdc_changes(spark, b2), path, ["id"], "seq")
+    after = sorted(map(tuple, read_snapshot(spark, path).collect()))
     assert after == before
 
 
 def test_cdc_apply_table_prunes_untouched_buckets(spark, tmp_path):
+    """Bucket-led CDC state (key = (bucket, id), eight key-sorted
+    files): a one-key batch rewrites only files holding its bucket;
+    every other file is carried by reference."""
     import os
-    import time
 
-    from nba_data_pipeline_spark.operators.incremental import cdc_apply_table
+    from pyspark.sql import functions as F
+
+    from nba_data_pipeline_spark.sinks import snapshot as S
 
     path = str(tmp_path / "snap")
-    b1 = [(k, "I", 1, f"n{k}", float(k)) for k in range(200)]
-    cdc_apply_table(spark, _cdc_changes(spark, b1), path, ["id"], "seq", n_buckets=8)
-    mt = {d: os.path.getmtime(os.path.join(path, d))
-          for d in os.listdir(path) if d.startswith("bucket=")}
-    assert len(mt) == 8
-    time.sleep(1.1)
-    cdc_apply_table(
-        spark, _cdc_changes(spark, [(7, "U", 2, "n7", 77.0)]),
-        path, ["id"], "seq", n_buckets=8,
+    bucket = F.pmod(F.xxhash64("id"), F.lit(8)).cast("int").alias("bucket")
+    state = spark.range(200).select(
+        bucket, F.col("id"), F.concat(F.lit("n"), F.col("id").cast("string")).alias("name"),
+        F.col("id").cast("double").alias("bal"),
+        F.lit(1).cast("long").alias("_seq"), F.lit(False).alias("_deleted"),
     )
-    changed = [d for d in mt
-               if os.path.getmtime(os.path.join(path, d)) != mt[d]]
-    assert len(changed) == 1
+    S.write_snapshot(spark, state, path, key=["bucket", "id"], target_files=8)
+    v1 = {f["path"] for f in S._load_manifest(path, 1)["files"]}
+    assert len(v1) > 1
+    batch = _cdc_changes(spark, [(7, "U", 2, "n7", 77.0)]).select(
+        bucket, "id", "op", "seq", "name", "bal"
+    )
+    S.cdc_apply_snapshot(spark, batch, path, ["bucket", "id"], "seq")
+    v2 = {f["path"] for f in S._load_manifest(path, 2)["files"]}
+    b7 = batch.first().bucket
+    holding = {
+        f for f in v1
+        if spark.read.parquet(os.path.join(path, f)).filter(F.col("bucket") == b7).count()
+    }
+    assert v1 - v2 and v1 - v2 <= holding and len(holding) <= 2
+    assert S.read_cdc_state(spark, path).filter("id = 7").collect()[0].bal == 77.0
 
 
 def test_stream_cdc_apply_end_to_end(spark, tmp_path):
     from pyspark.sql import types as T
 
-    from nba_data_pipeline_spark.operators.incremental import read_cdc_snapshot
+    from nba_data_pipeline_spark.sinks.snapshot import read_cdc_state
     from nba_data_pipeline_spark.streaming.ops import stream_cdc_apply
 
     src, path, ckpt = (str(tmp_path / d) for d in ("src", "snap", "ckpt"))
@@ -314,50 +326,11 @@ def test_stream_cdc_apply_end_to_end(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
     stream_cdc_apply(stream, path, ["id"], "seq",
-                     checkpoint_dir=ckpt, n_buckets=8).awaitTermination()
+                     checkpoint_dir=ckpt).awaitTermination()
     _cdc_changes(spark, [(2, "D", 2, "b", 0.0), (3, "I", 2, "c", 3.0)]) \
         .coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
     stream_cdc_apply(stream, path, ["id"], "seq",
-                     checkpoint_dir=ckpt, n_buckets=8).awaitTermination()
-    got = {r.id: r.bal for r in read_cdc_snapshot(spark, path).collect()}
+                     checkpoint_dir=ckpt).awaitTermination()
+    got = {r.id: r.bal for r in read_cdc_state(spark, path).collect()}
     assert got == {1: 1.0, 3: 3.0}
-
-
-def test_compact_cdc_table_gc_and_files(spark, tmp_path):
-    import glob
-    import os
-
-    from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
-        compact_cdc_table,
-        read_cdc_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    cdc_apply_table(
-        spark,
-        _cdc_changes(spark, [(k, "I", 1, f"n{k}", float(k)) for k in range(60)]),
-        path, ["id"], "seq", n_buckets=4,
-    )
-    # two delete batches at different seqs
-    cdc_apply_table(spark, _cdc_changes(spark, [(1, "D", 2, "n1", 0.0)]),
-                    path, ["id"], "seq", n_buckets=4)
-    cdc_apply_table(spark, _cdc_changes(spark, [(2, "D", 8, "n2", 0.0)]),
-                    path, ["id"], "seq", n_buckets=4)
-    live_before = sorted(r.id for r in read_cdc_snapshot(spark, path).collect())
-    # watermark 5: only the seq-2 tombstone is GC-able
-    compact_cdc_table(spark, path, drop_tombstones_below_seq=5)
-    raw = spark.read.parquet(path)
-    assert raw.filter("_deleted").count() == 1          # seq-8 tombstone kept
-    assert sorted(r.id for r in read_cdc_snapshot(spark, path).collect()) == live_before
-    # every bucket dir compacted to one file
-    per_dir = [len(glob.glob(f"{path}/{d}/*.parquet"))
-               for d in os.listdir(path) if d.startswith("bucket=")]
-    assert per_dir and max(per_dir) == 1
-    # the GC'd key can now be re-inserted at ANY seq (watermark contract:
-    # nothing below 5 is still in flight)
-    cdc_apply_table(spark, _cdc_changes(spark, [(1, "I", 6, "n1b", 11.0)]),
-                    path, ["id"], "seq", n_buckets=4)
-    got = {r.id: r.bal for r in read_cdc_snapshot(spark, path).collect()}
-    assert got[1] == 11.0

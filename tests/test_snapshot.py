@@ -559,7 +559,7 @@ def test_stream_upsert_snapshot_exactly_once(spark, tmp_path):
     redelivered) — the txn fence must make the rerun a no-op."""
     from pyspark.sql import types as T
 
-    from nba_data_pipeline_spark.streaming.sink import stream_upsert_snapshot
+    from nba_data_pipeline_spark.streaming.sink import stream_upsert
 
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
@@ -569,7 +569,7 @@ def test_stream_upsert_snapshot_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     spark.createDataFrame([(1, 1.0), (2, 2.0)], schema).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    stream_upsert_snapshot(stream, root, "id", "job1", checkpoint_dir=ckpt).awaitTermination()
+    stream_upsert(stream, root, "id", checkpoint_dir=ckpt, app_id="job1").awaitTermination()
     assert {r.id: r.v for r in S.read_snapshot(spark, root).collect()} == {1: 1.0, 2: 2.0}
     v_after_first = S.current_version(root)
 
@@ -579,8 +579,8 @@ def test_stream_upsert_snapshot_exactly_once(spark, tmp_path):
 
     _sh.rmtree(ckpt)
     stream = spark.readStream.schema(schema).parquet(src)
-    stream_upsert_snapshot(
-        stream, root, "id", "job1", checkpoint_dir=str(tmp_path / "ckpt2")
+    stream_upsert(
+        stream, root, "id", checkpoint_dir=str(tmp_path / "ckpt2"), app_id="job1"
     ).awaitTermination()
     assert S.current_version(root) == v_after_first
     assert {r.id: r.v for r in S.read_snapshot(spark, root).collect()} == {1: 1.0, 2: 2.0}
@@ -591,8 +591,8 @@ def test_stream_upsert_snapshot_exactly_once(spark, tmp_path):
     # txn_version(root, app_id); the fence prioritizes no-double-apply.)
     spark.createDataFrame([(2, 20.0), (3, 3.0)], schema).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    stream_upsert_snapshot(
-        stream, root, "id", "job1", checkpoint_dir=str(tmp_path / "ckpt2")
+    stream_upsert(
+        stream, root, "id", checkpoint_dir=str(tmp_path / "ckpt2"), app_id="job1"
     ).awaitTermination()
     got = {r.id: r.v for r in S.read_snapshot(spark, root).collect()}
     assert got == {1: 1.0, 2: 20.0, 3: 3.0}
@@ -1203,13 +1203,13 @@ def test_stream_upsert_snapshot_requires_checkpoint(spark, tmp_path):
     """ADVICE r13 (medium): a temp checkpoint restarts epoch_id at 0 and
     the prior run's (app_id, epoch) fence silently drops every batch —
     reject checkpoint_dir=None up front."""
-    from nba_data_pipeline_spark.streaming.sink import stream_upsert_snapshot
+    from nba_data_pipeline_spark.streaming.sink import stream_upsert
 
     src = str(tmp_path / "src")
     _table(spark, 10).write.parquet(src)
     stream = spark.readStream.schema("k bigint, v bigint").parquet(src)
     with pytest.raises(ValueError, match="checkpoint_dir"):
-        stream_upsert_snapshot(stream, str(tmp_path / "t"), "k", "app1")
+        stream_upsert(stream, str(tmp_path / "t"), "k", app_id="app1")
 
 
 def test_vacuum_respects_db_manifest_pins(spark, tmp_path):
@@ -2049,11 +2049,10 @@ def test_cdc_apply_snapshot_out_of_order_and_replay(spark, tmp_path):
 
 
 def test_cdc_apply_snapshot_matches_bucketed_variant(spark, tmp_path):
-    """Same log through both CDC state backends -> identical live view."""
-    from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
-        read_cdc_snapshot,
-    )
+    """The same log applied batch by batch to the snapshot table and
+    folded by the in-memory ``incremental.cdc_apply`` over a bucketed
+    frame -> identical live view."""
+    from nba_data_pipeline_spark.operators.incremental import cdc_apply
 
     log1 = spark.range(0, 500).select(
         F.col("id").alias("k"), F.lit("I").alias("op"),
@@ -2065,12 +2064,12 @@ def test_cdc_apply_snapshot_matches_bucketed_variant(spark, tmp_path):
         F.lit(2).cast("long").alias("seq"), F.lit(-1).cast("long").alias("v"),
     )
     snap_root = str(tmp_path / "snap")
-    swap_root = str(tmp_path / "swap")
+    ref = spark.createDataFrame([], "k long, v long")
     for log in (log1, log2):
         S.cdc_apply_snapshot(spark, log, snap_root, "k", "seq")
-        cdc_apply_table(spark, log, swap_root, ["k"], "seq", n_buckets=8)
+        ref = cdc_apply(ref, log.repartition(8, "k"), ["k"], "seq")
     a = _rows(S.read_cdc_state(spark, snap_root))
-    b = _rows(read_cdc_snapshot(spark, swap_root).select("k", "v"))
+    b = _rows(ref)
     assert a == b and len(a) > 0
 
 

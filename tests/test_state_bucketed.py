@@ -5,8 +5,8 @@ merge-key column (zone maps + the exact refine pass prune the rewrite
 to files holding touched buckets), so the billion-row state tables a
 100 TB corpus maintains get the SAME replay fence as flat state
 (reference parity anchor: Postgres upserts are idempotent at any
-scale, reference database/db_client.py:69-90). Swap-layout bucketed
-state remains the un-fenced default and rejects ``txn`` loudly."""
+scale, reference database/db_client.py:69-90). Legacy swap-layout
+state is refused, fenced or not."""
 
 from __future__ import annotations
 
@@ -138,49 +138,53 @@ def test_bucketed_snapshot_layout_is_sticky_and_guarded(spark, tmp_path):
 
 def test_existing_swap_bucketed_state_rejects_txn(spark, tmp_path):
     """An established hive-bucketed SWAP state table has no transaction
-    watermark: arming the fence against it must fail loud (pointing at
-    migrate_to_snapshot), never silently drop the guarantee."""
+    watermark: a write into it, fenced or not, must fail loud (pointing
+    at migrate_to_snapshot), never silently drop the guarantee."""
+    from nba_data_pipeline_spark.sinks import writer
     from nba_data_pipeline_spark.streaming.ops import near_dedup_batch
 
     sig_p, pair_p = str(tmp_path / "sigs"), str(tmp_path / "pairs")
-    b = _docs(spark, [(1, BASE)])
-    near_dedup_batch(b, sig_p, pair_p, state_buckets=4, **KW)  # swap layout
+    legacy = spark.createDataFrame([(1, 0)], "doc_id long, bucket int")
+    writer.write_table(legacy, sig_p, partition_by=["bucket"])
     assert store.detect_format(sig_p) == "swap"
-    with pytest.raises(ValueError, match="migrate_to_snapshot"):
+    for txn in (("a", 1), None):
+        with pytest.raises(ValueError, match="migrate_to_snapshot"):
+            near_dedup_batch(
+                _docs(spark, [(2, BASE)]), sig_p, pair_p,
+                state_buckets=4, txn=txn, **KW,
+            )
+    assert not store.store_exists(pair_p)
+    # an explicit swap request fails the shared arg contract
+    with pytest.raises(ValueError, match="unknown table format 'swap'"):
         near_dedup_batch(
-            _docs(spark, [(2, BASE)]), sig_p, pair_p,
-            state_buckets=4, txn=("a", 1), **KW,
-        )
-    # explicit swap request + txn fails the shared arg contract
-    with pytest.raises(ValueError, match="transaction watermark"):
-        near_dedup_batch(
-            b, str(tmp_path / "s2"), str(tmp_path / "p2"),
+            _docs(spark, [(1, BASE)]), str(tmp_path / "s2"), str(tmp_path / "p2"),
             state_buckets=4, state_format="swap", txn=("a", 1), **KW,
         )
 
 
 def test_stream_wrappers_reject_swap_state_at_setup(spark, tmp_path):
-    """ADVICE r15 (medium): an app_id-armed stream over swap-format
-    state used to start, process nothing, and die at the FIRST
-    micro-batch with an obscure backend error. Now the wrapper fails
-    at SETUP, naming the table."""
-    from nba_data_pipeline_spark.streaming.ops import (
-        near_dedup_batch,
-        stream_near_dedup,
-    )
+    """ADVICE r15 (medium): a stream over swap-format state used to
+    start, process nothing, and die at the FIRST micro-batch with an
+    obscure backend error. The wrapper fails at SETUP, naming the
+    table, with or without app_id."""
+    from nba_data_pipeline_spark.sinks import writer
+    from nba_data_pipeline_spark.streaming.ops import stream_near_dedup
 
     sig_p, pair_p = str(tmp_path / "sigs"), str(tmp_path / "pairs")
-    near_dedup_batch(
-        _docs(spark, [(1, BASE)]), sig_p, pair_p, state_buckets=4, **KW
+    writer.write_table(
+        spark.createDataFrame([(1, 0)], "doc_id long, bucket int"), sig_p,
+        partition_by=["bucket"],
     )
     src = str(tmp_path / "src")
     _docs(spark, [(2, BASE)]).write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    with pytest.raises(ValueError, match="signatures table .* swap"):
-        stream_near_dedup(
-            stream, sig_p, pair_p, checkpoint_dir=str(tmp_path / "ck"),
-            app_id="ing", state_buckets=4,
-        )
+    for app_id in ("ing", None):
+        with pytest.raises(ValueError, match=f"{sig_p} is a legacy swap table"):
+            stream_near_dedup(
+                stream, sig_p, pair_p, checkpoint_dir=str(tmp_path / "ck"),
+                app_id=app_id, state_buckets=4,
+            )
+    assert not (tmp_path / "ck").exists()
 
 
 def test_stream_near_dedup_bucketed_app_id_end_to_end(spark, tmp_path):

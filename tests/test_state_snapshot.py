@@ -111,11 +111,9 @@ def test_quality_scores_snapshot_txn_fence(spark, tmp_path):
 
 
 def test_component_state_snapshot_atomic_and_fenced(spark, tmp_path):
-    """Flat component labels land on a snapshot table: no write-ahead
-    journal (the manifest commit is all-or-nothing), and a fenced
-    replay skips even the label read + delta computation."""
-    import os
-
+    """Flat component labels land on a snapshot table (the manifest
+    commit is all-or-nothing), and a fenced replay skips even the label
+    read + delta computation."""
     from nba_data_pipeline_spark.streaming.ops import update_component_state
 
     labels_p = str(tmp_path / "labels")
@@ -123,7 +121,6 @@ def test_component_state_snapshot_atomic_and_fenced(spark, tmp_path):
     b2 = spark.createDataFrame([(3, 10), (30, 31)], "id_a long, id_b long")
     update_component_state(b1, labels_p, txn=("cc", 1))
     assert store.detect_format(labels_p) == "snapshot"
-    assert not os.path.exists(os.path.join(labels_p, "_changes_journal"))
     update_component_state(b2, labels_p, txn=("cc", 2))
     v = S.current_version(labels_p)
     got = {r.doc_id: r.component_id for r in read_store(spark, labels_p).collect()}
@@ -168,10 +165,10 @@ def test_image_dedup_snapshot_state_txn_fence(spark, tmp_path):
 
 
 def test_state_args_guards(spark, tmp_path):
-    """txn with an explicit swap request rejects loudly (the swap
-    layout has no transaction watermark — bucketed+fenced state rides
-    the snapshot format instead, VERDICT r15 task #2); the streaming
-    wrappers reject app_id without a durable checkpoint."""
+    """An explicit swap request rejects loudly, with or without txn
+    (state is always a snapshot table; bucketed+fenced state keeps
+    bucket as the leading merge-key column); the streaming wrappers
+    reject app_id without a durable checkpoint."""
     from nba_data_pipeline_spark.streaming.ops import (
         near_dedup_batch,
         stream_near_dedup,
@@ -179,12 +176,12 @@ def test_state_args_guards(spark, tmp_path):
     )
 
     b = _docs(spark, [(1, BASE)])
-    with pytest.raises(ValueError, match="transaction watermark"):
+    with pytest.raises(ValueError, match="unknown table format 'swap'"):
         near_dedup_batch(
             b, str(tmp_path / "s"), str(tmp_path / "p"),
             state_format="swap", txn=("a", 1),
         )
-    with pytest.raises(ValueError, match="transaction watermark"):
+    with pytest.raises(ValueError, match="unknown table format 'swap'"):
         near_dedup_batch(
             b, str(tmp_path / "s"), str(tmp_path / "p"),
             state_buckets=4, state_format="swap", txn=("a", 1),

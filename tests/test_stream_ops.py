@@ -808,15 +808,14 @@ def test_takedown_partition_scoped_rewrite(spark, tmp_path):
 
 
 def test_bucketed_state_ingest_and_scoped_takedown(spark, tmp_path):
-    """state_buckets lays signature/pairs/scores state out in
-    pmod(xxhash64(key), N) hive buckets: results match the unbucketed
-    path, a second batch's merge leaves untouched buckets
-    byte-identical on disk (inode check), replay is idempotent, and
-    takedown's auto-detected partition pruning rewrites only the
-    buckets holding doomed rows."""
-    import os
+    """state_buckets makes pmod(xxhash64(key), N) the leading merge-key
+    column of the signature/pairs/scores snapshot tables: results match
+    the unbucketed path, replay is idempotent, and takedown removes the
+    doomed rows from every bucketed table while keeping its layout."""
+    from pyspark.sql import functions as F
 
     from nba_data_pipeline_spark.operators.text import fit_trigram_lm
+    from nba_data_pipeline_spark.sinks import snapshot as S
     from nba_data_pipeline_spark.streaming.ops import (
         near_dedup_batch,
         quality_score_batch,
@@ -829,67 +828,44 @@ def test_bucketed_state_ingest_and_scoped_takedown(spark, tmp_path):
     schema = "doc_id long, text string"
     sig_p, pairs_p = str(tmp_path / "sigs"), str(tmp_path / "pairs")
     scores_p = str(tmp_path / "scores")
+    flat_s, flat_p = str(tmp_path / "flat_sigs"), str(tmp_path / "flat_pairs")
     lm = fit_trigram_lm(spark.createDataFrame(rows1, schema), "text")
 
+    def key(p):
+        return S._load_manifest(p, S.current_version(p))["key"]
+
     b1 = spark.createDataFrame(rows1, schema)
-    near_dedup_batch(b1, sig_p, pairs_p, state_buckets=8, threshold=0.2)
-    quality_score_batch(b1, lm, scores_p, state_buckets=8)
-    assert any(d.startswith("bucket=") for d in os.listdir(sig_p))
-    assert {r.doc_id for r in _rs(spark, sig_p).collect()} == set(range(20))
-
-    def inodes(base, bucket):
-        d = os.path.join(base, f"bucket={bucket}")
-        if not os.path.isdir(d):
-            return None
-        return {
-            f: os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    # second batch: buckets not touched by batch-2 keys keep their files
     b2 = spark.createDataFrame(rows2, schema)
-    from pyspark.sql import functions as F
-
-    touched = {
-        r.b
-        for r in b2.select(F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("b")).collect()
-    }
-    before = {b: inodes(sig_p, b) for b in range(8)}
-    near_dedup_batch(b2, sig_p, pairs_p, state_buckets=8, threshold=0.2)
-    untouched = [b for b in range(8) if b not in touched and before[b] is not None]
-    assert untouched, "fixture must leave at least one bucket untouched"
-    for b in untouched:
-        assert inodes(sig_p, b) == before[b]
+    for b in (b1, b2, b2):  # b2 twice = redelivery
+        near_dedup_batch(b, sig_p, pairs_p, state_buckets=8, threshold=0.2)
+        near_dedup_batch(b, flat_s, flat_p, threshold=0.2)
+        quality_score_batch(b, lm, scores_p, state_buckets=8)
+    assert key(sig_p) == ["bucket", "doc_id"] and key(scores_p) == ["bucket", "doc_id"]
+    assert key(pairs_p) == ["bucket", "id_a", "id_b"]
+    assert _rs(spark, sig_p).select("doc_id", "bucket").distinct().count() == 30
     assert _rs(spark, sig_p).count() == 30
-    quality_score_batch(b2, lm, scores_p, state_buckets=8)
+    want = sorted(tuple(r) for r in _rs(spark, flat_p).collect())
+    assert sorted(tuple(r) for r in _rs(spark, pairs_p).drop("bucket").collect()) == want
+    buckets = _rs(spark, sig_p).select(
+        (F.col("bucket") == F.pmod(F.xxhash64("doc_id"), F.lit(8))).alias("ok")
+    )
+    assert buckets.filter(~F.col("ok")).count() == 0
 
-    # replay batch 2: byte-idempotent state (row-level, not file-level)
-    near_dedup_batch(b2, sig_p, pairs_p, state_buckets=8, threshold=0.2)
-    assert _rs(spark, sig_p).count() == 30
-    sig_rows = _rs(spark, sig_p).select("doc_id", "bucket").distinct().count()
-    assert sig_rows == 30
-
-    # takedown prunes bucketed state via auto-detected layout
     corpus_p = str(tmp_path / "corpus")
     spark.createDataFrame(rows1 + rows2, schema).write.parquet(corpus_p)
     doomed = spark.createDataFrame([(5,), (25,)], "doc_id long")
-    doom_buckets = {
-        r.b
-        for r in doomed.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("b")
-        ).collect()
-    }
-    before_td = {b: inodes(sig_p, b) for b in range(8)}
     removed = takedown_batch(
         doomed, corpus_p, signature_path=sig_p, scores_path=scores_p
     )
     assert removed["signatures"] == 2 and removed["scores"] == 2
-    for b in range(8):
-        if b not in doom_buckets and before_td[b] is not None:
-            assert inodes(sig_p, b) == before_td[b]
     assert _rs(spark, sig_p).filter("doc_id IN (5, 25)").count() == 0
     assert _rs(spark, scores_p).filter("doc_id IN (5, 25)").count() == 0
+    assert key(sig_p) == ["bucket", "doc_id"]
+    near_dedup_batch(  # the layout still takes bucketed merges
+        spark.createDataFrame([(5, rows1[5][1])], schema), sig_p, pairs_p,
+        state_buckets=8, threshold=0.2,
+    )
+    assert _rs(spark, sig_p).count() == 29
 
 
 def test_layout_guard_rejects_flat_or_remoduled_merge(spark, tmp_path):
@@ -897,9 +873,9 @@ def test_layout_guard_rejects_flat_or_remoduled_merge(spark, tmp_path):
     without state_buckets against an already-bucketed state table used
     to silently flatten the layout (leaving bucket as a data column
     beside stale bucket dirs — duplicate rows on the next read). The
-    writer's check_partition_layout + _layout_meta.json sidecar must
-    refuse the flat call, the reverse (bucketed call on a flat table),
-    and a changed modulus."""
+    state writer's manifest-key and _layout_meta.json modulus guards
+    must refuse the flat call, the reverse (bucketed call on a flat
+    table), and a changed modulus."""
     import pytest
 
     from nba_data_pipeline_spark.operators.text import fit_trigram_lm
@@ -916,7 +892,7 @@ def test_layout_guard_rejects_flat_or_remoduled_merge(spark, tmp_path):
 
     sig_p, pairs_p = str(tmp_path / "sigs"), str(tmp_path / "pairs")
     near_dedup_batch(b, sig_p, pairs_p, state_buckets=8, threshold=0.2)
-    with pytest.raises(ValueError, match="layout mismatch"):
+    with pytest.raises(ValueError, match="cannot mix"):
         near_dedup_batch(b, sig_p, pairs_p, threshold=0.2)  # flat call
     with pytest.raises(ValueError, match="bucket-count mismatch"):
         near_dedup_batch(b, sig_p, pairs_p, state_buckets=16, threshold=0.2)
@@ -924,23 +900,19 @@ def test_layout_guard_rejects_flat_or_remoduled_merge(spark, tmp_path):
     assert _rs(spark, sig_p).select("doc_id").distinct().count() == 12
 
     scores_p = str(tmp_path / "scores")
-    quality_score_batch(b, lm, scores_p)  # flat table (snapshot default)
-    # the flat table is SNAPSHOT-format, so the bucketed call resolves
-    # the sticky on-disk format and the snapshot-side key guard refuses
-    # the layout change (r16: buckets+snapshot now compose, same
-    # cannot-mix contract as the swap sidecar guard)
+    quality_score_batch(b, lm, scores_p)  # flat table
     with pytest.raises(ValueError, match="cannot mix"):
         quality_score_batch(b, lm, scores_p, state_buckets=8)
 
 
 def test_layout_guard_on_fold_and_cdc_state(spark, tmp_path):
-    """fold_aggregate_state_table / cdc_apply_table share the modulus-
-    is-layout exposure: merging with a different n_buckets splits one
-    key across two bucket dirs. The guard must raise instead."""
+    """fold_aggregate_state_table has the modulus-is-layout exposure:
+    merging with a different n_buckets splits one key across two bucket
+    dirs. The guard must raise instead. (CDC state is a snapshot table
+    keyed on the CDC keys alone, so it has no modulus to guard.)"""
     import pytest
 
     from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
         fold_aggregate_state_table,
     )
 
@@ -950,14 +922,6 @@ def test_layout_guard_on_fold_and_cdc_state(spark, tmp_path):
     fold_aggregate_state_table(spark, batch, fold_p, ["k"], specs, n_buckets=8)
     with pytest.raises(ValueError, match="bucket-count mismatch"):
         fold_aggregate_state_table(spark, batch, fold_p, ["k"], specs, n_buckets=32)
-
-    cdc_p = str(tmp_path / "cdc")
-    log = spark.createDataFrame(
-        [(1, 10, "I", "a"), (2, 11, "I", "b")], "k long, seq long, op string, val string"
-    )
-    cdc_apply_table(spark, log, cdc_p, ["k"], "seq", n_buckets=8)
-    with pytest.raises(ValueError, match="bucket-count mismatch"):
-        cdc_apply_table(spark, log, cdc_p, ["k"], "seq", n_buckets=16)
 
 
 def test_bucketed_merge_crash_mid_swap_leaves_state_readable(spark, tmp_path):
@@ -1229,11 +1193,10 @@ def test_component_state_two_batches_match_single_shot(spark, tmp_path):
     """update_component_state across two ingest batches (with the
     second redelivered) converges to connected_components over the
     full pair history — including a batch-2 edge that MERGES two
-    batch-1 components; only changed rows are merged (inode check on
-    an untouched bucket)."""
-    import os
-
+    batch-1 components; only changed rows are merged (a redelivery
+    rewrites no file)."""
     from nba_data_pipeline_spark.operators.dedup import connected_components
+    from nba_data_pipeline_spark.sinks import snapshot as S
     from nba_data_pipeline_spark.streaming.ops import update_component_state
 
     labels_p = str(tmp_path / "labels")
@@ -1247,9 +1210,7 @@ def test_component_state_two_batches_match_single_shot(spark, tmp_path):
     update_component_state(b2, labels_p, state_buckets=4)
     update_component_state(b2, labels_p, state_buckets=4)  # redelivery
 
-    got = {
-        r.doc_id: r.component_id for r in spark.read.parquet(labels_p).collect()
-    }
+    got = {r.doc_id: r.component_id for r in _rs(spark, labels_p).collect()}
     want = {
         r.doc_id: r.component_id
         for r in connected_components(b1.unionByName(b2)).collect()
@@ -1257,20 +1218,15 @@ def test_component_state_two_batches_match_single_shot(spark, tmp_path):
     assert got == want
     assert got[11] == 1 and got[20] == 20 and got[30] == 30
 
-    # replay wrote nothing: every bucket's files unchanged by the
-    # redelivered batch (captured pre/post below on a fresh state)
-    def inodes():
-        return {
-            os.path.join(d, f): os.stat(os.path.join(labels_p, d, f)).st_ino
-            for d in os.listdir(labels_p)
-            if d.startswith("bucket=")
-            for f in os.listdir(os.path.join(labels_p, d))
-            if f.endswith(".parquet")
-        }
+    # replay rewrote nothing: the redelivered batch's changed set is
+    # empty, so its commit carries every file by reference
+    def files():
+        v = S.current_version(labels_p)
+        return {f["path"] for f in S._load_manifest(labels_p, v)["files"]}
 
-    before = inodes()
+    before = files()
     update_component_state(b2, labels_p, state_buckets=4)
-    assert inodes() == before
+    assert files() == before
 
 
 def test_corpus_ingest_maintains_component_state(spark, tmp_path):
@@ -1311,67 +1267,6 @@ def test_corpus_ingest_maintains_component_state(spark, tmp_path):
     # cluster membership is defined over the PAIR table (absent == own
     # implicit singleton)
     assert 11 not in labels
-
-
-def test_cdc_crash_mid_swap_replay_converges(spark, tmp_path):
-    """cdc_apply_table needs NO epoch fence: state rows keep their
-    winning _seq, so replaying a batch after a crash mid-swap ties
-    into the same values in already-swapped buckets and catches up the
-    stale ones. Injected kill at several swap points; every crash
-    leaves the table readable, replay converges, full redelivery is a
-    no-op."""
-    import shutil as real_shutil
-
-    import pytest
-
-    from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
-        read_cdc_snapshot,
-    )
-    from nba_data_pipeline_spark.sinks import writer as writer_mod
-
-    orig_move = real_shutil.move
-
-    class Boom(RuntimeError):
-        pass
-
-    for crash_at in (1, 2):
-        path = str(tmp_path / f"cdc{crash_at}")
-        log1 = spark.createDataFrame(
-            [(k, 1, "I", f"v{k}") for k in range(30)],
-            "k long, seq long, op string, val string",
-        )
-        cdc_apply_table(spark, log1, path, ["k"], "seq", n_buckets=8)
-        log2 = spark.createDataFrame(
-            [(k, 2, "D" if k % 5 == 0 else "U", f"w{k}") for k in range(30)],
-            "k long, seq long, op string, val string",
-        )
-        calls = {"n": 0}
-
-        def crashing_move(src, dst, _c=crash_at, _calls=calls):
-            _calls["n"] += 1
-            if _calls["n"] >= _c:
-                raise Boom("injected")
-            return orig_move(src, dst)
-
-        writer_mod.shutil.move = crashing_move
-        try:
-            with pytest.raises(Boom):
-                cdc_apply_table(spark, log2, path, ["k"], "seq", n_buckets=8)
-        finally:
-            writer_mod.shutil.move = orig_move
-        # readable mid-crash; every row is pre- or post-batch
-        snap = {r.k: r.val for r in read_cdc_snapshot(spark, path).collect()}
-        for k, v in snap.items():
-            assert v in (f"v{k}", f"w{k}")
-        # replay converges exactly; a second redelivery changes nothing
-        cdc_apply_table(spark, log2, path, ["k"], "seq", n_buckets=8)
-        want = {k: f"w{k}" for k in range(30) if k % 5 != 0}
-        got = {r.k: r.val for r in read_cdc_snapshot(spark, path).collect()}
-        assert got == want
-        cdc_apply_table(spark, log2, path, ["k"], "seq", n_buckets=8)
-        again = {r.k: r.val for r in read_cdc_snapshot(spark, path).collect()}
-        assert again == want
 
 
 def test_takedown_crash_mid_swap_replay_converges(spark, tmp_path):
@@ -1499,68 +1394,6 @@ def test_bucketed_merge_crash_between_leaf_renames_no_row_loss(spark, tmp_path):
         assert got == want, (crash_at, sorted(set(want) - set(got)))
 
 
-@pytest.mark.slow  # r17: >18s; deselected by the default profile (driver budget), still run via -m slow at round close
-def test_component_state_crash_mid_swap_replay_converges(spark, tmp_path):
-    """VERDICT r12 task #3: injected kill mid-upsert inside
-    update_component_state with state_buckets set — the replayed batch
-    must converge to the from-scratch labeling and the visible buckets
-    stay readable throughout. The batch's changed rows span every
-    bucket (the r12 lesson: otherwise the swap loop never reaches the
-    crash point)."""
-    import os as _os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from nba_data_pipeline_spark.operators.dedup import connected_components
-    from nba_data_pipeline_spark.sinks import writer as writer_mod
-    from nba_data_pipeline_spark.streaming.ops import update_component_state
-
-    class Boom(RuntimeError):
-        pass
-
-    orig_rename = _os.rename
-    # batch 1: 40 two-doc components; batch 2 bridges each pair (i, i+1)
-    # to (i+100, i+101) AND relabels — every doc's component changes, so
-    # the changed set hits all 4 buckets
-    b1 = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 80, 2)], "id_a long, id_b long"
-    )
-    b2 = spark.createDataFrame(
-        [(i + 1, (i + 2) % 80) for i in range(0, 80, 2)], "id_a long, id_b long"
-    )
-    want = {
-        r.doc_id: r.component_id
-        for r in connected_components(b1.unionByName(b2)).collect()
-    }
-    for crash_at in (2, 3, 5):
-        labels_p = str(tmp_path / f"labels{crash_at}")
-        update_component_state(b1, labels_p, state_buckets=4)
-        calls = {"n": 0}
-
-        def crashing_rename(src, dst, *a, _c=crash_at, _calls=calls, **kw):
-            _calls["n"] += 1
-            if _calls["n"] >= _c:
-                raise Boom(f"injected crash at rename #{_calls['n']}")
-            return orig_rename(src, dst, *a, **kw)
-
-        writer_mod.os.rename = crashing_rename
-        try:
-            with pytest.raises(Boom):
-                update_component_state(b2, labels_p, state_buckets=4)
-        finally:
-            writer_mod.os.rename = orig_rename
-        # mid-crash: every VISIBLE bucket dir still reads as parquet
-        assert spark.read.parquet(labels_p).count() > 0
-        # replay converges to the from-scratch labeling over b1 ∪ b2
-        update_component_state(b2, labels_p, state_buckets=4)
-        got = {
-            r.doc_id: r.component_id
-            for r in spark.read.parquet(labels_p).collect()
-        }
-        assert got == want, (crash_at, {k: (got.get(k), want[k]) for k in want if got.get(k) != want[k]})
-
-
 def test_rebuild_seen_bloom_after_total_takedown(spark, tmp_path):
     """ADVICE r12 #3: rebuild_seen_bloom after a takedown that emptied
     the corpus must not crash — the word table and its meta are removed
@@ -1610,13 +1443,12 @@ def test_rebuild_seen_bloom_after_total_takedown(spark, tmp_path):
 def test_legacy_state_tables_gain_layout_sidecar_on_merge(spark, tmp_path):
     """ADVICE r12 #4: a pre-sidecar state table (trusted on first use)
     must gain the bucket-modulus guard on its next successful MERGE —
-    not only on first create — for both fold and CDC state tables."""
+    not only on first create — for fold state tables."""
     import os as _os
 
     import pytest
 
     from nba_data_pipeline_spark.operators.incremental import (
-        cdc_apply_table,
         fold_aggregate_state_table,
     )
     from nba_data_pipeline_spark.sinks.writer import LAYOUT_META
@@ -1631,27 +1463,16 @@ def test_legacy_state_tables_gain_layout_sidecar_on_merge(spark, tmp_path):
     with pytest.raises(ValueError, match="bucket-count mismatch"):
         fold_aggregate_state_table(spark, b, fold_p, ["k"], specs, n_buckets=4)
 
-    cdc_p = str(tmp_path / "cdc")
-    ch = spark.createDataFrame(
-        [(i, i, "U", float(i)) for i in range(20)], "k long, seq long, op string, v double"
-    )
-    cdc_apply_table(spark, ch, cdc_p, ["k"], "seq", n_buckets=8)
-    _os.remove(_os.path.join(cdc_p, LAYOUT_META))
-    cdc_apply_table(spark, ch, cdc_p, ["k"], "seq", n_buckets=8)
-    assert _os.path.exists(_os.path.join(cdc_p, LAYOUT_META))
-    with pytest.raises(ValueError, match="bucket-count mismatch"):
-        cdc_apply_table(spark, ch, cdc_p, ["k"], "seq", n_buckets=4)
-
 
 def test_rebuild_component_labels_restores_live_representatives(spark, tmp_path):
     """VERDICT r12 task #5: after a takedown removes a component's
     min-id doc, incremental labels keep naming the departed id;
     rebuild_component_labels recomputes representatives from the live
     pair table — departed docs drop out of the labeling, surviving
-    components get a live min, and emptied buckets are cleaned up."""
-    import os as _os
-
+    components get a live min."""
     from pyspark.sql import functions as F
+
+    from nba_data_pipeline_spark.sinks import snapshot as S
 
     from nba_data_pipeline_spark.streaming.ops import (
         rebuild_component_labels,
@@ -1672,7 +1493,7 @@ def test_rebuild_component_labels_restores_live_representatives(spark, tmp_path)
     docs.write.parquet(corpus_p)
     pairs.withColumn("bucket", F.pmod(F.xxhash64("id_a", "id_b"), F.lit(4))).write.partitionBy("bucket").parquet(pairs_p)
     update_component_state(pairs, labels_p, state_buckets=4)
-    got = {r.doc_id: r.component_id for r in spark.read.parquet(labels_p).collect()}
+    got = {r.doc_id: r.component_id for r in _rs(spark, labels_p).collect()}
     assert got[2] == 1 and got[11] == 10
 
     # takedown doc 1 (component {1,2,3}'s min) and the whole {20,21}
@@ -1682,86 +1503,24 @@ def test_rebuild_component_labels_restores_live_representatives(spark, tmp_path)
         extra_id_tables={"components": (labels_p, "doc_id", ["bucket"])},
     )
     # incremental state keeps the departed representative (documented)
-    stale = {r.doc_id: r.component_id for r in spark.read.parquet(labels_p).collect()}
+    stale = {r.doc_id: r.component_id for r in _rs(spark, labels_p).collect()}
     assert stale[2] == 1  # 1 departed but still names the label
 
     rebuild_component_labels(spark, pairs_p, labels_p, state_buckets=4)
-    live = {r.doc_id: r.component_id for r in spark.read.parquet(labels_p).collect()}
+    live = {r.doc_id: r.component_id for r in _rs(spark, labels_p).collect()}
     assert set(live) == {2, 3, 10, 11}
     assert live[2] == 2 and live[3] == 2  # live min representative
     assert live[10] == 10 and live[11] == 10
-    # bucket layout preserved and guarded
-    assert any(n.startswith("bucket=") for n in _os.listdir(labels_p))
+    # bucket layout preserved and guarded: a rebuild owns the layout,
+    # so re-bucketing it pins the new modulus for incremental merges
+    assert S._load_manifest(labels_p, S.current_version(labels_p))["key"] == [
+        "bucket", "doc_id"
+    ]
     import pytest
 
+    rebuild_component_labels(spark, pairs_p, labels_p, state_buckets=8)
     with pytest.raises(ValueError, match="bucket-count mismatch"):
-        rebuild_component_labels(spark, pairs_p, labels_p, state_buckets=8)
-
-
-def test_takedown_filters_pending_component_journal(spark, tmp_path):
-    """A write-ahead journal surviving a crashed component-state merge
-    is part of the table's state: a takedown of docs present in the
-    journal must filter them out, or the next merge re-applies the
-    journal and silently resurrects the removed rows."""
-    import os as _os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from nba_data_pipeline_spark.sinks import writer as writer_mod
-    from nba_data_pipeline_spark.streaming.ops import (
-        takedown_batch,
-        update_component_state,
-    )
-
-    class Boom(RuntimeError):
-        pass
-
-    labels_p = str(tmp_path / "labels")
-    corpus_p = str(tmp_path / "corpus")
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(12)], "doc_id long, text string"
-    )
-    docs.write.parquet(corpus_p)
-    b1 = spark.createDataFrame([(0, 1), (2, 3), (4, 5)], "id_a long, id_b long")
-    b2 = spark.createDataFrame([(1, 2), (5, 6)], "id_a long, id_b long")
-    update_component_state(b1, labels_p, state_buckets=4)
-
-    orig_rename = _os.rename
-    calls = {"n": 0}
-
-    def crashing_rename(src, dst, *a, **kw):
-        # let the journal's own write-then-rename commit (first rename),
-        # then crash inside the bucket-swap loop
-        calls["n"] += 1
-        if calls["n"] >= 3:
-            raise Boom("boom")
-        return orig_rename(src, dst, *a, **kw)
-
-    writer_mod.os.rename = crashing_rename
-    try:
-        with pytest.raises(Boom):
-            update_component_state(b2, labels_p, state_buckets=4)
-    finally:
-        writer_mod.os.rename = orig_rename
-    assert _os.path.exists(_os.path.join(labels_p, "_changes_journal"))
-
-    # takedown doc 6 (present ONLY in the pending journal's delta) and
-    # doc 0 (in the committed table)
-    doomed = spark.createDataFrame([(0,), (6,)], "doc_id long")
-    takedown_batch(
-        doomed, corpus_p,
-        extra_id_tables={"components": (labels_p, "doc_id", ["bucket"])},
-    )
-    # recovery merge re-applies the filtered journal: doomed ids stay
-    # gone, everything else converges
-    update_component_state(
-        spark.createDataFrame([], "id_a long, id_b long"), labels_p, state_buckets=4
-    )
-    got = {r.doc_id for r in spark.read.parquet(labels_p).collect()}
-    assert 0 not in got and 6 not in got, got
-    assert {1, 2, 3, 4, 5}.issubset(got)
-    assert not _os.path.exists(_os.path.join(labels_p, "_changes_journal"))
+        update_component_state(pairs, labels_p, state_buckets=4)
 
 
 def test_ivf_ingest_two_batches_and_query(spark, tmp_path):

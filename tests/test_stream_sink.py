@@ -1,6 +1,6 @@
 from pyspark.sql import types as T
 
-from nba_data_pipeline_spark.sinks.writer import read_table
+from nba_data_pipeline_spark.sinks.store import detect_format, read_store
 from nba_data_pipeline_spark.streaming.sink import run_incremental_merge
 
 SCHEMA = T.StructType(
@@ -18,12 +18,13 @@ def test_streaming_incremental_merge(spark, tmp_path):
 
     spark.createDataFrame([("a", 1.0), ("b", 2.0)], SCHEMA).write.mode("append").parquet(src)
     run_incremental_merge(spark, src, SCHEMA, tgt, "id", checkpoint_dir=ckpt)
-    assert {r.id: r.v for r in read_table(spark, tgt).collect()} == {"a": 1.0, "b": 2.0}
+    assert {r.id: r.v for r in read_store(spark, tgt).collect()} == {"a": 1.0, "b": 2.0}
+    assert detect_format(tgt) == "snapshot"
 
     # new files land: only the delta is processed; key 'b' is updated
     spark.createDataFrame([("b", 20.0), ("c", 3.0)], SCHEMA).write.mode("append").parquet(src)
     run_incremental_merge(spark, src, SCHEMA, tgt, "id", checkpoint_dir=ckpt)
-    assert {r.id: r.v for r in read_table(spark, tgt).collect()} == {
+    assert {r.id: r.v for r in read_store(spark, tgt).collect()} == {
         "a": 1.0,
         "b": 20.0,
         "c": 3.0,
@@ -31,4 +32,4 @@ def test_streaming_incremental_merge(spark, tmp_path):
 
     # re-run with nothing new: no-op (checkpoint marks everything seen)
     run_incremental_merge(spark, src, SCHEMA, tgt, "id", checkpoint_dir=ckpt)
-    assert read_table(spark, tgt).count() == 3
+    assert read_store(spark, tgt).count() == 3

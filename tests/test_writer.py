@@ -1,7 +1,6 @@
 import os
 
 from nba_data_pipeline_spark.sinks.writer import (
-    insert_ignore_table,
     read_table,
     upsert_table,
     write_table,
@@ -36,12 +35,16 @@ def test_upsert_create_update_idempotent(spark, tmp_path):
 
 
 def test_insert_ignore_table(spark, tmp_path):
+    """ON CONFLICT DO NOTHING through the store: existing keys keep
+    their values, new keys land."""
+    from nba_data_pipeline_spark.sinks.store import insert_ignore_store, read_store
+
     path = str(tmp_path / "i")
-    insert_ignore_table(spark, spark.createDataFrame([("a", 1.0)], "id string, v double"), path, "id")
-    insert_ignore_table(
+    insert_ignore_store(spark, spark.createDataFrame([("a", 1.0)], "id string, v double"), path, "id")
+    insert_ignore_store(
         spark, spark.createDataFrame([("a", 99.0), ("b", 2.0)], "id string, v double"), path, "id"
     )
-    got = {r.id: r.v for r in read_table(spark, path).collect()}
+    got = {r.id: r.v for r in read_store(spark, path).collect()}
     assert got == {"a": 1.0, "b": 2.0}
 
 
@@ -86,70 +89,47 @@ def test_partition_scoped_upsert_touches_only_affected_dirs(spark, tmp_path):
 
 
 def test_partition_scoped_insert_ignore(spark, tmp_path):
+    """Insert-ignore into a key-sorted snapshot table rewrites only the
+    file whose key range the batch touches; the other season's file is
+    carried by reference."""
+    from nba_data_pipeline_spark.sinks import snapshot as S
+    from nba_data_pipeline_spark.sinks.store import insert_ignore_store, read_store
+
     path = str(tmp_path / "pi")
     base = spark.createDataFrame(
-        [("a-1", "2024-25", "Regular Season", 1.0)],
+        [("a-1", "2024-25", "Regular Season", 1.0),
+         ("b-1", "2023-24", "Regular Season", 5.0)],
         "id string, SEASON string, SEASON_TYPE string, v double",
     )
-    insert_ignore_table(spark, base, path, "id", partition_by=["SEASON", "SEASON_TYPE"])
+    S.write_snapshot(spark, base, path, key="id", target_files=2)
+    v1 = {f["path"] for f in S._load_manifest(path, 1)["files"]}
     src = spark.createDataFrame(
         [("a-1", "2024-25", "Regular Season", 99.0),  # conflict -> ignored
          ("a-3", "2024-25", "Regular Season", 3.0)],  # new row
         "id string, SEASON string, SEASON_TYPE string, v double",
     )
-    insert_ignore_table(spark, src, path, "id", partition_by=["SEASON", "SEASON_TYPE"])
-    got = {r.id: r.v for r in read_table(spark, path).collect()}
-    assert got == {"a-1": 1.0, "a-3": 3.0}
-
-
-def test_compact_table_partitioned(spark, tmp_path):
-    """Fragmented partitions collapse to ~ceil(rows/target) files;
-    healthy partitions are not rewritten (same file listing); data
-    survives byte-identically."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from nba_data_pipeline_spark.sinks.writer import compact_table, write_table
-
-    path = str(tmp_path / "tbl")
-    frag = spark.range(200).withColumn("part", F.lit("a")).repartition(25)
-    healthy = spark.range(200, 250).withColumn("part", F.lit("b")).coalesce(1)
-    write_table(frag, path, ["part"])
-    healthy.write.mode("append").partitionBy("part").parquet(path)
-
-    def files_in(part):
-        d = os.path.join(path, f"part={part}")
-        return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-
-    before_b = files_in("b")
-    assert len(files_in("a")) == 25
-    res = compact_table(spark, path, target_rows_per_file=100, partition_by=["part"])
-    assert res["partitions_compacted"] == 1 and res["files_before"] == 25
-    assert len(files_in("a")) <= 4  # ceil(200/100)=2 buckets, shuffle-task granularity
-    assert files_in("b") == before_b  # untouched on disk
-    back = spark.read.parquet(path)
-    assert back.count() == 250
-    assert back.agg(F.sum("id")).collect()[0][0] == sum(range(250))
-    # second run is a no-op
-    res2 = compact_table(spark, path, target_rows_per_file=100, partition_by=["part"])
-    assert res2["partitions_compacted"] == 0
+    insert_ignore_store(spark, src, path, "id")
+    got = {r.id: r.v for r in read_store(spark, path).collect()}
+    assert got == {"a-1": 1.0, "a-3": 3.0, "b-1": 5.0}
+    v2 = {f["path"] for f in S._load_manifest(path, S.current_version(path))["files"]}
+    assert len(v1) == 2 and len(v1 & v2) == 1
 
 
 def test_compact_table_unpartitioned(spark, tmp_path):
-    import os
-
+    """Small-file compaction (OPTIMIZE) of a fragmented snapshot table
+    to ceil(rows / target) files, rows unchanged."""
     from pyspark.sql import functions as F
 
-    from nba_data_pipeline_spark.sinks.writer import compact_table
+    from nba_data_pipeline_spark.sinks import snapshot as S
 
     path = str(tmp_path / "flat")
-    spark.range(300).repartition(30).write.parquet(path)
-    res = compact_table(spark, path, target_rows_per_file=150)
-    assert res == {"partitions_compacted": 1, "files_before": 30}
-    n_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_files == 2
-    assert spark.read.parquet(path).agg(F.sum("id")).collect()[0][0] == sum(range(300))
+    S.write_snapshot(spark, spark.range(300).withColumnRenamed("id", "k"), path,
+                     key="k", target_files=30)
+    assert len(S._load_manifest(path, 1)["files"]) == 30
+    S.compact_snapshot(spark, path, target_rows_per_file=150)
+    after = S._load_manifest(path, S.current_version(path))
+    assert after["op"] == "compact" and len(after["files"]) == 2
+    assert S.read_snapshot(spark, path).agg(F.sum("k")).collect()[0][0] == sum(range(300))
 
 
 def test_upsert_schema_evolution(spark, tmp_path):
@@ -206,31 +186,33 @@ def test_upsert_schema_evolution_partitioned(spark, tmp_path):
 
 
 def test_compact_preserves_evolved_schema(spark, tmp_path):
-    """Compacting a schema-evolved table must not drop the evolved
-    column from rewritten partitions (mergeSchema read inside
-    compact_table)."""
+    """Compacting a schema-evolved snapshot table must not drop the
+    evolved column from rewritten files (the manifest schema, not one
+    file's footer, drives the rewrite)."""
     from pyspark.sql import functions as F
 
-    from nba_data_pipeline_spark.sinks.writer import compact_table, upsert_table
+    from nba_data_pipeline_spark.sinks import snapshot as S
 
-    path = str(tmp_path / "evc")
+    root = str(tmp_path / "evc")
     v1 = spark.createDataFrame(
         [(i, "x", "a") for i in range(100)] + [(i, "y", "b") for i in range(100, 200)],
         "id long, v string, part string",
     )
-    upsert_table(spark, v1, path, key="id", partition_by=("part",))
-    # evolve partition a with an extra column, fragmenting it
-    v2 = spark.createDataFrame(
-        [(i, "x2", "a", i * 1.0) for i in range(50)],
-        "id long, v string, part string, score double",
-    )
-    upsert_table(spark, v2, path, key="id", partition_by=("part",))
-    frag = spark.read.option("mergeSchema", True).parquet(path)
-    assert frag.filter("score is not null").count() == 50
-    compact_table(spark, path, target_rows_per_file=1000, partition_by=["part"])
-    back = spark.read.option("mergeSchema", True).parquet(path)
+    S.write_snapshot(spark, v1, root, key="id", target_files=4)
+    # evolve half of part a with an extra column, fragmenting the table
+    for lo in (0, 25):
+        v2 = spark.createDataFrame(
+            [(i, "x2", "a", i * 1.0) for i in range(lo, lo + 25)],
+            "id long, v string, part string, score double",
+        )
+        S.upsert_snapshot(spark, v2, root, "id")
+    assert S.read_snapshot(spark, root).filter("score is not null").count() == 50
+    S.compact_snapshot(spark, root, target_rows_per_file=1000)
+    assert S._load_manifest(root, S.current_version(root))["op"] == "compact"
+    back = S.read_snapshot(spark, root)
     assert back.count() == 200
     assert back.filter("score is not null").count() == 50
+    assert back.agg(F.sum("id")).collect()[0][0] == sum(range(200))
 
 
 def test_write_training_shards_deterministic_and_balanced(spark, tmp_path):
@@ -424,25 +406,3 @@ def test_unpartitioned_rewrite_crash_between_renames_recovers(spark, tmp_path):
         upsert_table(spark, v2, path, "id")
         got = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
         assert got == want, (crash_at, got)
-
-
-def test_choose_state_buckets_encodes_measured_crossover():
-    """VERDICT r12 task #6: the measured bucket-sizing rule as code —
-    None below the 50M-row crossover, None when the batch defeats
-    pruning, otherwise a power of two that keeps ~1M rows per bucket
-    (the 1024-buckets-at-5M-rows anti-win must come out as None)."""
-    from nba_data_pipeline_spark.sinks.writer import choose_state_buckets
-
-    # below crossover: whole rewrite wins on fixed costs
-    assert choose_state_buckets(50_000) is None
-    assert choose_state_buckets(5_000_000) is None  # the measured anti-win scale
-    assert choose_state_buckets(49_999_999) is None
-    # past crossover: ~1M rows per bucket, power of two, floors at 64
-    assert choose_state_buckets(50_000_000) == 64
-    assert choose_state_buckets(300_000_000) == 256
-    assert choose_state_buckets(1_000_000_000) == 512  # >=1M rows/bucket
-    # cap: never more than 65536 dirs
-    assert choose_state_buckets(10**12) == 65536
-    # a batch comparable to history defeats pruning
-    assert choose_state_buckets(100_000_000, batch_rows=20_000_000) is None
-    assert choose_state_buckets(100_000_000, batch_rows=1_000) == 64

@@ -431,11 +431,17 @@ def _op_scale_table(ops, scales, runs, name_w: int, unit: str, ok_msg: str) -> i
 def _scaling(runs: int) -> int:
     """Quadratic-candidate dedup operators (winnowing, MinHash-LSH,
     SimHash, n-gram Jaccard) at sf0.01 (500 docs), sf0.1 (5,000) and a
-    synthetic 10x of sf0.1 (50,000; each copy's text is prefixed with a
-    copy token so shingles shift and the corpus does not degenerate
-    into 10-way exact duplicates). Bucketed candidate generation must
-    keep the top-scale slope <= ~1.3 (hot-bucket caps: _prune_hot_fps,
-    max_df_ratio, band star-caps)."""
+    synthetic 10x of sf0.1 (50,000). Copy c of each document has every
+    letter rotated c places (copy 0 is the original), so the sf0.1
+    word vocabulary maps to ten disjoint vocabularies: copies share no
+    word shingles and the 10x corpus holds ten independent corpora, not
+    near-duplicates of each other (expected pair growth ~10x).
+    Bucketed candidate generation must keep the top-scale slope <=
+    ~1.3 (hot-bucket caps: _prune_hot_fps, max_df_ratio, band
+    star-caps)."""
+    import string
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
     from nba_data_pipeline_spark.operators.dedup import (
@@ -449,17 +455,15 @@ def _scaling(runs: int) -> int:
     spark = _session("scaling_slope")
     small = spark.read.parquet(f"{DATA}/sf0.01/documents.parquet")
     mid = spark.read.parquet(f"{DATA}/sf0.1/documents.parquet")
-    copies = spark.range(10).select(F.col("id").alias("_copy"))
-    big = (
-        mid.crossJoin(F.broadcast(copies))
-        .withColumn("doc_id", F.col("doc_id") + F.col("_copy") * 1_000_000)
-        .withColumn(
-            "text",
-            F.concat(F.lit("copy"), F.col("_copy").cast("string"), F.lit(" "), F.col("text")),
-        )
-        .drop("_copy")
-        .localCheckpoint(eager=True)
-    )
+    abc = string.ascii_lowercase
+    big = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            mid.withColumn("doc_id", F.col("doc_id") + c * 1_000_000)
+            .withColumn("text", F.translate("text", abc, abc[c:] + abc[:c]))
+            for c in range(10)
+        ],
+    ).coalesce(mid.rdd.getNumPartitions()).localCheckpoint(eager=True)
     scales = [("sf0.01", small, 500), ("sf0.1", mid, 5000), ("sf0.1x10", big, 50000)]
 
     def op_ngram(_, d):
